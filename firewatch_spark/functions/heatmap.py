@@ -47,16 +47,6 @@ def surrogate_heatmap(seq: Column, cells: int = HEATMAP_CELLS) -> Column:
     return F.transform(raw, lambda x: x / mx)
 
 
-def surrogate_heatmap_sql(seq_expr: str, cells: int = HEATMAP_CELLS) -> str:
-    """DuckDB twin of :func:`surrogate_heatmap` (list_transform over
-    range) for oracle queries."""
-    raw = (
-        f"list_transform(range(0, {cells}), j -> "
-        f"((({seq_expr}) * {cells} + j) * {surrogate.KNUTH} % {surrogate.MOD}) / {surrogate.MOD}.0)"
-    )
-    return f"list_transform({raw}, x -> x / (list_max({raw}) + 1e-8))"
-
-
 def overlay_stats(
     heatmap: Column, alpha: float = DEFAULT_ALPHA, base_intensity: float = 128.0
 ) -> Column:

@@ -80,22 +80,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark
-
-
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, "object"]:
-    """Load every testdata table as a DataFrame keyed by name."""
-    return {t: spark.read.parquet(f"{sf_dir}/{t}.parquet") for t in TABLES}

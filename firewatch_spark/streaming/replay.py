@@ -1,24 +1,40 @@
-"""Spark-written micro-batch replay fixtures for the streaming parity
-harnesses.
+"""Bounded file-stream replays: the one harness every streaming twin
+runs on, plus the Spark-side chunk writer that feeds it.
 
-The round-2/3/4 harnesses built their file-source replay chunks by
-``toPandas()``-ing the whole input on the driver and slicing it — the
-last full-input driver materialization in the repo (VERDICT r4 "What's
-wrong" #1).  Here the chunks are written BY SPARK in one
-``repartitionByRange`` job; the driver only renames the part files.
-Driver memory is O(n_chunks), whatever the input size.
+`replay(spark, feed, shuffle_partitions)` contract:
 
-Chunking is by *value range* of the ordering column, not by row index
-as before.  The stateful operators only require that each key's frames
-arrive in non-decreasing order ACROSS micro-batches (within a batch
-they sort, session_state.py:115); non-overlapping increasing ranges
-guarantee that, so the replay output — and the driver's parity hash —
-is invariant to where the boundaries fall (RangePartitioner's sampled
-boundaries need not be deterministic for parity to hold).
+- **Scope.** It makes one ``fw_replay_*`` temp dir and sets
+  ``spark.sql.shuffle.partitions`` for the duration of the call.  On
+  return or raise, in ``finally``, it stops the query, restores the
+  prior shuffle-partition value and removes the temp dir, so a replay
+  leaks no running stream, no session conf, no catalog table and no
+  files.
+- **Feed.** ``feed(reader, tmp)`` is the caller's part: it writes its
+  input under ``tmp``, opens the stream from ``reader`` (a
+  ``readStream`` with ``maxFilesPerTrigger=1``, so each input file is
+  one micro-batch) with its own schema and format, applies any
+  streaming transform (a stateful operator, say), and returns
+  ``(stream, body)``.  ``body`` maps one micro-batch to its output
+  rows; a stateful twin passes the identity.  Names under ``tmp``
+  starting with ``_`` belong to the harness.
+- **Sink.** One path: ``foreachBatch``, where batch N overwrites its
+  own ``batch_id=N`` parquet dir, so a redelivered batch replaces its
+  rows instead of appending duplicates.
+- **Drain.** The query runs with ``availableNow`` and must terminate
+  within ``DRAIN_TIMEOUT_S``; otherwise `replay` raises
+  ``TimeoutError`` rather than return a truncated table.
+- **Result.** The union of batch outputs, read back and
+  ``localCheckpoint``-ed before the temp dir goes, without the
+  ``batch_id`` column.
 
-File order is what the FileStreamSource replays: it picks files by
-modification time, so mtimes are forced strictly increasing in chunk
-order rather than trusting write latency.
+`write_replay_chunks` writes the replay input: chunks by *value range*
+of an ordering column, written by one Spark job.  The stateful
+operators only require that each key's frames arrive in non-decreasing
+order ACROSS micro-batches (within a batch they sort); non-overlapping
+increasing ranges guarantee that, so the replay output is invariant to
+where the boundaries fall.  The FileStreamSource picks files by
+modification time, so the chunk mtimes are forced strictly increasing
+in chunk order.
 """
 
 from __future__ import annotations
@@ -26,9 +42,55 @@ from __future__ import annotations
 import glob
 import os
 import shutil
+import tempfile
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamReader
+
+DRAIN_TIMEOUT_S = 300
+_SHUFFLE = "spark.sql.shuffle.partitions"
+
+Body = Callable[[DataFrame], DataFrame]
+
+
+def replay(
+    spark: SparkSession,
+    feed: Callable[[DataStreamReader, str], tuple[DataFrame, Body]],
+    shuffle_partitions: int = 32,
+) -> DataFrame:
+    """Drain the stream `feed` opens through the one foreachBatch sink
+    and return its output, materialized (contract: module docstring).
+    `shuffle_partitions` bounds per-batch shuffle and state-store cost
+    on a vanilla 200-partition session."""
+    prior = spark.conf.get(_SHUFFLE)
+    tmp = tempfile.mkdtemp(prefix="fw_replay_")
+    sink = os.path.join(tmp, "_sink")
+    query = None
+    try:
+        spark.conf.set(_SHUFFLE, str(shuffle_partitions))
+        stream, body = feed(spark.readStream.option("maxFilesPerTrigger", 1), tmp)
+
+        def run_batch(batch_df: DataFrame, batch_id: int) -> None:
+            body(batch_df).write.mode("overwrite").parquet(
+                f"{sink}/batch_id={batch_id}"
+            )
+
+        query = (
+            stream.writeStream.foreachBatch(run_batch)
+            .option("checkpointLocation", os.path.join(tmp, "_checkpoint"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        if not query.awaitTermination(DRAIN_TIMEOUT_S):
+            raise TimeoutError(f"replay did not drain in {DRAIN_TIMEOUT_S}s")
+        return spark.read.parquet(sink).drop("batch_id").localCheckpoint()
+    finally:
+        if query is not None:
+            query.stop()
+        spark.conf.set(_SHUFFLE, prior)
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def write_replay_chunks(

@@ -109,8 +109,10 @@ def test_completion_stream_and_manifest_sink(spark, tmp_path):
 def test_completion_events_json_shape(spark, tmp_path):
     stream = _frame_stream(spark, tmp_path)
     predicted = pipeline.with_predictions(stream)
+    # NoTimeout: an armed processing-time timer keeps an availableNow
+    # query alive forever, so the drain would never finish
     comp = pipeline.completion_events_json(
-        pipeline.completion_events(predicted, gap=300)
+        pipeline.completion_events(predicted, gap=300, timeout_ms=None)
     )
     q = (
         comp.writeStream.format("memory")
@@ -120,7 +122,7 @@ def test_completion_events_json_shape(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120), "completion stream did not drain in 120s"
     out = rows(spark.sql("SELECT * FROM comp_events"))
     # the gap fixture closes at least one session during the stream
     assert out

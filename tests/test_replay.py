@@ -1,15 +1,17 @@
-"""Contract tests for the Spark-written replay-chunk fixture writer
-(streaming/replay.py) — the VERDICT-r4 #1 replacement for the driver
-``toPandas()`` slicing."""
+"""Contract tests for streaming/replay.py: the Spark-written
+replay-chunk writer and the `replay` harness every streaming twin runs
+on (drains, materializes, and leaks nothing on return or raise)."""
 
 from __future__ import annotations
 
 import glob
 import os
 
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.query import StreamingQuery
 
-from firewatch_spark.streaming.replay import write_replay_chunks
+from firewatch_spark.streaming.replay import replay, write_replay_chunks
 
 
 def _read_chunk(spark, path):
@@ -77,7 +79,7 @@ def test_empty_chunk_skipped_not_errored(spark, tmp_path):
     assert total == 50
 
 
-def test_session_output_invariant_to_chunk_count(spark, tmp_path):
+def test_session_output_invariant_to_chunk_count(spark):
     """The design claim replay.py rests on: the stateful session
     operator's output depends only on the frame SET, not on where the
     range boundaries fall — so RangePartitioner's sampled boundaries
@@ -102,38 +104,69 @@ def test_session_output_invariant_to_chunk_count(spark, tmp_path):
     )
     sentinel = spark.createDataFrame(sent, df.schema)
 
-    def run(n_chunks, sub):
-        tmp = str(tmp_path / sub)
-        write_replay_chunks(df, tmp, n_chunks=n_chunks, sentinel=sentinel)
-        stream = (
-            spark.readStream.schema(df.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(tmp)
-        )
-        out = sessionize_stream(stream, gap=gap, timeout_ms=None)
-        name = f"replay_inv_{sub}"
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        q.stop()
+    def run(n_chunks):
+        def feed(reader, tmp):
+            write_replay_chunks(df, f"{tmp}/in", n_chunks=n_chunks, sentinel=sentinel)
+            stream = reader.schema(df.schema).parquet(f"{tmp}/in")
+            return sessionize_stream(stream, gap=gap, timeout_ms=None), lambda b: b
+
+        out = replay(spark, feed, shuffle_partitions=4)
         return {
             (r["video_id"], r["session_id"]): (
                 r["total_frames"], r["fire_count"], r["max_fire_probability"],
                 r["first_seq"], r["last_seq"],
             )
-            for r in spark.sql(
-                f"SELECT * FROM {name} WHERE closed_by = 'gap'"
-            ).collect()
+            for r in out.where("closed_by = 'gap'").collect()
         }
 
-    one = run(1, "one")
-    four = run(4, "four")
+    one = run(1)
+    four = run(4)
     assert one == four
     assert len({k[0] for k in one}) == 2  # both keys closed sessions
     assert len(one) >= 5  # multiple sessions per key actually exercised
+
+
+def _counting_feed(spark, seen):
+    """30 frames in 3 chunks; each batch lands its per-key counts.
+    Records the harness temp dir and the conf the feed ran under."""
+
+    def feed(reader, tmp):
+        seen.append((tmp, spark.conf.get("spark.sql.shuffle.partitions")))
+        df = spark.range(0, 30).select(
+            F.col("id").alias("frame_number"), (F.col("id") % 3).alias("k")
+        )
+        write_replay_chunks(df, f"{tmp}/in", n_chunks=3)
+        stream = reader.schema("frame_number long, k long").parquet(f"{tmp}/in")
+        return stream, lambda b: b.groupBy("k").count()
+
+    return feed
+
+
+@pytest.mark.parametrize("timeout", [False, True], ids=["drained", "timeout"])
+def test_replay_leaks_nothing(spark, monkeypatch, timeout):
+    """Whether the drain completes or times out, the harness leaves no
+    new active stream, no new catalog table, the prior shuffle-partition
+    value, and no temp dir behind.  (Streams and tables are compared
+    with their state before the call: the session is shared with other
+    tests.)"""
+    if timeout:
+        monkeypatch.setattr(
+            StreamingQuery, "awaitTermination", lambda self, timeout=None: False
+        )
+    prior = spark.conf.get("spark.sql.shuffle.partitions")
+    streams = {q.id for q in spark.streams.active}
+    tables = {t.name for t in spark.catalog.listTables()}
+    seen = []
+    if timeout:
+        with pytest.raises(TimeoutError):
+            replay(spark, _counting_feed(spark, seen), shuffle_partitions=3)
+    else:
+        out = replay(spark, _counting_feed(spark, seen), shuffle_partitions=3)
+        assert out.columns == ["k", "count"]
+        assert out.agg(F.sum("count")).first()[0] == 30
+    [(tmp, scoped)] = seen
+    assert scoped == "3"
+    assert {q.id for q in spark.streams.active} == streams
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prior
+    assert not os.path.exists(tmp)
+    assert {t.name for t in spark.catalog.listTables()} == tables

@@ -395,6 +395,7 @@ def test_kafka_builders_are_lazy(spark):
     # no broker in the container: builders must not contact anything
     reader = kafka_src.frames_source(spark, "localhost:9092")
     assert reader is not None
+    assert kafka_src.completions_source(spark, "localhost:9092") is not None
     df = spark.createDataFrame([("v", "{}")], "video_id string, payload string")
     # writer construction is also lazy (start() would need a broker)
     from pyspark.sql import functions as F2
