@@ -167,7 +167,9 @@ def detection_events(predicted: DataFrame, deterministic_ts=None) -> DataFrame:
     )
 
 
-def completion_events(predicted: DataFrame, gap: int = 300, timeout_ms: int = 60_000) -> DataFrame:
+def completion_events(
+    predicted: DataFrame, gap: int = 300, timeout_ms: int | None = 60_000
+) -> DataFrame:
     """Output stream 2 (S9 payload): stateful session summaries.  Only
     the four small columns enter the shuffle."""
     slim = predicted.select("video_id", "frame_number", "has_fire", "fire_probability")

@@ -5,25 +5,27 @@ The reference holds per-video dicts in its consumer loop
 (streams/stream.py:105-121) and closes a session only when the next
 frame arrives with `frame_number - last_seen > gap`
 (streams/stream.py:340-349) or on shutdown (`_cleanup`, :427-442).
-Here the same state machine runs inside ``applyInPandasWithState``:
+`fold_sessions` is that state machine, once; both stateful operators
+(`sessionize_stream` here and `stateful_pipeline.fire_detection_stream`)
+run it inside ``applyInPandasWithState``:
 
 * key          = video_id — Spark shuffles each key's frames to one
   task, the distributed analog of the reference's per-key dicts;
-* state        = (session_seq, first_seq, last_seen, total, fires,
-  max_prob) — O(1) per key, NEVER buffers frames (100 TB safe);
-* output       = one completion row per CLOSED session (W3), emitted
-  when the gap rule fires (W2) or on state timeout — the streaming
-  analog of the reference's shutdown flush (W4).  Under
-  ``trigger(availableNow=True)`` the terminal batch fires pending
-  processing-time timeouts, so a drained bounded stream flushes every
-  open session (observed empirically) — matching `_cleanup`'s
-  finalize-all-on-exit behavior.
+* state        = (session_id, first_seq, last_seen, total, fires,
+  max_prob) — O(1) per key, NEVER buffers frames;
+* output       = one completion row per CLOSED session (W3), built by
+  `session_columns`, emitted when the gap rule fires (W2) or on state
+  timeout (W4, the analog of the reference's shutdown flush).
+
+The W4 flush needs a processing-time trigger: a query with an armed
+processing-time timer never terminates under ``availableNow``.  Bounded
+replays therefore run with ``timeout_ms=None`` (NoTimeout) and close
+every real session through the gap rule with a final sentinel frame
+per key past ``max_seq + gap``.
 
 The gap is in the **sequence-number domain**, not event time: exact
 parity with the reference, strict `>` boundary (a jump of exactly
-`gap` keeps the session).  A `session_window`-based variant would be
-the idiomatic-time alternative (SURVEY.md §2.5 W2 note); this operator
-exists precisely because the reference's domain is frame numbers.
+`gap` keeps the session).
 
 Out-of-order handling matches the reference: rows are processed in
 seq order *within* each micro-batch (sort), and `last_seen` is
@@ -36,6 +38,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 from typing import Any
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -75,91 +78,77 @@ STATE_SCHEMA = StructType(
 )
 
 
-def fold_session_batch(
-    video_id: str,
-    state_tuple: "tuple | None",
-    batch: pd.DataFrame,
+def fold_sessions(
+    state: "tuple | None",
+    seqs: np.ndarray,
+    has_fire: np.ndarray,
+    prob: np.ndarray,
     gap: int,
-) -> tuple[tuple, list[dict]]:
-    """THE W1–W3 per-batch state fold, shared by both arbitrary-state
-    APIs (`_session_fn` on applyInPandasWithState and
-    tws_session.GapSessionProcessor on transformWithStateInPandas) so
-    the session semantics exist exactly once.  ``state_tuple`` is the
-    (session_id, first_seq, last_seen, total, fires, max_prob) tuple or
-    None for an unseen key (W1); returns the updated tuple and the
-    completion rows closed by the gap rule (W2/W3) in batch order."""
-    if state_tuple is None:
-        sid, first, last, total, fires, maxp = 1, None, None, 0, 0, 0.0
-    else:
-        sid, first, last, total, fires, maxp = state_tuple
-
-    closed: list[dict] = []
-    batch = batch.sort_values("frame_number")
-    for row in batch.itertuples(index=False):
-        seq = int(row.frame_number)
+) -> tuple[tuple, np.ndarray, list[tuple]]:
+    """THE W1–W3 fold of one key's micro-batch.  ``state`` is the
+    STATE_SCHEMA tuple, or None for an unseen key (W1); ``seqs`` is
+    sorted.  Returns the new state, each row's session id, and the
+    state tuples of the sessions the gap rule closed (W2), in order."""
+    sid, first, last, total, fires, maxp = state or (1, None, None, 0, 0, 0.0)
+    sids = np.empty(len(seqs), dtype="int64")
+    closed: list[tuple] = []
+    for i, (seq, hf, p) in enumerate(zip(seqs.tolist(), has_fire.tolist(), prob.tolist())):
         if last is not None and seq - last > gap:  # W2: strict >
-            closed.append(
-                {
-                    "video_id": video_id,
-                    "session_id": sid,
-                    "total_frames": total,
-                    "fire_count": fires,
-                    "max_fire_probability": maxp,
-                    "first_seq": first,
-                    "last_seq": last,
-                    "closed_by": "gap",
-                }
-            )
+            closed.append((sid, first, last, total, fires, maxp))
             sid, first, total, fires, maxp = sid + 1, None, 0, 0, 0.0
         if first is None:
             first = seq
-        # reference overwrites last_seen unconditionally (stream.py:349)
-        # — late rows inside the gap are absorbed
-        last = seq
+        last = seq  # unconditional overwrite (stream.py:349)
         total += 1
-        if bool(row.has_fire):
+        if hf:
             fires += 1
-            maxp = max(maxp, float(row.fire_probability))
-    return (sid, first, last, total, fires, maxp), closed
+            maxp = max(maxp, p)
+        sids[i] = sid
+    return (sid, first, last, total, fires, maxp), sids, closed
 
 
-def _session_fn(gap: int, timeout_ms: int):
+def session_columns(video_id: str, closed: list[tuple], closed_by: str) -> dict:
+    """OUTPUT_SCHEMA columns of one completion row per STATE_SCHEMA
+    tuple in ``closed`` — the one place a closed session becomes a row."""
+    sid, first, last, total, fires, maxp = (list(c) for c in zip(*closed))
+    return {
+        "video_id": video_id,
+        "session_id": sid,
+        "total_frames": total,
+        "fire_count": fires,
+        "max_fire_probability": maxp,
+        "first_seq": first,
+        "last_seq": last,
+        "closed_by": closed_by,
+    }
+
+
+def _session_fn(gap: int, timeout_ms: "int | None"):
     def fn(
         key: tuple[Any, ...],
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
         video_id = key[0]
-        if state.hasTimedOut:
-            # W4 shutdown-flush analog: no frames for `timeout_ms` —
-            # finalize the open session exactly like _cleanup does.
-            (sid, first, last, total, fires, maxp) = state.get
+        if state.hasTimedOut:  # W4: no frames for `timeout_ms`
+            closed = [state.get]
             state.remove()
-            yield pd.DataFrame(
-                [
-                    {
-                        "video_id": video_id,
-                        "session_id": sid,
-                        "total_frames": total,
-                        "fire_count": fires,
-                        "max_fire_probability": maxp,
-                        "first_seq": first,
-                        "last_seq": last,
-                        "closed_by": "timeout",
-                    }
-                ]
-            )
+            yield pd.DataFrame(session_columns(video_id, closed, "timeout"))
             return
 
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        new_state, closed = fold_session_batch(
-            video_id, state.get if state.exists else None, batch, gap
+        batch = pd.concat(list(pdfs), ignore_index=True).sort_values("frame_number")
+        new_state, _, closed = fold_sessions(
+            state.get if state.exists else None,
+            batch["frame_number"].to_numpy("int64"),
+            batch["has_fire"].to_numpy(bool),
+            batch["fire_probability"].to_numpy("float64"),
+            gap,
         )
         state.update(new_state)
         if timeout_ms is not None:
             state.setTimeoutDuration(timeout_ms)
         if closed:
-            yield pd.DataFrame(closed)
+            yield pd.DataFrame(session_columns(video_id, closed, "gap"))
 
     return fn
 

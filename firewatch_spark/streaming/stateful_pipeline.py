@@ -9,7 +9,9 @@ batch; only state carries the cached prediction across batches.  The
 reference keeps both the inference-cadence counter and the
 last-prediction cache in the same per-video dicts
 (streams/stream.py:119-121,366-378); this operator holds the same six
-session fields plus (frame_counter, cached_has_fire, cached_prob).
+session fields plus (frame_counter, cached_has_fire, cached_prob), and
+folds sessions over the carried-forward predictions with
+``session_state.fold_sessions``, the fold `sessionize_stream` runs.
 
 The model is injected as a vectorized ``predict_fn(seq: ndarray) ->
 (has_fire, prob)`` and called ONLY on cadence-selected rows — the
@@ -40,6 +42,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from . import session_state as ss
+
 OUTPUT_SCHEMA = StructType(
     [
         StructField("row_type", StringType()),       # 'frame' | 'session'
@@ -48,25 +52,14 @@ OUTPUT_SCHEMA = StructType(
         StructField("is_inference", BooleanType()),
         StructField("has_fire", BooleanType()),
         StructField("fire_probability", DoubleType()),
-        StructField("session_id", LongType()),       # session rows
-        StructField("total_frames", LongType()),
-        StructField("fire_count", LongType()),
-        StructField("max_fire_probability", DoubleType()),
-        StructField("first_seq", LongType()),
-        StructField("last_seq", LongType()),
-        StructField("closed_by", StringType()),
     ]
+    # session_id on both row types; the rest on session rows
+    + ss.OUTPUT_SCHEMA.fields[1:]
 )
 
 STATE_SCHEMA = StructType(
-    [
-        StructField("session_id", LongType()),
-        StructField("first_seq", LongType()),
-        StructField("last_seen", LongType()),
-        StructField("total_frames", LongType()),
-        StructField("fire_count", LongType()),
-        StructField("max_fire_probability", DoubleType()),
-        # M6 cadence state (reference stream.py:119-121)
+    ss.STATE_SCHEMA.fields
+    + [  # M6 cadence state (reference stream.py:119-121)
         StructField("frame_counter", LongType()),
         StructField("cached_has_fire", BooleanType()),
         StructField("cached_prob", DoubleType()),
@@ -83,94 +76,77 @@ def surrogate_predict_fn(seq: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return hf, np.where(hf, raw, 0.0)
 
 
-def _session_row(video_id, sid, first, last, total, fires, maxp, closed_by):
-    return {
-        "row_type": "session", "video_id": video_id, "frame_number": None,
-        "is_inference": None, "has_fire": None, "fire_probability": None,
-        "session_id": sid, "total_frames": total, "fire_count": fires,
-        "max_fire_probability": maxp, "first_seq": first, "last_seq": last,
-        "closed_by": closed_by,
-    }
+def _rows(cols: dict) -> pd.DataFrame:
+    """An output frame of ``cols``; the OUTPUT_SCHEMA columns it lacks are null."""
+    return pd.DataFrame({**dict.fromkeys(OUTPUT_SCHEMA.names), **cols})
 
 
-def _pipeline_fn(gap: int, every_n: int, timeout_ms: int, predict_fn: Callable):
+def _sessions(video_id: str, closed: list[tuple], closed_by: str) -> dict:
+    return {"row_type": "session", **ss.session_columns(video_id, closed, closed_by)}
+
+
+def _pipeline_fn(gap: int, every_n: int, timeout_ms: "int | None", predict_fn: Callable):
     def fn(
         key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         video_id = key[0]
         if state.hasTimedOut:
-            (sid, first, last, total, fires, maxp, *_rest) = state.get
+            closed = [state.get[:6]]
             state.remove()
-            yield pd.DataFrame(
-                [_session_row(video_id, sid, first, last, total, fires, maxp, "timeout")]
-            )
+            yield _rows(_sessions(video_id, closed, "timeout"))
             return
 
         if state.exists:
-            (sid, first, last, total, fires, maxp, ctr, c_hf, c_prob) = state.get
-        else:  # W1 — fresh key
-            sid, first, last, total, fires, maxp = 1, None, None, 0, 0, 0.0
-            ctr, c_hf, c_prob = 0, None, None
+            *session, ctr, c_hf, c_prob = state.get
+        else:  # W1 — fresh key; its first row is an inference row
+            session, ctr, c_hf, c_prob = None, 0, False, 0.0
 
-        batch = pd.concat(list(pdfs), ignore_index=True).sort_values("frame_number")
-        seqs = batch["frame_number"].to_numpy(dtype="int64")
+        batch = pd.concat(list(pdfs), ignore_index=True)
+        seqs = np.sort(batch["frame_number"].to_numpy("int64"))
+        n = len(seqs)
 
         # M6 cadence: inference iff (per-key running counter) % N == 0;
         # the counter continues ACROSS micro-batches via state.
-        ordinals = ctr + np.arange(len(seqs), dtype="int64")
-        is_inf = (ordinals % every_n) == 0
+        is_inf = (ctr + np.arange(n)) % every_n == 0
 
-        # one vectorized model call per (key, batch), inference rows only
-        hf = np.zeros(len(seqs), dtype=bool)
-        prob = np.zeros(len(seqs), dtype="float64")
+        # one vectorized model call per (key, batch), inference rows
+        # only; slot 0 holds the cached prediction from earlier batches
+        hf = np.empty(n + 1, dtype=bool)
+        prob = np.empty(n + 1, dtype="float64")
+        hf[0], prob[0] = c_hf, c_prob
         if is_inf.any():
-            hf_i, prob_i = predict_fn(seqs[is_inf])
-            hf[is_inf], prob[is_inf] = hf_i, prob_i
+            hf[1:][is_inf], prob[1:][is_inf] = predict_fn(seqs[is_inf])
+        # carry-forward: each row reads the latest inference at or before it
+        src = np.maximum.accumulate(np.where(is_inf, np.arange(1, n + 1), 0))
+        hf, prob = hf[src], prob[src]
 
-        out: list[dict] = []
-        for i, seq in enumerate(map(int, seqs)):
-            if last is not None and seq - last > gap:  # W2 strict >
-                out.append(
-                    _session_row(video_id, sid, first, last, total, fires, maxp, "gap")
-                )
-                sid, first, total, fires, maxp = sid + 1, None, 0, 0, 0.0
-                # NOTE: the reference does NOT reset the cadence counter
-                # or prediction cache on session close (they live beside
-                # the session dicts, stream.py:119-121) — neither do we.
-            if is_inf[i]:
-                c_hf, c_prob = bool(hf[i]), float(prob[i])
-            row_hf = bool(c_hf) if c_hf is not None else False
-            row_prob = float(c_prob) if c_prob is not None else 0.0
-            if first is None:
-                first = seq
-            last = seq
-            total += 1
-            if row_hf:
-                fires += 1
-                maxp = max(maxp, row_prob)
-            out.append(
-                {
-                    "row_type": "frame", "video_id": video_id,
-                    "frame_number": seq, "is_inference": bool(is_inf[i]),
-                    "has_fire": row_hf, "fire_probability": row_prob,
-                    "session_id": sid, "total_frames": None,
-                    "fire_count": None, "max_fire_probability": None,
-                    "first_seq": None, "last_seq": None, "closed_by": None,
-                }
-            )
-        ctr += len(seqs)
-
-        state.update((sid, first, last, total, fires, maxp, ctr, c_hf, c_prob))
+        # the reference keeps the cadence counter and prediction cache
+        # across session closes (stream.py:119-121), so the fold sees
+        # the carried-forward values
+        session, sids, closed = ss.fold_sessions(session, seqs, hf, prob, gap)
+        state.update((*session, ctr + n, bool(hf[-1]), float(prob[-1])))
         if timeout_ms is not None:
             state.setTimeoutDuration(timeout_ms)
-        yield pd.DataFrame(out)
+
+        frames = {
+            "row_type": "frame", "video_id": video_id, "frame_number": seqs,
+            "is_inference": is_inf, "has_fire": hf, "fire_probability": prob,
+            "session_id": sids,
+        }
+        if closed:  # concat fills each row type's missing columns with nulls
+            yield pd.concat(
+                [pd.DataFrame(frames), pd.DataFrame(_sessions(video_id, closed, "gap"))],
+                ignore_index=True,
+            )
+        else:
+            yield _rows(frames)
 
     return fn
 
 
 def fire_detection_stream(
     frames: DataFrame,
-    gap: int = 300,
+    gap: int = ss.DEFAULT_GAP,
     inference_every_n: int = 1,
     timeout_ms: "int | None" = 60_000,
     predict_fn: Callable = surrogate_predict_fn,

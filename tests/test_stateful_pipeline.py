@@ -5,54 +5,47 @@ from pyspark.sql import functions as F
 
 from firewatch_spark import surrogate
 from firewatch_spark.operators.cadence import with_inference_cadence
+from firewatch_spark.streaming.replay import replay
 from firewatch_spark.streaming.stateful_pipeline import fire_detection_stream
 from tests.conftest import rows
 
 
-def _run(spark, tmp_path, pdf, every_n, n_files):
+def _run(spark, pdf, every_n, n_files):
+    """Replay `pdf` split into `n_files` row chunks, one micro-batch each."""
     import os
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    data_dir = tmp_path / "in"
-    data_dir.mkdir()
-    per = (len(pdf) + n_files - 1) // n_files
-    written = []
-    for i in range(n_files):
-        chunk = pdf.iloc[i * per : (i + 1) * per]
-        if not chunk.empty:
-            path = str(data_dir / f"c_{i:03d}.parquet")
-            pq.write_table(pa.Table.from_pandas(chunk), path)
-            written.append(path)
-    # the FileStreamSource replays in modification-time order and the
-    # chunks are written within one clock tick — force strictly
-    # increasing mtimes or a tie can reorder micro-batches (observed
-    # as a rare cadence flake under full-suite CPU load)
-    base = int(os.path.getmtime(written[0]))
-    for i, p in enumerate(written):
-        os.utime(p, (base + i, base + i))
-    stream = (
-        spark.readStream.schema("video_id string, frame_number long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(data_dir))
-    )
-    # NoTimeout: availableNow never terminates with an armed
-    # processing-time timer; these tests only assert gap/frame rows
-    out = fire_detection_stream(
-        stream, gap=300, inference_every_n=every_n, timeout_ms=None
-    )
-    name = f"ep2_{abs(hash(str(tmp_path))) % 10_000_000}"
-    q = (
-        out.writeStream.format("memory").queryName(name).outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True).start()
-    )
-    assert q.awaitTermination(120), "bounded replay did not drain in 120s"
-    return spark.sql(f"SELECT * FROM {name}")
+    def feed(reader, tmp):
+        data_dir = os.path.join(tmp, "in")
+        os.mkdir(data_dir)
+        per = (len(pdf) + n_files - 1) // n_files
+        written = []
+        for i in range(n_files):
+            chunk = pdf.iloc[i * per : (i + 1) * per]
+            if not chunk.empty:
+                path = os.path.join(data_dir, f"c_{i:03d}.parquet")
+                pq.write_table(pa.Table.from_pandas(chunk), path)
+                written.append(path)
+        # the FileStreamSource replays in modification-time order and the
+        # chunks are written within one clock tick — force strictly
+        # increasing mtimes or a tie can reorder micro-batches
+        base = int(os.path.getmtime(written[0]))
+        for i, p in enumerate(written):
+            os.utime(p, (base + i, base + i))
+        stream = reader.schema("video_id string, frame_number long").parquet(data_dir)
+        # NoTimeout: availableNow never terminates with an armed
+        # processing-time timer; these tests only assert gap/frame rows
+        out = fire_detection_stream(
+            stream, gap=300, inference_every_n=every_n, timeout_ms=None
+        )
+        return out, lambda b: b
+
+    return replay(spark, feed)
 
 
-def test_cadence_counter_survives_batch_boundary(spark, tmp_path):
+def test_cadence_counter_survives_batch_boundary(spark):
     """Frames split 7/7 across two micro-batches with N=3: the batch
     boundary falls mid-cadence; inference positions must be the global
     1,4,7,10,13 — not restart at the boundary."""
@@ -60,7 +53,7 @@ def test_cadence_counter_survives_batch_boundary(spark, tmp_path):
 
     pdf = pd.DataFrame({"video_id": ["v"] * 14, "frame_number": range(14)})
     out = rows(
-        _run(spark, tmp_path, pdf, every_n=3, n_files=2).filter(
+        _run(spark, pdf, every_n=3, n_files=2).filter(
             F.col("row_type") == "frame"
         ),
         "frame_number",
@@ -86,14 +79,14 @@ def test_cadence_counter_survives_batch_boundary(spark, tmp_path):
         assert got["fire_probability"] == exp["fire_probability"], got["frame_number"]
 
 
-def test_locf_prediction_carried_across_batches(spark, tmp_path):
+def test_locf_prediction_carried_across_batches(spark):
     """N larger than the first batch: every row of batch 2 before the
     next inference point must reuse batch 1's cached prediction."""
     import pandas as pd
 
     pdf = pd.DataFrame({"video_id": ["v"] * 6, "frame_number": range(6)})
     out = rows(
-        _run(spark, tmp_path, pdf, every_n=5, n_files=3).filter(
+        _run(spark, pdf, every_n=5, n_files=3).filter(
             F.col("row_type") == "frame"
         ),
         "frame_number",
@@ -105,14 +98,14 @@ def test_locf_prediction_carried_across_batches(spark, tmp_path):
     assert all(r["fire_probability"] == p0 for r in out[1:5])
 
 
-def test_frame_and_session_rows_consistent(spark, tmp_path):
+def test_frame_and_session_rows_consistent(spark):
     """Session rows must aggregate exactly the LOCF-filled frame rows
     (the reference counts stats AFTER cadence reuse, stream.py:380-386)."""
     import pandas as pd
 
     seqs = list(range(10)) + [400 + i for i in range(5)]  # gap closes session 1
     pdf = pd.DataFrame({"video_id": ["v"] * len(seqs), "frame_number": seqs})
-    df = _run(spark, tmp_path, pdf, every_n=2, n_files=2)
+    df = _run(spark, pdf, every_n=2, n_files=2)
     frames = rows(df.filter(F.col("row_type") == "frame"), "frame_number")
     sessions = rows(df.filter(F.col("row_type") == "session"), "session_id")
     s1 = sessions[0]

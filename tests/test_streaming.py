@@ -4,7 +4,6 @@ plumbing."""
 
 import time
 
-import pytest
 from pyspark.sql import functions as F
 
 from firewatch_spark import surrogate
@@ -95,68 +94,49 @@ def test_streaming_gap_sessions_match_batch(spark, tmp_path):
             assert got[col] == exp[col], (k, col, got[col], exp[col])
 
 
-def test_tws_processor_state_machine_matches_old_api_fn(spark):
-    """The transformWithState processor (streaming/tws_session.py) and
-    the applyInPandasWithState function share one state machine — drive
-    BOTH directly with a fake state handle over the same multi-batch
-    frame sequences (including a cross-batch gap and an in-batch
-    out-of-order row) and require identical emissions and final state.
-    This seam test needs no TWS protocol, so it runs in this container
-    (the live-query twin below skips on the missing protobuf)."""
+class _FakeGroupState:
+    """GroupState stand-in: the calls both stateful operators make."""
+
+    def __init__(self):
+        self.v, self.hasTimedOut, self.timeout_ms = None, False, None
+
+    @property
+    def exists(self):
+        return self.v is not None
+
+    @property
+    def get(self):
+        return self.v
+
+    def update(self, v):
+        self.v = tuple(v)
+
+    def remove(self):
+        self.v = None
+
+    def setTimeoutDuration(self, ms):
+        self.timeout_ms = ms
+
+
+def test_both_operators_share_one_session_fold():
+    """`_session_fn` and `_pipeline_fn` (with every frame inferred and a
+    model that returns the fixture's predictions) run the same session
+    fold: over a cross-batch gap, an in-batch out-of-order row and a
+    jump of exactly `gap`, they emit the same gap-closed row and hold
+    the same six session fields; a timeout then flushes the open
+    session from state (W4) and removes it.  No Spark needed."""
     import pandas as pd
 
     from firewatch_spark.streaming import session_state as ss
-    from firewatch_spark.streaming.tws_session import GapSessionProcessor
+    from firewatch_spark.streaming import stateful_pipeline as sp
 
-    class FakeValueState:
-        def __init__(self):
-            self.v = None
-
-        def exists(self):
-            return self.v is not None
-
-        def get(self):
-            return self.v
-
-        def update(self, v):
-            self.v = v
-
-        def clear(self):
-            self.v = None
-
-    class FakeHandle:
-        def __init__(self):
-            self.state = FakeValueState()
-
-        def getValueState(self, name, schema, ttlDurationMs=None):
-            return self.state
-
-    class FakeGroupState:
-        def __init__(self):
-            self.v = None
-            self.hasTimedOut = False
-
-        @property
-        def exists(self):
-            return self.v is not None
-
-        @property
-        def get(self):
-            return self.v
-
-        def update(self, v):
-            self.v = v
-
-        def remove(self):
-            self.v = None
-
-    gap = 10
+    gap, timeout_ms = 10, 1_000
     batches = [
-        pd.DataFrame(
+        pd.DataFrame(  # frame 1 arrives after 3: sorted within the batch
             {"frame_number": [3, 1, 2], "has_fire": [True, False, True],
              "fire_probability": [0.9, 0.0, 0.6]}
         ),
-        pd.DataFrame(  # 2 -> 20 jumps the gap: session 1 closes
+        pd.DataFrame(  # 3 -> 20 jumps the gap: session 1 closes
             {"frame_number": [20, 21], "has_fire": [False, True],
              "fire_probability": [0.0, 0.7]}
         ),
@@ -165,106 +145,49 @@ def test_tws_processor_state_machine_matches_old_api_fn(spark):
              "fire_probability": [0.0]}
         ),
     ]
+    truth = pd.concat(batches).set_index("frame_number")
 
-    proc = GapSessionProcessor(gap)
-    handle = FakeHandle()
-    proc.init(handle)
-    tws_out = []
+    def predict_fn(seq):
+        return (truth.loc[seq, "has_fire"].to_numpy(bool),
+                truth.loc[seq, "fire_probability"].to_numpy(float))
+
+    def drive(fn, state, frames):
+        return [r for pdf in fn(("vid",), iter([frames]), state)
+                for r in pdf.to_dict("records")]
+
+    session_fn, session_gs = ss._session_fn(gap, timeout_ms), _FakeGroupState()
+    pipeline_fn = sp._pipeline_fn(gap, 1, timeout_ms, predict_fn)
+    pipeline_gs = _FakeGroupState()
+    session_out, pipeline_out = [], []
     for b in batches:
-        tws_out.extend(
-            r for pdf in proc.handleInputRows(("vid",), iter([b.copy()]), None)
-            for r in pdf.to_dict("records")
-        )
+        session_out += drive(session_fn, session_gs, b.copy())
+        pipeline_out += drive(pipeline_fn, pipeline_gs, b[["frame_number"]].copy())
 
-    old_fn = ss._session_fn(gap, timeout_ms=None)
-    gs = FakeGroupState()
-    old_out = []
-    for b in batches:
-        old_out.extend(
-            r for pdf in old_fn(("vid",), iter([b.copy()]), gs)
-            for r in pdf.to_dict("records")
-        )
+    def sessions(out):
+        return [{c: r[c] for c in ss.OUTPUT_SCHEMA.names}
+                for r in out if r.get("row_type", "session") == "session"]
 
-    assert tws_out == old_out
-    assert len(tws_out) == 1 and tws_out[0]["closed_by"] == "gap"
-    assert tws_out[0]["total_frames"] == 3 and tws_out[0]["fire_count"] == 2
-    assert tws_out[0]["max_fire_probability"] == 0.9
-    assert tuple(handle.state.v) == gs.v  # identical open-session state
+    closed = {"video_id": "vid", "session_id": 1, "total_frames": 3,
+              "fire_count": 2, "max_fire_probability": 0.9, "first_seq": 1,
+              "last_seq": 3, "closed_by": "gap"}
+    assert sessions(session_out) == sessions(pipeline_out) == [closed]
+    frames = [r for r in pipeline_out if r["row_type"] == "frame"]
+    assert [(r["frame_number"], r["session_id"]) for r in frames] == [
+        (1, 1), (2, 1), (3, 1), (20, 2), (21, 2), (31, 2)
+    ]
+    open_session = (2, 20, 31, 3, 1, 0.7)
+    assert session_gs.v == pipeline_gs.v[:6] == open_session
+    assert session_gs.timeout_ms == pipeline_gs.timeout_ms == timeout_ms
 
-
-def test_transform_with_state_matches_old_api_and_batch(spark, tmp_path):
-    """The Spark-4 transformWithStateInPandas twin (streaming/
-    tws_session.py) must emit row-identical gap-closed sessions to BOTH
-    the applyInPandasWithState operator and the batch sessionizer —
-    same fixture, three independent implementations, one answer."""
-    from firewatch_spark.streaming.tws_session import (
-        HAVE_TWS_PROTO,
-        ROCKSDB_PROVIDER,
-        sessionize_stream_tws,
-    )
-
-    if not HAVE_TWS_PROTO:
-        pytest.skip(
-            "transformWithState's Python state protocol needs protobuf, "
-            "absent in this container (tws_session.py CONTAINER GATE); "
-            "the state machine is pinned by the fake-handle seam test"
-        )
-
-    data_dir = str(tmp_path / "tws_in")
-    frames_src.write_frame_stream_dir(spark, data_dir, n_files=4)
-    stream = (
-        spark.readStream.schema(frames_src.FRAME_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(data_dir)
-    )
-    out = sessionize_stream_tws(_with_pred(stream), gap=GAP)
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    prior = spark.conf.get(prov_key, None)
-    spark.conf.set(prov_key, ROCKSDB_PROVIDER)
-    try:
-        query = (
-            out.writeStream.format("memory")
-            .queryName("tws_sessions_out")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "tws_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination(120)
-    finally:
-        if prior is None:
-            spark.conf.unset(prov_key)
-        else:
-            spark.conf.set(prov_key, prior)
-    tws = {
-        (r["video_id"], r["session_id"]): r
-        for r in rows(spark.sql("SELECT * FROM tws_sessions_out"))
-        if r["closed_by"] == "gap"
-    }
-
-    batch = _with_pred(frames_src.synthetic_frames(spark))
-    bsess = with_session_id(batch, "video_id", "frame_number", gap=GAP)
-    bstats = {
-        (r["video_id"], r["session_id"]): r
-        for r in rows(session_stats(bsess, "video_id", "frame_number"))
-    }
-    last_per_key = {}
-    for vid, sid in bstats:
-        last_per_key[vid] = max(last_per_key.get(vid, 0), sid)
-    expected_closed = {
-        k: v for k, v in bstats.items() if k[1] < last_per_key[k[0]]
-    }
-    assert set(tws) == set(expected_closed) and expected_closed
-    for k, exp in expected_closed.items():
-        got = tws[k]
-        for col in (
-            "total_frames",
-            "fire_count",
-            "max_fire_probability",
-            "first_seq",
-            "last_seq",
-        ):
-            assert got[col] == exp[col], (k, col, got[col], exp[col])
+    for fn, gs in ((session_fn, session_gs), (pipeline_fn, pipeline_gs)):
+        gs.hasTimedOut = True
+        (row,) = sessions(drive(fn, gs, pd.DataFrame()))
+        assert row == {
+            "video_id": "vid", "session_id": 2, "total_frames": 3,
+            "fire_count": 1, "max_fire_probability": 0.7, "first_seq": 20,
+            "last_seq": 31, "closed_by": "timeout",
+        }
+        assert not gs.exists
 
 
 def test_streaming_timeout_flushes_open_sessions(spark, tmp_path):
