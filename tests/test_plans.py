@@ -39,97 +39,9 @@ def _plan(spark, name: str) -> str:
 
 
 @pytest.fixture(scope="module")
-def built(spark):
-    """Build every non-SKIP query's DataFrame under a per-query job
-    group, capturing (a) the executed plan string and (b) whether ANY
-    Spark job ran DURING the build — the signal that a sink-only bench
-    clock would under-measure the query (the round-8 host_pagerank
-    lesson: its per-round checkpoints made the timed sink read 0.04 s
-    for 5 rounds of PageRank)."""
-    sc = spark.sparkContext
-    plans, n_jobs = {}, {}
-    for name in registry():
-        if name in SKIP:
-            continue
-        group = f"fw-build-{name}"
-        sc.setJobGroup(group, name)
-        try:
-            plans[name] = _plan(spark, name)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        n_jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group) or [])
-    return plans, n_jobs
-
-
-@pytest.fixture(scope="module")
-def plans(built):
-    return built[0]
-
-
-def test_build_time_work_is_declared_build_timed(built):
-    """Machine form of the bench build-timed audit (the round-8
-    host_pagerank lesson): a query running SUBSTANTIAL Spark work while
-    its DataFrame is BUILT must be in bench.BUILD_TIMED, or its bench
-    row times only the final sink read.  Threshold 5 jobs: every plain
-    query runs 1-4 benign parquet footer/listing jobs on first table
-    read (measured: max 4, revenue_by_nation's four tables), while the
-    real in-build workers (checkpointing iterations, in-build writes,
-    stop probes) run 5-57.  This sweep caught bpe_apply_trained (24
-    in-build jobs, sink-only timed through r7).  The converse is not
-    asserted: BUILD_TIMED also lists streaming queries this plan-only
-    sweep never builds."""
-    import bench
-
-    _, n_jobs = built
-    undeclared = sorted(
-        n for n, c in n_jobs.items() if c >= 5 and n not in bench.BUILD_TIMED
-    )
-    assert not undeclared, (
-        f"queries doing substantial in-build Spark work but not in "
-        f"bench.BUILD_TIMED: {undeclared}"
-    )
-
-
-def test_checkpointing_queries_are_build_timed(built):
-    """VERDICT r13 #4: the >= 5-job threshold above has a hole — a
-    checkpoint that runs UNDER 5 in-build jobs falls off the clock
-    silently (three r13 queries were declared manually for exactly
-    this).  Structural form: a `Scan ExistingRDD` leaf in the FINAL
-    executed plan means some prefix of the query's lineage was
-    materialized while the DataFrame was BUILT (localCheckpoint /
-    checkpoint — eager or AQE-forced lazy), so a sink-only clock would
-    miss that work regardless of job count.  Every such query must be
-    in bench.BUILD_TIMED."""
-    import bench
-
-    plans, _ = built
-    undeclared = sorted(
-        n
-        for n, p in plans.items()
-        if "Scan ExistingRDD" in p and n not in bench.BUILD_TIMED
-    )
-    assert not undeclared, (
-        "queries whose final plan reads an in-build-materialized RDD "
-        f"(Scan ExistingRDD) but are not in bench.BUILD_TIMED: {undeclared}"
-    )
-
-
-def test_existing_rdd_signal_catches_sub_threshold_checkpoint(spark):
-    """Red-green witness for the structural guard above: a trivial
-    localCheckpoint runs far fewer than 5 in-build jobs (under the
-    job-count guard's radar) yet its plan carries the Scan ExistingRDD
-    leaf the structural guard keys on."""
-    sc = spark.sparkContext
-    group = "fw-synthetic-ckpt"
-    sc.setJobGroup(group, group)
-    try:
-        df = spark.range(8).localCheckpoint()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group) or [])
-    assert n_jobs < 5  # invisible to the job-count threshold
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Scan ExistingRDD" in plan  # visible to the structural guard
+def plans(spark):
+    """The executed plan string of every non-SKIP query."""
+    return {name: _plan(spark, name) for name in registry() if name not in SKIP}
 
 
 def test_forced_broadcasts_have_bounded_build_sides():

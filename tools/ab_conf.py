@@ -3,8 +3,11 @@
     python tools/ab_conf.py --conf KEY=VA,VB [--reps N] q1 q2 ...
 
 For each query, alternates VA/VB per rep inside ONE warmed session —
-same JVM, same weather — and reports per-side mins.  Only valid for
-runtime-settable confs (AQE knobs are).
+same JVM, same weather — and reports per-side mins.  Each rep is
+bench.py's per-query clock (build + plan + noop-sink execute).  Only
+valid for runtime-settable SQL confs (AQE knobs are); the package's
+environment knobs are read once at session start, so flipping them
+mid-session would change nothing.
 """
 
 from __future__ import annotations
@@ -13,11 +16,10 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import BUILD_TIMED  # noqa: E402
+from bench import run_query, warm_up  # noqa: E402
 
 
 def main() -> None:
@@ -32,9 +34,6 @@ def main() -> None:
 
     key, vals = args.conf.split("=", 1)
     va, vb = vals.split(",", 1)
-    # "env:NAME=VA,VB" flips a process env var instead of a SQL conf —
-    # for knobs the operators read per call (e.g. SPARK_GRAFT_FANOUT_BYTES)
-    env_key = key[4:] if key.startswith("env:") else None
 
     os.environ.setdefault(
         "PYSPARK_SUBMIT_ARGS", "--driver-memory 24g pyspark-shell"
@@ -44,29 +43,7 @@ def main() -> None:
 
     spark = get_spark("firewatch-ab-conf")
     reg = registry()
-
-    reg["completion_stats"].fn(spark, args.sf).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    spark.range(0, 64, 1, 64).mapInPandas(lambda it: it, "id long").write.format(
-        "noop"
-    ).mode("overwrite").save()
-    if any(q.startswith("streaming_") for q in args.queries):
-        reg["streaming_session_parity"].fn(
-            spark, "/root/testdata/sf0.001"
-        ).write.format("noop").mode("overwrite").save()
-
-    def run(name: str) -> float:
-        spark.sparkContext.setJobDescription(f"ab_conf: {name}")
-        if name in BUILD_TIMED:
-            t0 = time.perf_counter()
-            df = reg[name].fn(spark, args.sf)
-            df.write.format("noop").mode("overwrite").save()
-            return time.perf_counter() - t0
-        df = reg[name].fn(spark, args.sf)
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
+    warm_up(spark, args.sf, any(q.startswith("streaming_") for q in args.queries))
 
     results = {}
     for name in args.queries:
@@ -76,22 +53,18 @@ def main() -> None:
         sides: dict[str, list[float]] = {"A": [], "B": []}
         load1 = os.getloadavg()[0]
 
-        def set_side(val: str) -> None:
-            if env_key is not None:
-                os.environ[env_key] = val
-            else:
-                spark.conf.set(key, val)
-
         # one untimed warm rep so neither side pays first-touch costs
-        set_side(va)
-        run(name)
+        spark.conf.set(key, va)
+        run_query(spark, name, reg[name].fn, args.sf)
         for i in range(args.reps):
             # counterbalanced order (A,B / B,A alternating) so warm-up
             # drift across reps cannot systematically favor one side
             order = (("A", va), ("B", vb)) if i % 2 == 0 else (("B", vb), ("A", va))
             for side, val in order:
-                set_side(val)
-                sides[side].append(run(name))
+                spark.conf.set(key, val)
+                sides[side].append(
+                    run_query(spark, name, reg[name].fn, args.sf).total
+                )
         results[name] = {
             "A_min": round(min(sides["A"]), 3),
             "B_min": round(min(sides["B"]), 3),

@@ -2,8 +2,10 @@
 
 The per-round optimization loop needs isolated, repeatable numbers for
 the handful of queries being worked on — without paying the full
-bench.py sweep each iteration.  Same methodology as bench.py: noop
-sink, BUILD_TIMED clock convention, min-of-N, per-row load stamps.
+bench.py sweep each iteration.  Same methodology as bench.py: its
+warm-up, its per-query clock (build + plan + noop-sink execute, with
+the min run's layers and in-build job count), min-of-N, per-row load
+stamps.
 
     python tools/bench_some.py [--sf DIR] [--reps N] [--plans DIR] q1 q2 ...
 
@@ -19,11 +21,10 @@ import io
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import BUILD_TIMED  # noqa: E402
+from bench import layers, run_query, warm_up  # noqa: E402
 
 
 def main() -> None:
@@ -44,30 +45,7 @@ def main() -> None:
 
     spark = get_spark("firewatch-bench-some")
     reg = registry()
-
-    # same warmups as bench.py, off-clock
-    reg["completion_stats"].fn(spark, args.sf).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    spark.range(0, 64, 1, 64).mapInPandas(lambda it: it, "id long").write.format(
-        "noop"
-    ).mode("overwrite").save()
-    if any(q.startswith("streaming_") for q in args.queries):
-        reg["streaming_session_parity"].fn(
-            spark, "/root/testdata/sf0.001"
-        ).write.format("noop").mode("overwrite").save()
-
-    def run(name: str) -> float:
-        spark.sparkContext.setJobDescription(f"bench_some: {name}")
-        if name in BUILD_TIMED:
-            t0 = time.perf_counter()
-            df = reg[name].fn(spark, args.sf)
-            df.write.format("noop").mode("overwrite").save()
-            return time.perf_counter() - t0
-        df = reg[name].fn(spark, args.sf)
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
+    warm_up(spark, args.sf, any(q.startswith("streaming_") for q in args.queries))
 
     results = {}
     for name in args.queries:
@@ -86,15 +64,19 @@ def main() -> None:
             print(f"{name}: plan captured", flush=True)
             continue
         load1 = os.getloadavg()[0]
-        runs = [run(name) for _ in range(args.reps)]
+        timings = [run_query(spark, name, reg[name].fn, args.sf)
+                   for _ in range(args.reps)]
+        runs = [round(t.total, 3) for t in timings]
+        best = min(timings, key=lambda t: t.total)
         results[name] = {
-            "min": round(min(runs), 3),
-            "runs": [round(t, 3) for t in runs],
+            "min": round(best.total, 3),
+            "runs": runs,
+            **layers(best),
             "load1m": round(load1, 2),
         }
-        print(f"{name}: min {min(runs):.3f}s  runs "
-              f"{[round(t, 3) for t in runs]}  load1m {load1:.2f}",
-              flush=True)
+        print(f"{name}: min {best.total:.3f}s  runs {runs}  "
+              f"build {best.build:.3f}s ({best.build_jobs} jobs)  "
+              f"load1m {load1:.2f}", flush=True)
 
     print(json.dumps(results))
     spark.stop()

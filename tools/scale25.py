@@ -10,12 +10,8 @@ n^2/k split is measured per stage rather than inferred from totals.
 The session mirrors the round-5 sizing lesson: 48g heap, 64 shuffle
 partitions (the default heap GC-thrashed label propagation at 25x).
 
-Round 12: the probe now RUNS the storm-aware protocol SCALE.md's r11
-IO-storm postmortem documented as manual steps (VERDICT r11 #3) —
-each timing point waits for load1m < 2.5 before starting, stamps
-load1m after finishing, DISCARDS the run as stormy if the stamp
-exceeds 6, and keeps the min of >= 2 non-stormy runs.  Load stamps
-are printed per point so a reader can audit the weather.
+Each timing point is the min of 2 runs of bench.py's per-query clock
+(build + plan + noop-sink execute), after one untimed warm run at x1.
 
 The pseudo-query name ``semantic_dedup_kscaled`` probes the SemDeDup
 composition with its production scale control applied: k = 16·sqrt(f)
@@ -33,6 +29,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import min_of_2, run_query  # noqa: E402
+
 DEFAULT = [
     "dup_span_removal",
     "incremental_dedup_bloom",
@@ -41,74 +39,6 @@ DEFAULT = [
     "bpe_vocab_induction",
     "bpe_apply_trained",
 ]
-
-# queries whose work happens while building the DataFrame — the ONE
-# authoritative set lives in bench.py (ADVICE r8: the hand-copied
-# subset here drifted, yielding sink-only — wrong — slope timings for
-# crawl_pipeline/csv_ingest/ann_ivf_upsert/length_quantile_sketch)
-from bench import BUILD_TIMED  # noqa: E402
-
-START_LOAD1M = 2.5   # do not start a timing above this
-STORM_LOAD1M = 6.0   # discard a finished timing stamped above this
-MIN_CLEAN_RUNS = 2
-
-
-def _wait_quiet(poll: float = 10.0, timeout: float = 1200.0) -> None:
-    deadline = time.monotonic() + timeout
-    while os.getloadavg()[0] >= START_LOAD1M and time.monotonic() < deadline:
-        print(
-            f"  ... waiting for quiet (load1m {os.getloadavg()[0]:.1f})",
-            file=sys.stderr,
-        )
-        time.sleep(poll)
-
-
-def timed_min_clean(fn) -> tuple[float, list[str]]:
-    """Min of >= MIN_CLEAN_RUNS non-stormy timings of fn(); returns
-    (min_sec, load_stamps — 'pre=X/post=Y[/STORMY]' per attempt, so
-    the audit trail shows both the start weather and the post-run
-    reading that drove any discard).
-
-    The post-run storm check only applies to SHORT runs: a run on
-    local[32] drives load1m toward ~32 all by itself with a 1-minute
-    time constant, so a multi-minute run's post-run stamp measures the
-    run, not the weather (first draft of this protocol discarded every
-    long run as "stormy" and looped — the r11 manual protocol's
-    post-run stamp worked only because its rows were ~10 s, where the
-    self-contribution stays under the 6.0 threshold).  Long runs are
-    protected by the PRE-run quiet gate + min-of-2 with a cooldown
-    between them: a mid-run storm inflates one of the two, the min
-    survives."""
-    clean: list[float] = []
-    raw: list[float] = []
-    stamps: list[str] = []
-    for _ in range(4):
-        _wait_quiet()
-        pre = os.getloadavg()[0]
-        t = fn()
-        post = os.getloadavg()[0]
-        raw.append(t)
-        # ADVICE r12: the stamp list carries BOTH readings so the
-        # printed audit trail shows why a run was discarded (the
-        # discard decision is post-run; pre-only stamps couldn't).
-        stormy = t < 45.0 and post > STORM_LOAD1M
-        stamps.append(
-            f"pre={pre:.2f}/post={post:.2f}" + ("/STORMY" if stormy else "")
-        )
-        if stormy:
-            print(f"  ... discarding stormy short run (post load1m {post:.1f})",
-                  file=sys.stderr)
-            continue
-        clean.append(t)
-        if len(clean) >= MIN_CLEAN_RUNS:
-            break
-    if not clean:
-        # ADVICE r12: all 4 attempts stormy — report min of ALL raw
-        # timings (not just the last) and flag it; min is still the
-        # noise-floor statistic even when every run was contaminated.
-        stamps.append("ALL_STORMY:min_of_raw")
-        return min(raw), stamps
-    return min(clean), stamps
 
 
 def _semdedup_kscaled(spark, sf_dir: str, k: int):
@@ -192,15 +122,13 @@ def run_semdedup_stage_probe(spark, dirs: dict[int, str], factor: int) -> None:
         ),
     ]
     for label, d, k in points:
-        _wait_quiet()
-        pre = os.getloadavg()[0]
+        load1 = os.getloadavg()[0]
         stages = _semdedup_stages(spark, d, k)
-        post = os.getloadavg()[0]
         total = sum(stages.values())
         detail = " ".join(f"{s}={t:.2f}s" for s, t in stages.items())
         print(
             f"semdedup_stages {label}: {detail} total={total:.2f}s "
-            f"load_pre={pre:.2f} load_post={post:.2f}"
+            f"load1m={load1:.2f}"
         )
 
 
@@ -242,38 +170,27 @@ def main() -> None:
         spark.stop()
         return
 
-    def run(name: str, sf_dir: str) -> float:
-        if name == "semantic_dedup_kscaled":
-            # build-timed (ivf_train iterates in-build), k scaled with
-            # the dir's replication factor: sqrt(1)=1 -> k=16 at x1
-            f = factor if sf_dir == dirs[factor] else 1
-            k = max(1, round(16 * math.sqrt(f)))
-            t0 = time.perf_counter()
-            df = _semdedup_kscaled(spark, sf_dir, k)
-            df.write.format("noop").mode("overwrite").save()
-            return time.perf_counter() - t0
-        if name in BUILD_TIMED:
-            t0 = time.perf_counter()
-            df = reg[name].fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            return time.perf_counter() - t0
-        df = reg[name].fn(spark, sf_dir)
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
+    def builder(name: str, sf_dir: str):
+        if name != "semantic_dedup_kscaled":
+            return reg[name].fn
+        # k scaled with the dir's replication factor: sqrt(1)=1 -> k=16 at x1
+        f = factor if sf_dir == dirs[factor] else 1
+        k = max(1, round(16 * math.sqrt(f)))
+        return lambda spark, d: _semdedup_kscaled(spark, d, k)
 
     for name in names:
+        load1 = os.getloadavg()[0]
         # PER-OP warmup at x1: each query's first execution pays Arrow
         # worker-pool fork + per-stage codegen once — measured 18.4 s
         # cold vs 2.4 s warm for the audio fingerprint — which would
         # otherwise corrupt the slope's x1 denominator
-        run(name, dirs[1])
-        t1, s1 = timed_min_clean(lambda: run(name, dirs[1]))
-        tN, sN = timed_min_clean(lambda: run(name, dirs[factor]))
+        run_query(spark, name, builder(name, dirs[1]), dirs[1])
+        t1 = min_of_2(spark, name, builder(name, dirs[1]), dirs[1])
+        tN = min_of_2(spark, name, builder(name, dirs[factor]), dirs[factor])
         print(
             f"{name}: t_1x={t1:.2f}s t_{factor}x={tN:.2f}s "
             f"slope_vs_linear={(tN / t1 / factor):.3f} "
-            f"loads_1x={s1} loads_{factor}x={sN}"
+            f"load1m={load1:.2f}"
         )
     spark.stop()
 
