@@ -2662,7 +2662,7 @@ def recrawl_schedule_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # r14: materialize=True for the BATCH row too — the streamed twin
     # had the cut since r13 but the batch path was never A/B'd; on the
-    # honest build+sink clock (BUILD_TIMED) the same-session
+    # honest build+sink bench clock the same-session
     # interleaved A/B reads 2.50 -> 1.24 s (2.0x): the triage table
     # feeds the schedule AND the final projection, and the replayed
     # subtree is the whole sitemap-parse -> canonicalize -> stream-
@@ -3714,8 +3714,8 @@ def image_text_pair_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # survivors' caption-keeper agg, its join-back, and the dup_image
     # leg) — uncut, the 72-md5 dHash kernel over the 3-way union
     # replayed per branch (plan: 36 parquet scans of ONE documents
-    # table).  The keyed table is (id, two 64-bit keys); BUILD_TIMED
-    # keeps the eager cut on the bench clock.
+    # table).  The keyed table is (id, two 64-bit keys); the build is
+    # on the bench clock, so the eager cut is too.
     keyed = keyed.localCheckpoint()
     return dedup.image_text_pair_dedup(keyed)
 
@@ -5928,8 +5928,8 @@ def dsir_importance_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the rank tail references it three times (stats row, bucket
     # counts, final rank join) and uncut each reference replayed the
     # whole two-gram-explode DSIR chain (plan: 104 Exchanges / 40
-    # documents scans → one chain pass).  BUILD_TIMED keeps the eager
-    # cut on the bench clock.
+    # documents scans → one chain pass).  The build is on the bench
+    # clock, so the eager cut is too.
     return sampling.dsir_importance_sample(
         docs, target, keep_frac=_DSIR_KEEP_FRAC, materialize=True
     )
@@ -5985,8 +5985,8 @@ def quality_budget_select_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # range-bucket keying, bucket counts, final join), and uncut each
     # reference replayed the DSIR chain + the token-count pass (plan:
     # 112 Exchanges / 48 documents scans → one chain pass).  The scored
-    # table is 4 ints per doc; BUILD_TIMED keeps the eager cut on the
-    # bench clock.
+    # table is 4 ints per doc; the build is on the bench clock, so the
+    # eager cut is too.
     scored = imp.join(toks, "doc_id").localCheckpoint()
     return sampling.quality_budget_select(
         scored, _QB_TOKEN_BUDGET, "importance"
@@ -8749,10 +8749,10 @@ def curation_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumes it once more internally for the corpus LM) AND the token
     # counter — uncut, the two-level line-md5 boilerplate aggregation
     # replayed per consumer.  This is the "cleaned dataset" stage write
-    # of a production pass; BUILD_TIMED keeps the eager cut on the bench
-    # clock.  The scorer's vocabulary side stays broadcastable — the cut
-    # is on the corpus (big) side, so no join-strategy flip (the
-    # interpolated_lm_score trap).
+    # of a production pass; the build is on the bench clock, so the
+    # eager cut is too.  The scorer's vocabulary side stays
+    # broadcastable — the cut is on the corpus (big) side, so no
+    # join-strategy flip (the interpolated_lm_score trap).
     cln = clean.select(
         "doc_id",
         F.regexp_replace(F.col("clean_text"), "\n", " ").alias("text"),
@@ -10793,8 +10793,8 @@ def semantic_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stage's self-join (both sides) AND the final per-cell report —
     # uncut, the corpus × k argmin ran three times.  Both are the
     # stage datasets (scaled vectors, cell assignment) a production
-    # SemDeDup run writes anyway; this query is BUILD_TIMED so the
-    # eager checkpoints stay on the bench clock.
+    # SemDeDup run writes anyway; the build is on the bench clock, so
+    # the eager checkpoints are too.
     sc = (
         similarity.with_scaled_vec(similarity.ensure_parallelism(emb))
         .select("vec_id", "iv")
@@ -10864,8 +10864,8 @@ def semantic_dedup_kscaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured the pair stage 88–92 s → 11.5 s at 50 k vectors under
     this rule).  The oracle derives the SAME k from count(*) inside
     the seed CTE's LIMIT, so the row is value-hash-gated end to end at
-    every SF.  BUILD_TIMED: Lloyd's per-iteration checkpoints and the
-    count() that sizes k run in-build."""
+    every SF.  Lloyd's per-iteration checkpoints and the count() that
+    sizes k run in-build, on the bench clock."""
     emb = _tbl(spark, sf_dir, "embeddings")
     k = _semdedup_scaled_k(emb.count())
     sc = (
@@ -10940,10 +10940,14 @@ def streaming_session_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     applyInPandasWithState session operator, and the emitted completion
     rows are checked against the batch/SQL sessionization oracle.
 
-    Determinism without timeout reliance: a final sentinel batch
-    carries one frame per key at ``max_seq + gap + 1``, so every real
-    session closes via the gap rule (W2) — the sentinel's own session
-    is the only state left open and is excluded from the output.
+    Determinism without timeout reliance: the input carries one extra
+    frame per key at ``max_seq + gap + 1``, so every real session
+    closes via the gap rule (W2) — the sentinel's own session is the
+    only state left open and is excluded from the output.  The sentinel
+    needs no batch of its own: it is larger than every frame of its key,
+    so range chunking puts it in the same chunk as the key's last
+    frames or a later one, and the operator sorts each key's rows
+    within a batch.
     """
     from .streaming.session_state import sessionize_stream
 
@@ -10955,8 +10959,8 @@ def streaming_session_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("fire_probability"),
         )
         # materialize the (bounded) fixture input once on the executors:
-        # the sentinel agg, the chunk-boundary percentiles and the 3
-        # chunk writes would otherwise each recompute the surrogate scan
+        # the sentinel agg, the chunk-boundary sampling and the chunk
+        # write would otherwise each recompute the surrogate scan
         ev = ev.localCheckpoint()
         # the gap-close sentinel: one frame per key past max_seq + gap,
         # built BY SPARK (groupBy max) — no driver materialization
@@ -10966,7 +10970,7 @@ def streaming_session_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("has_fire", F.lit(False))
             .withColumn("fire_probability", F.lit(0.0))
         )
-        write_replay_chunks(ev, f"{tmp}/in", n_chunks=2, sentinel=sentinels)
+        write_replay_chunks(ev.unionByName(sentinels), f"{tmp}/in", n_chunks=2)
         stream = reader.schema(
             "video_id string, frame_number long, has_fire boolean, fire_probability double"
         ).parquet(f"{tmp}/in")
@@ -10975,10 +10979,7 @@ def streaming_session_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         # availableNow query alive forever (never terminating)
         return sessionize_stream(stream, gap=SESSION_GAP, timeout_ms=None), lambda b: b
 
-    # stateful stage cost scales with state-store instances (= shuffle
-    # partitions); for the fixture's ~150 keys 16 instances measure
-    # ~25% faster than 32 (fewer store commits per micro-batch)
-    return replay(spark, feed, shuffle_partitions=16).where(
+    return replay(spark, feed).where(
         "closed_by = 'gap'"
     ).select(
         "video_id", "session_id", "total_frames", "fire_count",
@@ -11093,7 +11094,7 @@ def streaming_ep2_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FULL EP2 stateful operator (streaming/stateful_pipeline.py —
     M6 cadence counter + prediction cache + W1-W4 session machine in
     one applyInPandasWithState stage) run as a real streaming query
-    over a 3-micro-batch replay of the events stream, frame rows
+    over a 2-micro-batch replay of the events stream, frame rows
     checked against the SQL cadence+LOCF oracle.  The cadence counter
     and cached prediction MUST survive micro-batch boundaries for this
     to match — the SURVEY §7 risk-register case, proven here at
@@ -11119,8 +11120,7 @@ def streaming_ep2_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return out, lambda b: b
 
-    # 16 state-store instances: see streaming_session_parity
-    return replay(spark, feed, shuffle_partitions=16).where(
+    return replay(spark, feed).where(
         "row_type = 'frame'"
     ).select(
         "video_id",

@@ -1,14 +1,22 @@
 """Bounded file-stream replays: the one harness every streaming twin
 runs on, plus the Spark-side chunk writer that feeds it.
 
-`replay(spark, feed, shuffle_partitions)` contract:
+`replay(spark, feed)` contract:
 
 - **Scope.** It makes one ``fw_replay_*`` temp dir and sets
-  ``spark.sql.shuffle.partitions`` for the duration of the call.  On
-  return or raise, in ``finally``, it stops the query, restores the
-  prior shuffle-partition value and removes the temp dir, so a replay
-  leaks no running stream, no session conf, no catalog table and no
-  files.
+  ``spark.sql.shuffle.partitions`` to the session's
+  ``defaultParallelism`` for the duration of the call.  On return or
+  raise, in ``finally``, it stops the query, restores the prior
+  shuffle-partition value and removes the temp dir, so a replay leaks
+  no running stream, no session conf, no catalog table and no files.
+- **One partition per core.** The shuffle-partition count is the
+  number of state-store instances, and so of Python tasks, that a
+  stateful operator runs per micro-batch.  Each such task pays a fixed
+  Python cost whatever its row count: on CPython 3.11 pyspark's task
+  setup calls ``importlib.invalidate_caches()``, after which the
+  cached zipimporter re-reads all of ``pyspark.zip``'s directory, about
+  0.1 s of CPU a time.  More tasks than cores only add that cost.
+  State is per key, so the output does not depend on the count.
 - **Feed.** ``feed(reader, tmp)`` is the caller's part: it writes its
   input under ``tmp``, opens the stream from ``reader`` (a
   ``readStream`` with ``maxFilesPerTrigger=1``, so each input file is
@@ -32,9 +40,11 @@ of an ordering column, written by one Spark job.  The stateful
 operators only require that each key's frames arrive in non-decreasing
 order ACROSS micro-batches (within a batch they sort); non-overlapping
 increasing ranges guarantee that, so the replay output is invariant to
-where the boundaries fall.  The FileStreamSource picks files by
-modification time, so the chunk mtimes are forced strictly increasing
-in chunk order.
+where the boundaries fall.  For the same reason a row that must come
+after all of its key's rows (a gap-close sentinel, say) needs no batch
+of its own: a larger value lands in the same chunk or a later one.
+The FileStreamSource picks files by modification time, so the chunk
+mtimes are forced strictly increasing in chunk order.
 """
 
 from __future__ import annotations
@@ -58,18 +68,15 @@ Body = Callable[[DataFrame], DataFrame]
 def replay(
     spark: SparkSession,
     feed: Callable[[DataStreamReader, str], tuple[DataFrame, Body]],
-    shuffle_partitions: int = 32,
 ) -> DataFrame:
     """Drain the stream `feed` opens through the one foreachBatch sink
-    and return its output, materialized (contract: module docstring).
-    `shuffle_partitions` bounds per-batch shuffle and state-store cost
-    on a vanilla 200-partition session."""
+    and return its output, materialized (contract: module docstring)."""
     prior = spark.conf.get(_SHUFFLE)
     tmp = tempfile.mkdtemp(prefix="fw_replay_")
     sink = os.path.join(tmp, "_sink")
     query = None
     try:
-        spark.conf.set(_SHUFFLE, str(shuffle_partitions))
+        spark.conf.set(_SHUFFLE, str(spark.sparkContext.defaultParallelism))
         stream, body = feed(spark.readStream.option("maxFilesPerTrigger", 1), tmp)
 
         def run_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -98,13 +105,11 @@ def write_replay_chunks(
     tmp: str,
     order_col: str = "frame_number",
     n_chunks: int = 3,
-    sentinel: DataFrame | None = None,
 ) -> list[str]:
     """Write `df` as up to `n_chunks` single-file parquet chunks under
     `tmp` (``chunk_000.parquet`` …), partitioned into non-overlapping
-    increasing ranges of `order_col`; an optional `sentinel` DataFrame
-    (same schema) becomes the final ``chunk_999.parquet`` batch.
-    Returns the written paths in replay order.
+    increasing ranges of `order_col`.  Returns the written paths in
+    replay order.
 
     ONE Spark job writes every chunk: ``repartitionByRange(n_chunks,
     order_col)`` range-partitions the rows (RangePartitioner samples
@@ -125,28 +130,9 @@ def write_replay_chunks(
         os.replace(part, out)
         paths.append(out)
     shutil.rmtree(staging, ignore_errors=True)
-    if sentinel is not None:
-        p = _write_single_file(sentinel, tmp, "chunk_999.parquet")
-        if p:
-            paths.append(p)
     # strictly increasing mtimes pin the FileStreamSource replay order
     base = int(os.path.getmtime(paths[0])) if paths else 0
     for i, p in enumerate(paths):
         os.utime(p, (base + i, base + i))
     return paths
 
-
-def _write_single_file(piece: DataFrame, tmp: str, name: str) -> str | None:
-    """Executor-side write of one chunk, promoted to `tmp/name`.
-    ``coalesce(1)`` streams the rows through a single write task —
-    bounded fixture scale by construction (a replay chunk), never the
-    full-corpus path."""
-    staging = os.path.join(tmp, f"_stage_{name}")
-    piece.coalesce(1).write.mode("overwrite").parquet(staging)
-    parts = glob.glob(os.path.join(staging, "part-*.parquet"))
-    out: str | None = None
-    if parts:  # an empty chunk writes no part file — skip it
-        out = os.path.join(tmp, name)
-        os.replace(parts[0], out)
-    shutil.rmtree(staging, ignore_errors=True)
-    return out

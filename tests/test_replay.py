@@ -48,20 +48,6 @@ def test_chunks_partition_input_by_increasing_ranges(spark, tmp_path):
         if prev_mtime is not None:
             assert mtime > prev_mtime  # FileStreamSource replay order pinned
         prev_mtime = mtime
-
-
-def test_sentinel_written_last(spark, tmp_path):
-    df = spark.range(0, 100).select(
-        F.lit("v").alias("video_id"), F.col("id").alias("frame_number")
-    )
-    sentinel = spark.createDataFrame(
-        [("v", 10_000)], "video_id string, frame_number long"
-    )
-    tmp = str(tmp_path / "chunks")
-    paths = write_replay_chunks(df, tmp, n_chunks=2, sentinel=sentinel)
-    assert os.path.basename(paths[-1]) == "chunk_999.parquet"
-    assert _read_chunk(spark, paths[-1]).first()["frame_number"] == 10_000
-    assert os.path.getmtime(paths[-1]) == max(os.path.getmtime(p) for p in paths)
     # no staging litter
     assert not glob.glob(os.path.join(tmp, "_stage_*"))
 
@@ -79,38 +65,46 @@ def test_empty_chunk_skipped_not_errored(spark, tmp_path):
     assert total == 50
 
 
-def test_session_output_invariant_to_chunk_count(spark):
+def test_session_output_invariant_to_chunk_count(spark, monkeypatch):
     """The design claim replay.py rests on: the stateful session
     operator's output depends only on the frame SET, not on where the
     range boundaries fall — so RangePartitioner's sampled boundaries
-    need not be deterministic for the parity hash to hold.  Replays of
-    the same frames through 1 and 4 micro-batch chunks must emit
-    identical completion rows."""
+    need not be deterministic for the parity hash to hold — nor on the
+    state-partition count the harness takes from the session.  Replays
+    of the same frames through 1 chunk on 1 partition and 4 chunks on 5
+    partitions must emit identical completion rows."""
     from firewatch_spark.streaming.session_state import sessionize_stream
 
     gap = 10
     # two keys, multiple gap-separated sessions, plus a sentinel past
-    # the last frame so every real session closes via the gap rule
+    # the last frame, in the same input, so every real session closes
+    # via the gap rule
     frames = [
         ("a", n, n % 3 == 0, float(n % 5) / 10)
         for n in [*range(0, 20, 2), *range(100, 110), *range(400, 420, 3)]
     ] + [
         ("b", n, False, 0.0)
         for n in [*range(5, 40, 5), *range(300, 330, 2)]
-    ]
-    sent = [("a", 10_000, False, 0.0), ("b", 10_000, False, 0.0)]
+    ] + [("a", 10_000, False, 0.0), ("b", 10_000, False, 0.0)]
     df = spark.createDataFrame(
         frames, "video_id string, frame_number long, has_fire boolean, fire_probability double"
     )
-    sentinel = spark.createDataFrame(sent, df.schema)
 
-    def run(n_chunks):
+    def run(n_chunks, parallelism):
+        monkeypatch.setattr(
+            type(spark.sparkContext), "defaultParallelism",
+            property(lambda self: parallelism),
+        )
+        seen = []
+
         def feed(reader, tmp):
-            write_replay_chunks(df, f"{tmp}/in", n_chunks=n_chunks, sentinel=sentinel)
+            seen.append(spark.conf.get("spark.sql.shuffle.partitions"))
+            write_replay_chunks(df, f"{tmp}/in", n_chunks=n_chunks)
             stream = reader.schema(df.schema).parquet(f"{tmp}/in")
             return sessionize_stream(stream, gap=gap, timeout_ms=None), lambda b: b
 
-        out = replay(spark, feed, shuffle_partitions=4)
+        out = replay(spark, feed)
+        assert seen == [str(parallelism)]
         return {
             (r["video_id"], r["session_id"]): (
                 r["total_frames"], r["fire_count"], r["max_fire_probability"],
@@ -119,8 +113,8 @@ def test_session_output_invariant_to_chunk_count(spark):
             for r in out.where("closed_by = 'gap'").collect()
         }
 
-    one = run(1)
-    four = run(4)
+    one = run(1, 1)
+    four = run(4, 5)
     assert one == four
     assert len({k[0] for k in one}) == 2  # both keys closed sessions
     assert len(one) >= 5  # multiple sessions per key actually exercised
@@ -159,13 +153,13 @@ def test_replay_leaks_nothing(spark, monkeypatch, timeout):
     seen = []
     if timeout:
         with pytest.raises(TimeoutError):
-            replay(spark, _counting_feed(spark, seen), shuffle_partitions=3)
+            replay(spark, _counting_feed(spark, seen))
     else:
-        out = replay(spark, _counting_feed(spark, seen), shuffle_partitions=3)
+        out = replay(spark, _counting_feed(spark, seen))
         assert out.columns == ["k", "count"]
         assert out.agg(F.sum("count")).first()[0] == 30
     [(tmp, scoped)] = seen
-    assert scoped == "3"
+    assert scoped == str(spark.sparkContext.defaultParallelism)
     assert {q.id for q in spark.streams.active} == streams
     assert spark.conf.get("spark.sql.shuffle.partitions") == prior
     assert not os.path.exists(tmp)
