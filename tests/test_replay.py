@@ -147,7 +147,13 @@ def test_replay_leaks_nothing(spark, monkeypatch, timeout):
         monkeypatch.setattr(
             StreamingQuery, "awaitTermination", lambda self, timeout=None: False
         )
+    # a core count unlike the session's shuffle setting, so both the
+    # scoping and the restore show
+    monkeypatch.setattr(
+        type(spark.sparkContext), "defaultParallelism", property(lambda self: 3)
+    )
     prior = spark.conf.get("spark.sql.shuffle.partitions")
+    assert prior != "3"
     streams = {q.id for q in spark.streams.active}
     tables = {t.name for t in spark.catalog.listTables()}
     seen = []
@@ -159,7 +165,7 @@ def test_replay_leaks_nothing(spark, monkeypatch, timeout):
         assert out.columns == ["k", "count"]
         assert out.agg(F.sum("count")).first()[0] == 30
     [(tmp, scoped)] = seen
-    assert scoped == str(spark.sparkContext.defaultParallelism)
+    assert scoped == str(spark.sparkContext.defaultParallelism) == "3"
     assert {q.id for q in spark.streams.active} == streams
     assert spark.conf.get("spark.sql.shuffle.partitions") == prior
     assert not os.path.exists(tmp)
