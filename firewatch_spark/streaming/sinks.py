@@ -10,22 +10,23 @@ boto3 behind an import-try.  S13 writes the reference's progress-file
 shape; in Spark the idiomatic channel is StreamingQueryListener /
 query.lastProgress (SURVEY.md S13 row), so this exists for parity.
 
-Scale note: foreachBatch receives each micro-batch as a regular
-DataFrame; the per-video grouping below happens on the executors via
-groupBy—only manifest paths hit the driver.
+Scale note: foreachBatch runs on the driver, and both media sinks
+write from there.  They launch no Python-worker stage: a per-video
+executor stage paid a fixed pyspark task cost per micro-batch that
+outweighed its rows.  The manifest sink pays instead with its batch's
+frames on the driver (three narrow columns; see
+`media_manifest_sink`).
 """
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
-from collections.abc import Iterator
-
-import pandas as pd
+from operator import itemgetter
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
 
 try:
     import boto3  # type: ignore
@@ -35,15 +36,9 @@ except ImportError:
     HAVE_BOTO3 = False
 
 
-def _encode_line(row) -> str:
+def _encode_line(frame_number, has_fire) -> str:
     # STUB for cv2.VideoWriter.write(frame): records frame identity
-    fn = row.frame_number if hasattr(row, "frame_number") else row["frame_number"]
-    hf = row.has_fire if hasattr(row, "has_fire") else row["has_fire"]
-    return f"{fn}\t{int(bool(hf))}\n"
-
-
-def _part_path(output_dir: str, video_id: str) -> str:
-    return os.path.join(output_dir, f"{video_id}_with_heatmaps.manifest.part")
+    return f"{frame_number}\t{int(bool(has_fire))}\n"
 
 
 def _seg_path(output_dir: str, video_id: str, batch_id: int) -> str:
@@ -72,31 +67,6 @@ def _seg_glob(output_dir: str, video_id: str) -> list[str]:
             + "[0-9]*"
         )
     )
-
-
-def _seg_batch_id(path: str) -> int:
-    return int(path.rsplit(".seg-", 1)[1])
-
-
-_BID_PREFIX = "#bid\t"
-
-
-def _read_part(path: str) -> tuple[int, list[str]]:
-    """(last applied batch id, frame lines) from a LEGACY ``.part``
-    manifest — the pre-round-6 whole-file-rewrite format, honored at
-    finalize time so an upgrade mid-lifecycle loses nothing;
-    (-1, []) when absent."""
-    if not os.path.exists(path):
-        return -1, []
-    with open(path) as f:
-        lines = f.readlines()
-    if lines and lines[0].startswith(_BID_PREFIX):
-        return int(lines[0][len(_BID_PREFIX):].strip()), lines[1:]
-    legacy = path + ".bid"
-    if os.path.exists(legacy):
-        with open(legacy) as bf:
-            return int(bf.read().strip()), lines
-    return -1, lines
 
 
 def _write_atomic(path: str, lines: list[str]) -> None:
@@ -128,7 +98,8 @@ def media_manifest_sink(output_dir: str):
     Crash/retry correctness WITHOUT any read-back or batch-id header:
     each batch owns the segment file named by its batch id and commits
     it with one fsync'd ``os.replace`` — a micro-batch retry rewrites
-    the SAME segment with the SAME content (frames are sorted, the
+    the SAME segment with the SAME content (rows are sorted on all
+    three columns, so duplicate frames land in the same order too; the
     batch is a deterministic replay), so redelivery is idempotent by
     construction, and a crash mid-write leaves only a stale ``.tmp``
     that the retry's rename supersedes.  Ordering across segments is
@@ -136,31 +107,29 @@ def media_manifest_sink(output_dir: str):
     same arrival-order contract the reference's single open writer
     sees.
 
-    Real codec integration replaces `_encode_line`.  Appends happen on
-    executors (groupBy.applyInPandas — one task per video per batch,
-    so no concurrent writers of one segment); like the reference's
-    MP4s, the output dir must be a filesystem all writers share."""
+    The driver is the single writer: one ``toArrow()`` collect of
+    (video_id, frame_number, has_fire), a sort in pyarrow (a Spark
+    sort would add a sampling job and a shuffle), then one segment per
+    video run of the sorted rows.  That ships O(frames) x 3 narrow
+    columns to the driver per batch, about 0.2 MB at 12k rows and
+    about 30 MB for a 1M-frame batch, in exchange for no Python-worker
+    stage.  Real codec integration replaces `_encode_line`."""
 
     os.makedirs(output_dir, exist_ok=True)
 
-    manifest_schema = StructType([StructField("path", StringType())])
-
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        def _append_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values("frame_number")
-            video_id = pdf["video_id"].iloc[0]
-            seg = _seg_path(output_dir, video_id, batch_id)
-            _write_atomic(
-                seg, [_encode_line(row) for row in pdf.itertuples(index=False)]
-            )
-            return pd.DataFrame({"path": [seg]})
-
-        (
+        table = (
             batch_df.select("video_id", "frame_number", "has_fire")
-            .groupBy("video_id")
-            .applyInPandas(_append_group, schema=manifest_schema)
-            .collect()  # segment paths only — O(videos), not O(frames)
+            .toArrow()
+            .sort_by([("video_id", "ascending"), ("frame_number", "ascending"),
+                      ("has_fire", "ascending")])
         )
+        rows = zip(*(table.column(c).to_pylist() for c in table.column_names))
+        for video_id, group in itertools.groupby(rows, key=itemgetter(0)):
+            _write_atomic(
+                _seg_path(output_dir, video_id, batch_id),
+                [_encode_line(fn, hf) for _, fn, hf in group],
+            )
 
     return sink
 
@@ -168,13 +137,11 @@ def media_manifest_sink(output_dir: str):
 def media_finalize_sink(output_dir: str):
     """S10 analog, finalize phase (W3): for each completed video —
     rows on the completion stream carry `video_id` — COMPACT its
-    segment files in batch-id order (plus any legacy pre-segment
-    ``.part`` manifest first, so an upgrade mid-lifecycle keeps its
-    frames), re-write the last frame to flush codec buffers
-    (video_writer.py:112-117), fsync, verify (moov-atom probe analog,
-    :119-167), then promote to the final name with collision-safe
-    suffixing per completed session (:52-58).  A later session of the
-    same video starts a fresh segment lifecycle.
+    segment files in batch-id order, re-write the last frame to flush
+    codec buffers (video_writer.py:112-117), fsync, verify (moov-atom
+    probe analog, :119-167), then promote to the final name with
+    collision-safe suffixing per completed session (:52-58).  A later
+    session of the same video starts a fresh segment lifecycle.
 
     Crash windows: mid-compaction leaves segments intact (clean
     retry); between promote and segment removal, the retry re-promotes
@@ -183,19 +150,9 @@ def media_finalize_sink(output_dir: str):
     could drop the video)."""
 
     def finalize_one(video_id: str) -> str | None:
-        part = _part_path(output_dir, video_id)
         segs = _seg_glob(output_dir, video_id)
         lines: list[str] = []
-        legacy_bid, legacy_lines = _read_part(part)
-        lines.extend(legacy_lines)
         for seg in segs:
-            # skip segments the legacy .part already applied: a retry
-            # that straddles the .part→segment upgrade re-delivers a
-            # batch the .part's #bid header committed, and the new
-            # sink writes it as a segment — compacting both would
-            # duplicate that batch's frames (round-6 review)
-            if _seg_batch_id(seg) <= legacy_bid:
-                continue
             with open(seg) as f:
                 lines.extend(f.readlines())
         if not lines:  # verify: an empty session never promotes
@@ -212,19 +169,14 @@ def media_finalize_sink(output_dir: str):
             final = os.path.join(output_dir, f"{video_id}_with_heatmaps_{k}.manifest")
             k += 1
         os.replace(tmp, final)
-        # next session starts a fresh lifecycle
-        for seg in segs:
+        for seg in segs:  # next session starts a fresh lifecycle
             os.remove(seg)
-        if os.path.exists(part):
-            os.remove(part)
-        if os.path.exists(part + ".bid"):
-            os.remove(part + ".bid")  # pre-upgrade sidecar litter
         return final
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # O(completed videos) per batch — completion rows only
-        for row in batch_df.select("video_id").distinct().collect():
-            finalize_one(row["video_id"])
+        # O(completion rows) per batch, one Arrow collect, no shuffle
+        for video_id in set(batch_df.select("video_id").toArrow().column(0).to_pylist()):
+            finalize_one(video_id)
 
     return sink
 
@@ -251,7 +203,7 @@ def s3_upload_sink(bucket: str, delete_local: bool = False, client_factory=None)
     succeeded; on retry, a path already deleted by a previous attempt
     is skipped (its absence implies a completed upload under the
     idempotent key).  The MP4 must live on storage the executors can
-    read (same requirement the manifest sink documents).
+    read (the media sinks write it on the driver).
 
     `client_factory` injects the S3 client per partition (tests pass a
     cloudpickle-able fake; default `boto3.client("s3")` — created

@@ -52,8 +52,7 @@ def test_detection_event_stream_end_to_end(spark, tmp_path):
 
 
 def _frame_lines(path) -> int:
-    """Frame lines in a manifest, excluding the #bid lifecycle header."""
-    return sum(1 for ln in open(path) if not ln.startswith("#"))
+    return sum(1 for _ in open(path))
 
 
 def test_completion_stream_and_manifest_sink(spark, tmp_path):
@@ -94,16 +93,6 @@ def test_completion_stream_and_manifest_sink(spark, tmp_path):
     open(os.path.join(media_dir, "dense_with_heatmaps.manifest.seg-000000000007"), "w").write("1\t0\n")
     fin(spark.createDataFrame([("dense",)], "video_id string"), 1)
     assert os.path.exists(os.path.join(media_dir, "dense_with_heatmaps_1.manifest"))
-    # an upgrade mid-lifecycle: a legacy .part plus newer segments
-    # compact together, .part frames first — and a segment whose batch
-    # id the .part's #bid header already committed is SKIPPED (the
-    # straddling-retry duplication, round-6 review)
-    open(os.path.join(media_dir, "up_with_heatmaps.manifest.part"), "w").write("#bid\t0\n1\t0\n")
-    open(os.path.join(media_dir, "up_with_heatmaps.manifest.seg-000000000000"), "w").write("1\t0\n")
-    open(os.path.join(media_dir, "up_with_heatmaps.manifest.seg-000000000001"), "w").write("2\t0\n")
-    fin(spark.createDataFrame([("up",)], "video_id string"), 2)
-    up = open(os.path.join(media_dir, "up_with_heatmaps.manifest")).readlines()
-    assert up == ["1\t0\n", "2\t0\n", "2\t0\n"]
 
 
 def test_completion_events_json_shape(spark, tmp_path):
@@ -181,6 +170,37 @@ def test_sinks_idempotent_under_batch_retry(spark, tmp_path):
     state = json.load(open(ppath))
     assert state["videos"][0]["frames_done"] == 5
     assert state["videos"][0]["stream_progress"] == 50
+
+
+def test_manifest_segments_from_unsorted_partitions(spark, tmp_path):
+    """A segment holds its video's lines in frame order, whatever the
+    partitioning and row order of the batch; a video id with glob
+    metacharacters and a space gets its own segment; an empty batch
+    writes no file."""
+    media_dir = str(tmp_path / "media_unsorted")
+    msink = sinks.media_manifest_sink(media_dir)
+    odd = "cam [*] 2"
+    rows = [("v", fn, fn % 4 == 1) for fn in (17, 3, 11, 0, 8, 5, 14, 2, 9)]
+    rows += [(odd, fn, fn % 2 == 0) for fn in (6, 1, 4)]
+    batch = spark.createDataFrame(
+        rows, "video_id string, frame_number long, has_fire boolean"
+    ).repartition(3)
+    per_part = batch.rdd.glom().map(lambda p: {r["video_id"] for r in p}).collect()
+    assert sum("v" in p for p in per_part) > 1  # one video over several partitions
+    msink(batch, 3)
+
+    assert sorted(os.listdir(media_dir)) == sorted(
+        os.path.basename(sinks._seg_path(media_dir, v, 3)) for v in ("v", odd)
+    )
+    for vid in ("v", odd):
+        want = "".join(
+            f"{fn}\t{int(hf)}\n" for v, fn, hf in sorted(rows) if v == vid
+        )
+        assert open(sinks._seg_path(media_dir, vid, 3)).read() == want
+    assert sinks._seg_glob(media_dir, odd) == [sinks._seg_path(media_dir, odd, 3)]
+
+    msink(batch.limit(0), 4)
+    assert len(os.listdir(media_dir)) == 2
 
 
 def test_manifest_append_crash_atomic(spark, tmp_path):
