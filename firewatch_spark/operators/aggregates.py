@@ -31,9 +31,10 @@ def completion_stats(
 
 def global_counters(df: DataFrame, has_fire: str = "has_fire") -> DataFrame:
     """A7 — whole-stream message/detection/fire counters
-    (streams/stream.py:459-461,518-526).  In production this is
-    `df.observe(...)` so it rides along for free; as a query it is a
-    keyless aggregate (single partial-agg reduce, no shuffle of data)."""
+    (streams/stream.py:459-461,518-526), as a keyless batch aggregate
+    (single partial-agg reduce, no shuffle of data).  The streaming
+    path does not count them yet: named ``df.observe(...)`` metrics on
+    the EP2 stateful output are ROADMAP.md open item 3."""
     return df.agg(
         F.count(F.lit(1)).alias("message_count"),
         F.sum(F.col(has_fire).cast("long")).alias("fire_count"),

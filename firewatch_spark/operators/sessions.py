@@ -8,8 +8,8 @@ pinned by FIXTURES.md §1 pattern 3).
 
 Batch translation is the classic lag → gap-flag → running-sum pattern:
 one shuffle on the key, everything else sorted within partitions.  The
-streaming twin (exact same semantics, arbitrary state) lives in
-streaming/session_state.py.
+streaming twin (exact same semantics, arbitrary state) is
+streaming/stateful_pipeline.py's `fold_sessions`.
 """
 
 from __future__ import annotations

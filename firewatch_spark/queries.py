@@ -10606,9 +10606,9 @@ def session_window_time_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     events when their gap is <= the window gap (boundary inclusive,
     verified empirically against the oracle), which IS the reference's
     strict-`>`-closes rule — so the same GAP value reproduces the
-    frame-domain sessions exactly.  The exact-parity stateful twin
-    lives in streaming/session_state.py; this is the
-    zero-custom-code path."""
+    frame-domain sessions exactly.  The exact-parity stateful twin is
+    `streaming_session_parity` (streaming/stateful_pipeline.py's
+    operator); this is the zero-custom-code path."""
     ev = _tbl(spark, sf_dir, "events")
     ev = ev.withColumn("ts_t", F.timestamp_seconds(F.col("event_id")))
     return (
@@ -10933,55 +10933,60 @@ _STREAM_SESSION_SQL = f"""
     """
 
 
+def _ep2_replay(
+    spark: SparkSession, sf_dir: str, row_type: str, every_n: int = 1,
+    sentinels: bool = False,
+) -> DataFrame:
+    """The events stream as (video_id, frame_number) frames, replayed in
+    2 micro-batches through `fire_detection_stream` (surrogate model,
+    NoTimeout); keeps the output rows of ``row_type``.
+
+    NoTimeout because an armed processing-time timer would keep the
+    availableNow query alive forever.  ``sentinels`` adds one frame per
+    key at ``max_seq + gap + 1``, built by Spark (groupBy max), so every
+    real session closes via the gap rule (W2) — the sentinel's own
+    session is the only state left open.  It needs no batch of its own:
+    it is larger than every frame of its key, so range chunking puts it
+    in the same chunk as the key's last frames or a later one, and the
+    operator sorts each key's rows within a batch."""
+    from .streaming.stateful_pipeline import fire_detection_stream
+
+    def feed(reader, tmp):
+        ev = _tbl(spark, sf_dir, "events").select(
+            F.col("user_id").cast("string").alias("video_id"),
+            F.col("event_id").alias("frame_number"),
+        )
+        # per-key frame order is non-decreasing across batches by
+        # construction; one executor-side materialization feeds the
+        # sentinel agg, the boundary sampling and the chunk writes
+        ev = ev.localCheckpoint()
+        if sentinels:
+            ev = ev.unionByName(
+                ev.groupBy("video_id").agg(
+                    (F.max("frame_number") + SESSION_GAP + 1).alias("frame_number")
+                )
+            )
+        write_replay_chunks(ev, f"{tmp}/in", n_chunks=2)
+        stream = reader.schema("video_id string, frame_number long").parquet(
+            f"{tmp}/in"
+        )
+        out = fire_detection_stream(
+            stream, gap=SESSION_GAP, inference_every_n=every_n, timeout_ms=None
+        )
+        return out, lambda b: b.where(F.col("row_type") == row_type)
+
+    return replay(spark, feed)
+
+
 @q("streaming_session_parity", _STREAM_SESSION_SQL)
 def streaming_session_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1-W4 as a REAL Structured Streaming query: the events stream is
     replayed through a file source micro-batch by micro-batch into the
-    applyInPandasWithState session operator, and the emitted completion
-    rows are checked against the batch/SQL sessionization oracle.
-
-    Determinism without timeout reliance: the input carries one extra
-    frame per key at ``max_seq + gap + 1``, so every real session
-    closes via the gap rule (W2) — the sentinel's own session is the
-    only state left open and is excluded from the output.  The sentinel
-    needs no batch of its own: it is larger than every frame of its key,
-    so range chunking puts it in the same chunk as the key's last
-    frames or a later one, and the operator sorts each key's rows
-    within a batch.
-    """
-    from .streaming.session_state import sessionize_stream
-
-    def feed(reader, tmp):
-        ev = _with_surrogate(_tbl(spark, sf_dir, "events")).select(
-            F.col("user_id").cast("string").alias("video_id"),
-            F.col("event_id").alias("frame_number"),
-            F.col("has_fire_b").alias("has_fire"),
-            F.col("fire_probability"),
-        )
-        # materialize the (bounded) fixture input once on the executors:
-        # the sentinel agg, the chunk-boundary sampling and the chunk
-        # write would otherwise each recompute the surrogate scan
-        ev = ev.localCheckpoint()
-        # the gap-close sentinel: one frame per key past max_seq + gap,
-        # built BY SPARK (groupBy max) — no driver materialization
-        sentinels = (
-            ev.groupBy("video_id")
-            .agg((F.max("frame_number") + SESSION_GAP + 1).alias("frame_number"))
-            .withColumn("has_fire", F.lit(False))
-            .withColumn("fire_probability", F.lit(0.0))
-        )
-        write_replay_chunks(ev.unionByName(sentinels), f"{tmp}/in", n_chunks=2)
-        stream = reader.schema(
-            "video_id string, frame_number long, has_fire boolean, fire_probability double"
-        ).parquet(f"{tmp}/in")
-        # NoTimeout: every real session closes via the sentinel-driven gap
-        # rule, and an armed processing-time timer would keep the
-        # availableNow query alive forever (never terminating)
-        return sessionize_stream(stream, gap=SESSION_GAP, timeout_ms=None), lambda b: b
-
-    return replay(spark, feed).where(
-        "closed_by = 'gap'"
-    ).select(
+    EP2 stateful operator with every frame inferred, and the emitted
+    gap-closed session rows are checked against the batch/SQL
+    sessionization oracle.  Determinism without timeout reliance comes
+    from the gap-close sentinels (`_ep2_replay`)."""
+    return _ep2_replay(spark, sf_dir, "session", sentinels=True).select(
         "video_id", "session_id", "total_frames", "fire_count",
         "max_fire_probability", "first_seq", "last_seq",
     )
@@ -11099,30 +11104,7 @@ def streaming_ep2_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     and cached prediction MUST survive micro-batch boundaries for this
     to match — the SURVEY §7 risk-register case, proven here at
     sf-scale rather than only in unit tests."""
-    from .streaming.stateful_pipeline import fire_detection_stream
-
-    def feed(reader, tmp):
-        ev = _tbl(spark, sf_dir, "events").select(
-            F.col("user_id").cast("string").alias("video_id"),
-            F.col("event_id").alias("frame_number"),
-        )
-        # per-key frame order is non-decreasing across batches by
-        # construction; one executor-side materialization feeds the
-        # boundary sampling and the chunk writes
-        write_replay_chunks(ev.localCheckpoint(), f"{tmp}/in", n_chunks=2)
-        stream = reader.schema("video_id string, frame_number long").parquet(
-            f"{tmp}/in"
-        )
-        # NoTimeout: see streaming_session_parity (frame rows don't
-        # depend on session flushes)
-        out = fire_detection_stream(
-            stream, gap=SESSION_GAP, inference_every_n=_EP2_N, timeout_ms=None
-        )
-        return out, lambda b: b
-
-    return replay(spark, feed).where(
-        "row_type = 'frame'"
-    ).select(
+    return _ep2_replay(spark, sf_dir, "frame", every_n=_EP2_N).select(
         "video_id",
         "frame_number",
         F.col("is_inference").cast("int").alias("is_inference"),

@@ -1,4 +1,4 @@
-"""EP2 — the main detection pipeline as one Structured Streaming query
+"""EP2 — the main detection pipeline as Structured Streaming queries
 (SURVEY.md §3 EP2: readStream → decode → predict → stateful session →
 two output streams).
 
@@ -8,14 +8,20 @@ sinks per message.  Spark splits it into a declarative pipeline:
 
     frames (kafka/file source)
       → decode (P1; frame bytes stay columnar, pruned when unused)
-      → model prediction (M1 registry: column fast path or pandas UDF)
-      → detection-event projection (P8) ──► detections sink
-      → stateful sessionization (W1-W4)  ──► completions sink
+      → stateful_pipeline.fire_detection_stream: cadence (M6) +
+        model + LOCF + sessions (W1-W4) in one stateful stage
+          ├─ 'frame' rows   ──► detections sink
+          └─ 'session' rows ──► completion_events_json (S9) ──► completions sink
 
 Stage boundaries: source tasks → shuffle by video_id (the ONLY wide
 exchange, required by per-key state) → stateful stage → sinks.  The
 frame binary column is dropped before the shuffle: at 100 TB the
 payload never crosses the network — only ids, numbers and booleans do.
+
+The P8 nested detection record needs frame metadata (timestamp, size,
+fps, detections) that the stateful operator does not carry, so it is
+built from a per-frame prediction without cadence: `with_predictions`
+→ `detection_events`.
 """
 
 from __future__ import annotations
@@ -29,7 +35,6 @@ from ..functions.projections import (
     detection_event,
     detection_event_json,
 )
-from .session_state import sessionize_stream
 
 
 def decode_frame_stream(kafka_df: DataFrame, transport: str = "msgpack") -> DataFrame:
@@ -167,17 +172,9 @@ def detection_events(predicted: DataFrame, deterministic_ts=None) -> DataFrame:
     )
 
 
-def completion_events(
-    predicted: DataFrame, gap: int = 300, timeout_ms: int | None = 60_000
-) -> DataFrame:
-    """Output stream 2 (S9 payload): stateful session summaries.  Only
-    the four small columns enter the shuffle."""
-    slim = predicted.select("video_id", "frame_number", "has_fire", "fire_probability")
-    return sessionize_stream(slim, gap=gap, timeout_ms=timeout_ms)
-
-
 def completion_events_json(completions: DataFrame) -> DataFrame:
-    """S9 wire form (stream.py:305-311): nested stats payload."""
+    """S9 wire form (stream.py:305-311) of `fire_detection_stream`'s
+    session rows: nested stats payload."""
     payload = F.struct(
         F.col("video_id"),
         F.struct(

@@ -10,17 +10,18 @@ rates per query; no user code runs on the hot path at all.  The
 foreachBatch twin (`sinks.progress_file_sink`) exists for byte-shape
 parity; THIS is what production should use.
 
-Driver-side only and O(queries) per micro-batch; writes are atomic
-replaces, and row counts are monotone by construction (cumulative sums
-of engine-reported numInputRows).
+Driver-side only and O(queries) per micro-batch; writes go through the
+sinks' fsync'd atomic replace, and row counts are monotone by
+construction (cumulative sums of engine-reported numInputRows).
 """
 
 from __future__ import annotations
 
 import json
-import os
 
 from pyspark.sql.streaming import StreamingQueryListener
+
+from .sinks import _write_atomic
 
 
 class ProgressFileListener(StreamingQueryListener):
@@ -69,8 +70,5 @@ class ProgressFileListener(StreamingQueryListener):
     # -- file output --------------------------------------------------
 
     def _flush(self) -> None:
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"queries": sorted(self._state.values(),
-                                         key=lambda e: e["query_id"])}, f)
-        os.replace(tmp, self.path)  # atomic — readers never see a torn file
+        queries = sorted(self._state.values(), key=lambda e: e["query_id"])
+        _write_atomic(self.path, [json.dumps({"queries": queries})])

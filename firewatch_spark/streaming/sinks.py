@@ -70,7 +70,10 @@ def _seg_glob(output_dir: str, video_id: str) -> list[str]:
 
 
 def _write_atomic(path: str, lines: list[str]) -> None:
-    """fsync'd temp + os.replace — the one commit primitive here.
+    """fsync'd temp + os.replace — the one commit primitive of the
+    streaming file writers (these sinks and `progress.ProgressFileListener`).
+    Without the fsync a crash can land the rename before the data and
+    leave an empty or torn file behind.
 
     The temp lives at ``.tmp-<name>`` (PREFIX, not suffix): a suffixed
     ``<segment>.tmp`` would match the ``.seg-*`` glob, and a finalize
@@ -287,9 +290,6 @@ def progress_file_sink(progress_path: str, total_frames: dict[str, int]):
             # monotone guard (progress.py:125-131)
             entry["stream_progress"] = max(entry["stream_progress"], pct)
         state["videos"] = list(by_id.values())
-        tmp = progress_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, progress_path)
+        _write_atomic(progress_path, [json.dumps(state)])
 
     return sink

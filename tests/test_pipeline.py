@@ -96,13 +96,13 @@ def test_completion_stream_and_manifest_sink(spark, tmp_path):
 
 
 def test_completion_events_json_shape(spark, tmp_path):
-    stream = _frame_stream(spark, tmp_path)
-    predicted = pipeline.with_predictions(stream)
+    from firewatch_spark.streaming.stateful_pipeline import fire_detection_stream
+
+    stream = _frame_stream(spark, tmp_path).select("video_id", "frame_number")
     # NoTimeout: an armed processing-time timer keeps an availableNow
     # query alive forever, so the drain would never finish
-    comp = pipeline.completion_events_json(
-        pipeline.completion_events(predicted, gap=300, timeout_ms=None)
-    )
+    out = fire_detection_stream(stream, gap=300, timeout_ms=None)
+    comp = pipeline.completion_events_json(out.where("row_type = 'session'"))
     q = (
         comp.writeStream.format("memory")
         .queryName("comp_events")
@@ -130,6 +130,33 @@ def test_progress_file_sink_monotone(spark, tmp_path):
     sink(b2, 1)
     state2 = json.load(open(path))
     assert state2["videos"][0]["stream_progress"] == 100
+
+
+def test_progress_writers_fsync_each_applied_batch(spark, tmp_path, monkeypatch):
+    """Both progress writers commit through the fsync'd atomic replace:
+    one fsync per applied batch, none for a redelivered batch id the
+    sink skips, and no temp file left behind."""
+    from firewatch_spark.streaming.progress import ProgressFileListener
+
+    calls = []
+    real_fsync = os.fsync
+    monkeypatch.setattr(os, "fsync", lambda fd: (calls.append(fd), real_fsync(fd)))
+    path = str(tmp_path / "progress.json")
+    sink = sinks.progress_file_sink(path, {"v": 10})
+    batch = spark.createDataFrame([("v", 1)], "video_id string, frame_number long")
+    sink(batch, 0)
+    assert len(calls) == 1
+    sink(batch, 0)  # redelivered: skipped, nothing written
+    assert len(calls) == 1
+    sink(batch, 1)
+    assert len(calls) == 2
+    assert json.load(open(path))["videos"][0]["frames_done"] == 2
+
+    listener = ProgressFileListener(str(tmp_path / "listener.json"))
+    listener._flush()
+    assert len(calls) == 3
+    assert json.load(open(listener.path)) == {"queries": []}
+    assert sorted(os.listdir(tmp_path)) == ["listener.json", "progress.json"]
 
 
 def test_sinks_idempotent_under_batch_retry(spark, tmp_path):

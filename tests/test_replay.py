@@ -72,23 +72,20 @@ def test_session_output_invariant_to_chunk_count(spark, monkeypatch):
     need not be deterministic for the parity hash to hold — nor on the
     state-partition count the harness takes from the session.  Replays
     of the same frames through 1 chunk on 1 partition and 4 chunks on 5
-    partitions must emit identical completion rows."""
-    from firewatch_spark.streaming.session_state import sessionize_stream
+    partitions must emit identical completion rows.  The operator's
+    surrogate model makes the predictions a function of frame_number."""
+    from firewatch_spark.streaming.stateful_pipeline import fire_detection_stream
 
     gap = 10
     # two keys, multiple gap-separated sessions, plus a sentinel past
     # the last frame, in the same input, so every real session closes
     # via the gap rule
     frames = [
-        ("a", n, n % 3 == 0, float(n % 5) / 10)
-        for n in [*range(0, 20, 2), *range(100, 110), *range(400, 420, 3)]
+        ("a", n) for n in [*range(0, 20, 2), *range(100, 110), *range(400, 420, 3)]
     ] + [
-        ("b", n, False, 0.0)
-        for n in [*range(5, 40, 5), *range(300, 330, 2)]
-    ] + [("a", 10_000, False, 0.0), ("b", 10_000, False, 0.0)]
-    df = spark.createDataFrame(
-        frames, "video_id string, frame_number long, has_fire boolean, fire_probability double"
-    )
+        ("b", n) for n in [*range(5, 40, 5), *range(300, 330, 2)]
+    ] + [("a", 10_000), ("b", 10_000)]
+    df = spark.createDataFrame(frames, "video_id string, frame_number long")
 
     def run(n_chunks, parallelism):
         monkeypatch.setattr(
@@ -101,7 +98,8 @@ def test_session_output_invariant_to_chunk_count(spark, monkeypatch):
             seen.append(spark.conf.get("spark.sql.shuffle.partitions"))
             write_replay_chunks(df, f"{tmp}/in", n_chunks=n_chunks)
             stream = reader.schema(df.schema).parquet(f"{tmp}/in")
-            return sessionize_stream(stream, gap=gap, timeout_ms=None), lambda b: b
+            out = fire_detection_stream(stream, gap=gap, timeout_ms=None)
+            return out, lambda b: b.where("row_type = 'session'")
 
         out = replay(spark, feed)
         assert seen == [str(parallelism)]

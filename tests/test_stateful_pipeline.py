@@ -1,12 +1,16 @@
 """EP2 stateful operator: cadence counter + LOCF continuity across
-micro-batch boundaries (the SURVEY §7 risk-register case)."""
+micro-batch boundaries (the SURVEY §7 risk-register case) and across a
+stop/restart on the same checkpoint."""
 
 from pyspark.sql import functions as F
 
 from firewatch_spark import surrogate
 from firewatch_spark.operators.cadence import with_inference_cadence
 from firewatch_spark.streaming.replay import replay
-from firewatch_spark.streaming.stateful_pipeline import fire_detection_stream
+from firewatch_spark.streaming.stateful_pipeline import (
+    OUTPUT_SCHEMA,
+    fire_detection_stream,
+)
 from tests.conftest import rows
 
 
@@ -113,3 +117,67 @@ def test_frame_and_session_rows_consistent(spark):
     s1_frames = [r for r in frames if r["session_id"] == 1]
     assert s1["fire_count"] == sum(r["has_fire"] for r in s1_frames)
     assert s1["max_fire_probability"] == max(r["fire_probability"] for r in s1_frames)
+
+
+def test_restart_from_checkpoint_matches_uninterrupted_run(spark, tmp_path):
+    """Restart contract (SURVEY S13/W4/W6): chunk 0 runs to completion on
+    checkpoint C and the query stops; chunk 1 lands and a NEW query
+    resumes from C.  The union of both runs' rows must equal one
+    uninterrupted run over both chunks.  Video v restarts mid-cadence
+    (4 frames done, N=3): frames 4-5 carry frame 3's fire across the
+    restart, and v's first session (frames 0-8) spans it before frame
+    1000 closes it by gap."""
+    import os
+
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    chunks = [
+        pd.DataFrame({"video_id": ["v"] * 4 + ["w"] * 4,
+                      "frame_number": [0, 1, 2, 3, 0, 1, 2, 500]}),
+        pd.DataFrame({"video_id": ["v"] * 6 + ["w"] * 2,
+                      "frame_number": [4, 5, 6, 7, 8, 1000, 501, 2000]}),
+    ]
+    in_dir, ckpt, sink = (str(tmp_path / d) for d in ("in", "ckpt", "sink"))
+    os.mkdir(in_dir)
+    for i, chunk in enumerate(chunks):
+        pq.write_table(pa.Table.from_pandas(chunk), f"{in_dir}/c_{i}.parquet")
+        stream = spark.readStream.schema("video_id string, frame_number long").parquet(
+            in_dir
+        )
+        out = fire_detection_stream(stream, gap=300, inference_every_n=3, timeout_ms=None)
+        q = (
+            out.writeStream.foreachBatch(
+                lambda b, bid, i=i: b.write.parquet(f"{sink}/run={i}/batch_id={bid}")
+            )
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            assert q.awaitTermination(120), f"run {i} did not drain"
+        finally:
+            q.stop()
+
+    restarted = spark.read.parquet(sink)
+    # each run saw only its own chunk's frames
+    run_frames = rows(
+        restarted.where("row_type = 'frame'").groupBy("run").count(), "run"
+    )
+    assert [(r["run"], r["count"]) for r in run_frames] == [(0, 8), (1, 8)]
+
+    def table(df):
+        return sorted(map(tuple, df.select(*OUTPUT_SCHEMA.names).collect()), key=repr)
+
+    whole = _run(spark, pd.concat(chunks, ignore_index=True), every_n=3, n_files=1)
+    assert table(restarted) == table(whole)
+
+    v = {r["frame_number"]: r for r in rows(restarted.where(
+        "row_type = 'frame' AND video_id = 'v'"))}
+    assert [v[f]["is_inference"] for f in (3, 4, 5, 6)] == [True, False, False, True]
+    assert v[4]["has_fire"] and v[4]["fire_probability"] == v[3]["fire_probability"]
+    (s1,) = rows(restarted.where(
+        "row_type = 'session' AND video_id = 'v' AND session_id = 1"))
+    assert (s1["first_seq"], s1["last_seq"], s1["closed_by"]) == (0, 8, "gap")
+    assert s1["fire_count"] == 3  # frame 3 plus its two carried frames

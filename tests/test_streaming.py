@@ -11,7 +11,7 @@ from firewatch_spark.operators.sessions import session_stats, with_session_id
 from firewatch_spark.sources import frames as frames_src
 from firewatch_spark.sources import kafka as kafka_src
 from firewatch_spark.sources import multimodal
-from firewatch_spark.streaming.session_state import sessionize_stream
+from firewatch_spark.streaming import stateful_pipeline as sp
 from tests.conftest import rows
 
 GAP = 300
@@ -30,7 +30,8 @@ _RUN_COUNTER = iter(range(1000))
 def _run_stream(
     spark, tmp_path, timeout_ms=None, wait_after=0.0, trigger=None, until=None
 ):
-    """Run the sessionizer over the fixture stream.  With a
+    """Run the EP2 stateful operator (every frame inferred by the
+    surrogate) over the fixture stream; keep its session rows.  With a
     processing-time trigger, ``until(rows) -> bool`` polls the memory
     sink and stops as soon as it holds (deadline ``wait_after``) — a
     fixed sleep is flaky under suite-wide CPU contention."""
@@ -42,7 +43,9 @@ def _run_stream(
         .option("maxFilesPerTrigger", 1)
         .parquet(data_dir)
     )
-    out = sessionize_stream(_with_pred(stream), gap=GAP, timeout_ms=timeout_ms)
+    out = sp.fire_detection_stream(
+        stream.select("video_id", "frame_number"), gap=GAP, timeout_ms=timeout_ms
+    ).where("row_type = 'session'")
     kwargs = {"availableNow": True} if trigger is None else {"processingTime": trigger}
     query = (
         out.writeStream.format("memory")
@@ -95,7 +98,7 @@ def test_streaming_gap_sessions_match_batch(spark, tmp_path):
 
 
 class _FakeGroupState:
-    """GroupState stand-in: the calls both stateful operators make."""
+    """GroupState stand-in: the calls the stateful operator makes."""
 
     def __init__(self):
         self.v, self.hasTimedOut, self.timeout_ms = None, False, None
@@ -118,17 +121,14 @@ class _FakeGroupState:
         self.timeout_ms = ms
 
 
-def test_both_operators_share_one_session_fold():
-    """`_session_fn` and `_pipeline_fn` (with every frame inferred and a
-    model that returns the fixture's predictions) run the same session
-    fold: over a cross-batch gap, an in-batch out-of-order row and a
-    jump of exactly `gap`, they emit the same gap-closed row and hold
-    the same six session fields; a timeout then flushes the open
-    session from state (W4) and removes it.  No Spark needed."""
+def test_pipeline_fn_session_fold():
+    """`_pipeline_fn` with every frame inferred by a model that returns
+    the fixture's predictions: over a cross-batch gap, an in-batch
+    out-of-order row and a jump of exactly `gap`, it emits one
+    gap-closed row and holds the open session's six fields; a timeout
+    then flushes the open session from state (W4) and removes it.  No
+    Spark needed."""
     import pandas as pd
-
-    from firewatch_spark.streaming import session_state as ss
-    from firewatch_spark.streaming import stateful_pipeline as sp
 
     gap, timeout_ms = 10, 1_000
     batches = [
@@ -151,43 +151,43 @@ def test_both_operators_share_one_session_fold():
         return (truth.loc[seq, "has_fire"].to_numpy(bool),
                 truth.loc[seq, "fire_probability"].to_numpy(float))
 
-    def drive(fn, state, frames):
-        return [r for pdf in fn(("vid",), iter([frames]), state)
+    fn, gs = sp._pipeline_fn(gap, 1, timeout_ms, predict_fn), _FakeGroupState()
+
+    def drive(frames):
+        return [r for pdf in fn(("vid",), iter([frames]), gs)
                 for r in pdf.to_dict("records")]
 
-    session_fn, session_gs = ss._session_fn(gap, timeout_ms), _FakeGroupState()
-    pipeline_fn = sp._pipeline_fn(gap, 1, timeout_ms, predict_fn)
-    pipeline_gs = _FakeGroupState()
-    session_out, pipeline_out = [], []
+    out = []
     for b in batches:
-        session_out += drive(session_fn, session_gs, b.copy())
-        pipeline_out += drive(pipeline_fn, pipeline_gs, b[["frame_number"]].copy())
+        out += drive(b[["frame_number"]].copy())
 
-    def sessions(out):
-        return [{c: r[c] for c in ss.OUTPUT_SCHEMA.names}
-                for r in out if r.get("row_type", "session") == "session"]
+    session_cols = ["row_type", "video_id", "session_id", "total_frames",
+                    "fire_count", "max_fire_probability", "first_seq",
+                    "last_seq", "closed_by"]
 
-    closed = {"video_id": "vid", "session_id": 1, "total_frames": 3,
-              "fire_count": 2, "max_fire_probability": 0.9, "first_seq": 1,
-              "last_seq": 3, "closed_by": "gap"}
-    assert sessions(session_out) == sessions(pipeline_out) == [closed]
-    frames = [r for r in pipeline_out if r["row_type"] == "frame"]
+    def sessions(rows_):
+        return [{c: r[c] for c in session_cols}
+                for r in rows_ if r["row_type"] == "session"]
+
+    assert sessions(out) == [
+        {"row_type": "session", "video_id": "vid", "session_id": 1,
+         "total_frames": 3, "fire_count": 2, "max_fire_probability": 0.9,
+         "first_seq": 1, "last_seq": 3, "closed_by": "gap"}
+    ]
+    frames = [r for r in out if r["row_type"] == "frame"]
     assert [(r["frame_number"], r["session_id"]) for r in frames] == [
         (1, 1), (2, 1), (3, 1), (20, 2), (21, 2), (31, 2)
     ]
-    open_session = (2, 20, 31, 3, 1, 0.7)
-    assert session_gs.v == pipeline_gs.v[:6] == open_session
-    assert session_gs.timeout_ms == pipeline_gs.timeout_ms == timeout_ms
+    assert gs.v[:6] == (2, 20, 31, 3, 1, 0.7)  # the open session
+    assert gs.timeout_ms == timeout_ms
 
-    for fn, gs in ((session_fn, session_gs), (pipeline_fn, pipeline_gs)):
-        gs.hasTimedOut = True
-        (row,) = sessions(drive(fn, gs, pd.DataFrame()))
-        assert row == {
-            "video_id": "vid", "session_id": 2, "total_frames": 3,
-            "fire_count": 1, "max_fire_probability": 0.7, "first_seq": 20,
-            "last_seq": 31, "closed_by": "timeout",
-        }
-        assert not gs.exists
+    gs.hasTimedOut = True
+    assert sessions(drive(pd.DataFrame())) == [
+        {"row_type": "session", "video_id": "vid", "session_id": 2,
+         "total_frames": 3, "fire_count": 1, "max_fire_probability": 0.7,
+         "first_seq": 20, "last_seq": 31, "closed_by": "timeout"}
+    ]
+    assert not gs.exists
 
 
 def test_streaming_timeout_flushes_open_sessions(spark, tmp_path):
