@@ -356,6 +356,41 @@ def make_yolo_backend(
 # Applying a backend to a DataFrame.
 
 
+def _with_scalar_prediction(
+    df: DataFrame,
+    predict_batch: Callable[[pd.DataFrame], pd.DataFrame],
+    key: str,
+    key_col: Column,
+    width_col: str,
+    height_col: str,
+    out_col: str,
+) -> DataFrame:
+    """Scalar pandas UDF returning the prediction struct: ONLY the three
+    input columns cross the Arrow boundary (``predict_batch`` sees them
+    as ``key``, ``width``, ``height``); every passthrough column stays
+    JVM-side untouched.  (The previous mapInPandas wrapper round-tripped
+    the whole row through Python — measured ~2× slower at sf0.1.)"""
+
+    def _predict(key_s, width_s, height_s):
+        return predict_batch(
+            pd.DataFrame({key: key_s, "width": width_s, "height": height_s})
+        )
+
+    # manual annotations: `from __future__ import annotations` would
+    # stringify inline hints and break pandas_udf signature inference
+    _predict.__annotations__ = {
+        "key_s": pd.Series,
+        "width_s": pd.Series,
+        "height_s": pd.Series,
+        "return": pd.DataFrame,
+    }
+    udf = F.pandas_udf(_predict, returnType=PREDICTION_SCHEMA)
+    return df.withColumn(
+        out_col,
+        udf(key_col, F.col(width_col).cast("long"), F.col(height_col).cast("long")),
+    )
+
+
 def with_frame_prediction(
     df: DataFrame,
     backend: ModelBackend,
@@ -372,31 +407,9 @@ def with_frame_prediction(
     (10k) the autocast-at-batch≥16 gate in make_densenet_backend is ON
     for every full batch, which IS the reference's deferred batched-
     inference win (docs/PERFORMANCE.md:148-150)."""
-    predict_batch = backend.predict_batch
-
-    def _predict(frame_s, width_s, height_s):
-        return predict_batch(
-            pd.DataFrame(
-                {"frame_data": frame_s, "width": width_s, "height": height_s}
-            )
-        )
-
-    _predict.__annotations__ = {
-        "frame_s": pd.Series,
-        "width_s": pd.Series,
-        "height_s": pd.Series,
-        "return": pd.DataFrame,
-    }
-    from pyspark.sql.functions import pandas_udf
-
-    udf = pandas_udf(_predict, returnType=PREDICTION_SCHEMA)
-    return df.withColumn(
-        out_col,
-        udf(
-            F.col(frame_col),
-            F.col(width_col).cast("long"),
-            F.col(height_col).cast("long"),
-        ),
+    return _with_scalar_prediction(
+        df, backend.predict_batch, "frame_data", F.col(frame_col),
+        width_col, height_col, out_col,
     )
 
 
@@ -422,37 +435,9 @@ def with_prediction(
         return df.withColumn(
             out_col, backend.column_expr(F.col(seq), F.col(width), F.col(height))
         )
-
-    predict_batch = backend.predict_batch
-
-    # Scalar pandas UDF returning the prediction struct: ONLY the three
-    # key columns cross the Arrow boundary; every passthrough column
-    # stays JVM-side untouched.  (The previous mapInPandas wrapper
-    # round-tripped the whole row through Python — measured ~2× slower
-    # at sf0.1.)
-    def _predict(seq_s, width_s, height_s):
-        return predict_batch(
-            pd.DataFrame({"seq": seq_s, "width": width_s, "height": height_s})
-        )
-
-    # manual annotations: `from __future__ import annotations` would
-    # stringify inline hints and break pandas_udf signature inference
-    _predict.__annotations__ = {
-        "seq_s": pd.Series,
-        "width_s": pd.Series,
-        "height_s": pd.Series,
-        "return": pd.DataFrame,
-    }
-    from pyspark.sql.functions import pandas_udf
-
-    udf = pandas_udf(_predict, returnType=PREDICTION_SCHEMA)
-    return df.withColumn(
-        out_col,
-        udf(
-            F.col(seq).cast("long"),
-            F.col(width).cast("long"),
-            F.col(height).cast("long"),
-        ),
+    return _with_scalar_prediction(
+        df, backend.predict_batch, "seq", F.col(seq).cast("long"),
+        width, height, out_col,
     )
 
 
@@ -504,8 +489,6 @@ def with_prediction_iter(
     serves the partition (asserted in tests/test_models.py)."""
     from typing import Iterator, Tuple
 
-    from pyspark.sql.functions import pandas_udf
-
     _predict_iter = make_iter_predict_fn(backend_name)
     # manual annotations: `from __future__ import annotations` would
     # stringify inline hints and break pandas_udf eval-type inference
@@ -513,7 +496,7 @@ def with_prediction_iter(
         "it": Iterator[Tuple[pd.Series, pd.Series, pd.Series]],
         "return": Iterator[pd.DataFrame],
     }
-    udf = pandas_udf(_predict_iter, returnType=PREDICTION_SCHEMA)
+    udf = F.pandas_udf(_predict_iter, returnType=PREDICTION_SCHEMA)
     return df.withColumn(
         out_col,
         udf(

@@ -60,7 +60,7 @@ HEX = "0123456789abcdef"
 MAX_BUCKET = 64
 
 
-from .util import ensure_parallelism, make_checkpointer  # noqa: E402  (shared fan-out guard)
+from .util import ensure_parallelism, materialize  # noqa: E402  (shared fan-out guard)
 
 
 def tokens(text: Column) -> Column:
@@ -436,7 +436,7 @@ def verify_candidates(
     # join); materialize the small capped pair set once instead of
     # re-running its LSH lineage per reference (same pattern as
     # near_dup_clusters' edge checkpoint)
-    cand = cand.select("doc_a", "doc_b").localCheckpoint()
+    cand = materialize(cand.select("doc_a", "doc_b"))
     ids = (
         cand.select(F.col("doc_a").alias(id_col))
         .union(cand.select(F.col("doc_b").alias(id_col)))
@@ -469,7 +469,6 @@ def near_dup_clusters(
     docs: DataFrame,
     id_col: str = "doc_id",
     max_iter: int = 20,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Connected components over near-dup edges: every doc gets
     ``cluster_id`` = the smallest doc id reachable through the pair
@@ -491,8 +490,8 @@ def near_dup_clusters(
     both shuffle on ids, never materialize components in one task.
     Per-round lineage truncation (the classic iterative-algorithm
     necessity; without it round k replays rounds 1..k-1) comes from
-    ``make_checkpointer``: default ``localCheckpoint`` for local runs,
-    or pass ``checkpoint_dir`` for reliable ``checkpoint()`` — local
+    ``util.materialize``: a local checkpoint by default, a reliable
+    one when the deployment sets ``spark.checkpoint.dir`` — local
     blocks die with their executor, which a 1000-node run WILL see;
     the swap changes no logic (both paths are label-identity-tested).
     Iterative ⇒ not single-query SQL-expressible; correctness is
@@ -500,12 +499,11 @@ def near_dup_clusters(
     random graphs)."""
     if max_iter < 1:
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
-    ckpt = make_checkpointer(docs.sparkSession, checkpoint_dir)
     edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     edges = edges.union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct()
-    edges = ckpt(edges)
+    edges = materialize(edges)
 
     labels = docs.select(F.col(id_col).alias("id"), F.col(id_col).alias("label"))
 
@@ -529,7 +527,7 @@ def near_dup_clusters(
                 .alias("_chg"),
             )
         )
-        labels = ckpt(labels)
+        labels = materialize(labels)
         n_changed = labels.agg(F.sum("_chg")).first()[0]
         return labels.drop("_chg"), n_changed
 
@@ -560,7 +558,6 @@ def near_dup_clusters_star(
     docs: DataFrame,
     id_col: str = "doc_id",
     max_iter: int = 20,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Connected components via alternating large-star / small-star
     contraction (Kiveris et al., "Connected Components in MapReduce and
@@ -592,14 +589,13 @@ def near_dup_clusters_star(
 
     Scale: each round is two groupBy-min + two equi-joins shuffling
     only (id, id) pairs; per-round lineage truncation via
-    ``make_checkpointer`` (reliable ``checkpoint_dir`` for clusters,
-    as near_dup_clusters).  Convergence = edge-set fixpoint, detected
+    ``util.materialize`` (reliable when ``spark.checkpoint.dir`` is
+    set, as near_dup_clusters).  Convergence = edge-set fixpoint, detected
     with one symmetric-difference count per round.  Iterative ⇒ not
     single-query SQL-expressible; pinned against the same union-find
     and transitive-closure oracles as the propagation twin."""
     if max_iter < 1:
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
-    ckpt = make_checkpointer(docs.sparkSession, checkpoint_dir)
     e0 = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
     edges = (
         e0.select(
@@ -608,7 +604,7 @@ def near_dup_clusters_star(
         .where(F.col("hi") != F.col("lo"))
         .distinct()
     )
-    edges = ckpt(edges)
+    edges = materialize(edges)
 
     def one_round(edges):
         # large-star over the symmetric view
@@ -626,7 +622,7 @@ def near_dup_clusters_star(
             .where(F.col("hi") != F.col("lo"))
             .distinct()
         )
-        large = ckpt(large)
+        large = materialize(large)
         # small-star directly on the canonical orientation
         smins = large.groupBy("hi").agg(F.min("lo").alias("m"))
         rewired = (
@@ -635,7 +631,7 @@ def near_dup_clusters_star(
             .select(F.col("lo").alias("hi"), F.col("m").alias("lo"))
         )
         center = smins.select(F.col("hi"), F.col("m").alias("lo"))
-        new_edges = ckpt(rewired.union(center).distinct())
+        new_edges = materialize(rewired.union(center).distinct())
         n_changed = (
             new_edges.exceptAll(edges).union(edges.exceptAll(new_edges)).count()
         )
@@ -972,7 +968,7 @@ def video_frame_dedup(
         # branches' exchanges differ by aliases, so nothing is reused).
         # Lazy: the narrow (video, hash) table materializes at first
         # use inside the timed action.
-        .localCheckpoint(eager=False)
+        .transform(materialize, eager=False)
     )
     sizes = ph.groupBy(video_col).agg(F.count(F.lit(1)).alias("n"))
     cap_w = Window.partitionBy("phash").orderBy(video_col)
@@ -980,7 +976,7 @@ def video_frame_dedup(
         ph.withColumn("_rn", F.row_number().over(cap_w))
         .filter(F.col("_rn") <= max_bucket)
         .drop("_rn")
-        .localCheckpoint(eager=False)  # both sides of the bucket join
+        .transform(materialize, eager=False)  # both sides of the bucket join
     )
     shared = (
         capped.select(F.col(video_col).alias("video_a"), "phash")
@@ -1059,7 +1055,7 @@ def video_segment_dedup(
         # (the before-plan duplicates the chain; aliases block exchange
         # reuse).  Lazy: the narrow (video, fi, hash) table materializes
         # at first use inside the timed action.
-        .localCheckpoint(eager=False)
+        .transform(materialize, eager=False)
     )
     a = capped.select(
         F.col(video_col).alias("video_a"), F.col("fi").alias("ia"), "phash"
@@ -1218,7 +1214,7 @@ def incremental_dedup(
         .join(banded(index_docs, "doc_b"), ["band_idx", "band_hash"])
         .select("doc_a", "doc_b")
         .distinct()
-        .localCheckpoint()
+        .transform(materialize)
     )
     idx_md5 = index_docs.select(
         F.md5(F.col(text_col).cast("binary")).alias("content_md5")
@@ -1513,7 +1509,7 @@ def incremental_dedup_indexed(
         # artifact beside the index and this is a plain read.
         new_banded = bloom_prefilter_bands(
             new_banded,
-            band_bloom_bits(index, bloom_m, bloom_k).localCheckpoint(),
+            materialize(band_bloom_bits(index, bloom_m, bloom_k)),
             bloom_m,
             bloom_k,
         )
@@ -1530,7 +1526,7 @@ def incremental_dedup_indexed(
         )
         .select("doc_a", "doc_b")
         .distinct()
-        .localCheckpoint()
+        .transform(materialize)
     )
     # every doc's md5 is present thanks to the carrier rows — including
     # docs the build-time cap evicted from all band buckets
@@ -2116,7 +2112,6 @@ def corpus_overlap_kmv(
     group_col: str = "source",
     text_col: str = "text",
     id_col: str = "doc_id",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Pairwise corpus-overlap estimation between sources with a
     bottom-k (KMV) sketch — the "how much does dump N share with dump
@@ -2170,8 +2165,7 @@ def corpus_overlap_kmv(
     # self-join sorts raw lineage (measured 1.59× linear at the 25×
     # probe before this cut).  Production stores this table anyway —
     # it IS the per-source shingle index.
-    ckpt = make_checkpointer(docs.sparkSession, checkpoint_dir)
-    sh = ckpt(
+    sh = materialize(
         docs.select(
             F.col(group_col).alias("g"),
             F.explode(F.expr(f"array_distinct({sh_expr})")).alias("h"),

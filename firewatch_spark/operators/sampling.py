@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .util import materialize
+
 
 def split_by_hash(
     df: DataFrame,
@@ -604,14 +606,13 @@ def dsir_importance_sample(
     text_col: str = "text",
     id_col: str = "doc_id",
     n_buckets: int = DSIR_BUCKETS,
-    materialize: bool = False,
 ) -> DataFrame:
     """Select the top ``keep_frac`` of the pool by DSIR importance —
     the selection operator the quality_classifier lacks (it scores
     intrinsically; this selects toward a TARGET distribution).
 
-    ``materialize`` localCheckpoints the per-doc importance table
-    (3 ints per doc) before the rank tail — the tail references it
+    The per-doc importance table (3 ints per doc) is cut with
+    ``util.materialize`` before the rank tail — the tail references it
     three times (stats row, bucket counts, final rank join), and
     uncut each reference replays the whole two-gram-explode DSIR
     chain (guide §2.4; the registered query's plan was 104 Exchanges
@@ -633,9 +634,7 @@ def dsir_importance_sample(
     column concentrates tasks — acceptable because importance is a
     Σ of thousands of lr terms (CLT-spread), and AQE re-splits hot
     buckets.  Output: kept docs with (n_grams, importance, rank)."""
-    imp = dsir_importance(pool, target, text_col, id_col, n_buckets)
-    if materialize:
-        imp = imp.localCheckpoint()
+    imp = materialize(dsir_importance(pool, target, text_col, id_col, n_buckets))
     stats = imp.agg(
         F.max("importance").alias("_max"),
         F.min("importance").alias("_min"),

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .util import ensure_parallelism
+from .util import ensure_parallelism, materialize
 
 HEX = "0123456789abcdef"
 SCALE = 1_000_000  # floor(x * 1e6) — exact int64 components
@@ -335,9 +335,9 @@ def embedding_near_dup(
     # r13 (guide §2.4): the self-join consumes b TWICE and the planner
     # replays the scale+norm+bucket projection per side (no exchange to
     # reuse — the bucket join's exchanges differ by output aliases).
-    # Lazy localCheckpoint computes it once at first use, inside the
+    # A lazy materialize computes it once at first use, inside the
     # timed action whichever bench clock applies.
-    b = b.localCheckpoint(eager=False)
+    b = materialize(b, eager=False)
     a = b.select(
         F.col(id_col).alias("doc_a"), "bucket",
         F.col("iv").alias("aiv"), F.col("n2").alias("an2"),
@@ -384,8 +384,8 @@ def cell_near_dup(
     # otherwise replay the scale+norm projection AND the cells join
     # (and `cells` is typically a full ivf_assign argmin pass).  Lazy:
     # materializes at first use inside the timed action.
-    b = b.join(cells.select(id_col, "centroid_id"), id_col).localCheckpoint(
-        eager=False
+    b = materialize(
+        b.join(cells.select(id_col, "centroid_id"), id_col), eager=False
     )
     a = b.select(
         F.col(id_col).alias("doc_a"), "centroid_id",
@@ -501,7 +501,6 @@ def ivf_train(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Lloyd's k-means refinement of the md5-sample seed centroids —
     the "production pipeline would run k-means here" step the
@@ -525,15 +524,12 @@ def ivf_train(
     Iterative ⇒ pinned against a Python Lloyd reference in tests
     (like near_dup_clusters' union-find), not a SQL oracle.
 
-    ``checkpoint_dir`` swaps the per-iteration localCheckpoint for
-    reliable ``checkpoint()`` (see util.make_checkpointer) — the
-    executor-loss-safe posture a 1000-node run needs; both paths
+    Each iteration is cut by ``util.materialize``: a local checkpoint
+    by default, a reliable one when ``spark.checkpoint.dir`` is set —
+    the executor-loss-safe posture a 1000-node run needs; both modes
     produce identical centroids (tested)."""
-    from .util import make_checkpointer
-
-    ckpt = make_checkpointer(corpus.sparkSession, checkpoint_dir)
-    cents = ckpt(ivf_centroids(corpus, k, id_col, vec_col))
-    a = ckpt(
+    cents = materialize(ivf_centroids(corpus, k, id_col, vec_col))
+    a = materialize(
         with_scaled_vec(ensure_parallelism(corpus), vec_col)
         .select(id_col, "iv")
         # scaled vectors reused every iteration
@@ -565,7 +561,7 @@ def ivf_train(
                 "centroid_id", F.expr("transform(z, t -> t.m)").alias("new_civ")
             )
         )
-        cents = ckpt(
+        cents = materialize(
             cents.join(means, "centroid_id", "left")
             .select(
                 "centroid_id", F.coalesce("new_civ", "civ").alias("civ")
@@ -761,7 +757,7 @@ def pq_train(
         cb = (
             cb.join(means, ["s", "j"], "left")
             .select("s", "j", F.coalesce("_new", "csub").alias("csub"))
-            .localCheckpoint()  # m·ks rows — tiny, broadcast next round
+            .transform(materialize)  # m·ks rows — tiny, broadcast next round
         )
     return cb
 
@@ -835,13 +831,13 @@ def ivf_pq_topk(
     # join — uncut, each consumer replays its upstream corpus pass
     # (the centroid sample is a full corpus TakeOrdered; the probe
     # list a corpus filter + argmin).  Both tables are tiny (k rows /
-    # queries × nprobe rows); lazy localCheckpoint computes each once
+    # queries × nprobe rows); a lazy materialize computes each once
     # at first use WITHIN the timed action — honest under either bench
     # clock convention.
-    cents = ivf_centroids(corpus, k_centroids, id_col, vec_col).localCheckpoint(
-        eager=False
+    cents = materialize(
+        ivf_centroids(corpus, k_centroids, id_col, vec_col), eager=False
     )
-    res = ivf_residuals(corpus, cents, id_col, vec_col).localCheckpoint()
+    res = materialize(ivf_residuals(corpus, cents, id_col, vec_col))
     dim = _residual_dim(res)  # ONE probe job, threaded through (ADVICE r7 #4)
     cb = pq_train(res, m, ks, train_iters, id_col, dim)
     codes = pq_encode(res, cb, m, id_col, dim)
@@ -865,7 +861,7 @@ def ivf_pq_topk(
             "centroid_id",
             F.zip_with("iv", "civ", lambda x, c: x - c).alias("rs"),
         )
-        .localCheckpoint(eager=False)  # feeds the LUT and the candidate join
+        .transform(materialize, eager=False)  # feeds the LUT and the candidate join
     )
     lut = (
         _explode_subvectors(q_probe, m, sub_dim, ["query_id", "centroid_id"])

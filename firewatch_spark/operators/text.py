@@ -19,7 +19,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .dedup import word_shingles
-from .util import ensure_parallelism
+from .util import ensure_parallelism, materialize
 
 # Tiny per-language profile word lists.  Real systems use char-n-gram
 # models; the *operator shape* (profile scoring + argmax) is identical.
@@ -731,7 +731,6 @@ def bpe_merge_k(
     text_col: str = "text",
     id_col: str = "doc_id",
     joiner: str = "_",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """K rounds of `bpe_merge_round` — tokenizer INDUCTION, not just
     one merge (VERDICT r5 #5): each round finds the corpus-argmax
@@ -742,19 +741,16 @@ def bpe_merge_k(
     Output per doc: (doc_id, n_merges = total across rounds,
     new_text = the K-times-merged text).
 
-    Each round materializes via `make_checkpointer` (localCheckpoint,
-    or reliable `checkpoint()` when `checkpoint_dir` is given): a
-    round references its input three times (bigram count, positions,
+    Each round materializes via `util.materialize` (a local
+    checkpoint, or a reliable one when `spark.checkpoint.dir` is
+    set): a round references its input three times (bigram count, positions,
     rebuild), so K lazily-stacked rounds would re-substitute the
     rebuild expression ~3^K times into one plan — the same
     substitution-duplication codegen trap SCALE.md documents for the
     repetition filters.  K rounds = K jobs, each linear in corpus
     tokens."""
-    from .util import make_checkpointer
-
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    ckpt = make_checkpointer(df.sparkSession, checkpoint_dir)
     cur = df.select(
         F.col(id_col), F.col(text_col), F.lit(0).cast("long").alias("_acc")
     )
@@ -763,7 +759,7 @@ def bpe_merge_k(
         # back (r13): the join shuffled the rebuilt corpus text once
         # more per round
         out = bpe_merge_round(cur, text_col, id_col, joiner, carry=("_acc",))
-        cur = ckpt(
+        cur = materialize(
             out.select(
                 id_col,
                 F.col("new_text").alias(text_col),
@@ -783,7 +779,6 @@ def bpe_apply(
     text_col: str = "text",
     id_col: str = "doc_id",
     joiner: str = "_",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Apply a TRAINED merge list to a corpus — the tokenizer-APPLY
     half of the BPE pair (`bpe_vocab_induction` is the TRAIN half):
@@ -798,10 +793,7 @@ def bpe_apply(
     `bpe_merge_round(top=...)` machinery (gaps-and-islands parity,
     per-round materialization).  len(merges) linear jobs; output
     (doc_id, n_merges, new_text)."""
-    from .util import make_checkpointer
-
-    ckpt = make_checkpointer(df.sparkSession, checkpoint_dir)
-    cur = ckpt(
+    cur = materialize(
         df.select(
             F.col(id_col), F.col(text_col), F.lit(0).cast("long").alias("_acc")
         )
@@ -816,7 +808,7 @@ def bpe_apply(
         out = bpe_merge_round(
             cur, text_col, id_col, joiner, top=top, carry=("_acc",)
         )
-        cur = ckpt(
+        cur = materialize(
             out.select(
                 id_col,
                 F.col("new_text").alias(text_col),
@@ -876,7 +868,6 @@ def bpe_vocab_induction(
     text_col: str = "text",
     id_col: str = "doc_id",
     joiner: str = "_",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """BPE tokenizer induction in its PRODUCTION form (VERDICT r6 #8):
     merge rounds run until the vocabulary reaches ``vocab_target``
@@ -897,14 +888,11 @@ def bpe_vocab_induction(
     Per live round: one O(1)-row vocabulary probe, one bigram argmax
     (materialized once and shared with the merge via
     `bpe_merge_round(top=...)`), one merge job — all linear in corpus
-    tokens, with per-round materialization via `make_checkpointer`
+    tokens, with per-round materialization via `util.materialize`
     against the 3^K substitution trap (see `bpe_merge_k`)."""
-    from .util import make_checkpointer
-
     if max_rounds < 0:
         raise ValueError(f"max_rounds must be >= 0, got {max_rounds}")
-    ckpt = make_checkpointer(df.sparkSession, checkpoint_dir)
-    cur = ckpt(
+    cur = materialize(
         df.select(
             F.col(id_col), F.col(text_col), F.lit(0).cast("long").alias("_acc")
         )
@@ -912,7 +900,7 @@ def bpe_vocab_induction(
     for _ in range(max_rounds):
         if corpus_vocab_size(cur, text_col) >= vocab_target:
             break
-        top = top_adjacent_pair(cur, text_col).localCheckpoint()
+        top = materialize(top_adjacent_pair(cur, text_col))
         top_rows = top.collect()
         if not top_rows or top_rows[0]["pair_count"] < min_freq:
             break
@@ -922,7 +910,7 @@ def bpe_vocab_induction(
         out = bpe_merge_round(
             cur, text_col, id_col, joiner, top=top, carry=("_acc",)
         )
-        cur = ckpt(
+        cur = materialize(
             out.select(
                 id_col,
                 F.col("new_text").alias(text_col),
@@ -1508,7 +1496,6 @@ def interpolated_lm_score(
     lam_den: int = 10,
     text_col: str = "text",
     id_col: str = "doc_id",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Jelinek–Mercer interpolated bigram→unigram LM scoring — one more
     rung from `bigram_lm_score` toward the CCNet perplexity filter
@@ -1554,19 +1541,19 @@ def interpolated_lm_score(
     )
     # pairs feeds THREE consumers (the bigram vocabulary, its prefix
     # marginals via bg_tf, and the scoring join's probe side) and
-    # bg_tf two — cut the lineage once each (make_checkpointer: local
-    # for tests, reliable dir for clusters).  Unmaterialized, Spark
-    # (a) recomputes the explode per branch and (b) static-estimates
-    # the bigram vocabulary under the broadcast threshold and builds a
-    # corpus-scale driver hash relation: the 25× probe measured the
-    # uncut chain at 173–570 s (load-sensitive, GC-bound) vs ~115 s
-    # cut, and the cut makes downstream join strategy follow REAL
-    # post-materialization stats instead of file-size guesses.
-    from .util import make_checkpointer
-
-    ckpt = make_checkpointer(df.sparkSession, checkpoint_dir)
-    pairs = ckpt(df.select(F.col(id_col), F.explode(F.expr(pair_arr)).alias("bg")))
-    bg_tf = ckpt(pairs.groupBy("bg").agg(F.count(F.lit(1)).alias("c_bg")))
+    # bg_tf two — cut the lineage once each (util.materialize: local
+    # for tests, reliable when spark.checkpoint.dir is set).
+    # Unmaterialized, Spark (a) recomputes the explode per branch and
+    # (b) static-estimates the bigram vocabulary under the broadcast
+    # threshold and builds a corpus-scale driver hash relation: the 25×
+    # probe measured the uncut chain at 173–570 s (load-sensitive,
+    # GC-bound) vs ~115 s cut, and the cut makes downstream join
+    # strategy follow REAL post-materialization stats instead of
+    # file-size guesses.
+    pairs = materialize(
+        df.select(F.col(id_col), F.explode(F.expr(pair_arr)).alias("bg"))
+    )
+    bg_tf = materialize(pairs.groupBy("bg").agg(F.count(F.lit(1)).alias("c_bg")))
     prev_tf = (
         bg_tf.withColumn("prev", F.expr("split_part(bg, ' ', 1)"))
         .groupBy("prev")

@@ -85,24 +85,14 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
     return df.repartition(target)
 
 
-def make_checkpointer(spark, checkpoint_dir: str | None = None):
-    """Lineage-truncation strategy for iterative operators
-    (near_dup_clusters, ivf_train): returns ``df -> df`` that cuts the
-    plan each round.
-
-    * ``checkpoint_dir is None`` → ``localCheckpoint()``: zero-config,
-      right for local/test runs — but its blocks live in executor
-      storage and die with the executor, so a 1000-node run losing one
-      machine mid-iteration fails the job.
-    * a path → ``sc.setCheckpointDir`` once + reliable
-      ``df.checkpoint()``: blocks persist to the (HDFS/S3) dir and
-      survive executor loss — the 100 TB posture SCALE.md's iterative
-      section requires.  The swap changes NO logic: both cut lineage
-      and both return a materialized DataFrame (reliable checkpoint is
-      eager since Spark 3.x only via action; ``.checkpoint()`` here is
-      eager by default).
-    """
-    if checkpoint_dir is None:
-        return lambda df: df.localCheckpoint()
-    spark.sparkContext.setCheckpointDir(checkpoint_dir)
-    return lambda df: df.checkpoint()
+def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
+    """The one lineage cut in the package (``df.transform(materialize)``
+    inside a method chain).  With no checkpoint dir on the SparkContext
+    (the default) it is a local checkpoint: zero-config, but its blocks
+    die with their executor.  With one set (``spark.checkpoint.dir`` at
+    launch, or ``SparkContext.setCheckpointDir``) it is a reliable
+    checkpoint whose blocks survive executor loss — the posture
+    SCALE.md's iterative section requires.  Same rows either way."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is None:
+        return df.localCheckpoint(eager)
+    return df.checkpoint(eager)

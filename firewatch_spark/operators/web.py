@@ -362,7 +362,6 @@ def pagerank(
     edges: DataFrame,
     iterations: int = 5,
     damping_pct: int = 85,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Host PageRank over a DISTINCT edge list, exact scaled-int
     arithmetic: ``iterations`` rounds of
@@ -379,18 +378,15 @@ def pagerank(
     host string), groupBy dst (map-side-combinable integer sum), left
     join back to the host universe for the teleport floor.  Rounds are
     K linear jobs; each round's ranks are materialized via
-    ``make_checkpointer`` (localCheckpoint locally, reliable
-    ``checkpoint()`` with a dir at cluster scale) — the bpe_merge_k
-    lesson: without the cut, round k's plan embeds k copies of the
+    ``util.materialize`` (a local checkpoint by default, a reliable
+    one when ``spark.checkpoint.dir`` is set at cluster scale) — the
+    bpe_merge_k lesson: without the cut, round k's plan embeds k copies of the
     join tree.  At 100 TB the graph is ~10⁸ hosts / ~10¹⁰ edges:
     ranks fit comfortably per-partition, edges shuffle once per round
     on the same key, and AQE handles the power-law in-degree skew
     (celebrity hosts) on the sum side because the aggregation is
     partial+final, never a window."""
-    from .util import make_checkpointer
-
-    spark = edges.sparkSession
-    ckpt = make_checkpointer(spark, checkpoint_dir)
+    from .util import materialize
 
     # r13 (guide §2.4): the distinct edge list feeds the host universe
     # (twice, via the union), the out-degree table and EVERY round's
@@ -398,13 +394,13 @@ def pagerank(
     # extraction chain (~8 replays for 5 rounds).  One materialization
     # of the two-short-strings-per-row edge table cuts that; at 10^10
     # edges this is the "edge list" dataset any PageRank job persists.
-    edges = ckpt(edges.select("src_host", "dst_host").distinct())
+    edges = materialize(edges.select("src_host", "dst_host").distinct())
     hosts = (
         edges.select(F.col("src_host").alias("host"))
         .union(edges.select(F.col("dst_host").alias("host")))
         .distinct()
     )
-    hosts = ckpt(hosts)
+    hosts = materialize(hosts)
     # N and the per-host teleport floor are one scalar each — a 1-row
     # broadcast, the house pattern for global constants (never a
     # driver-side collect of anything data-sized).
@@ -412,12 +408,12 @@ def pagerank(
     outdeg = edges.groupBy("src_host").agg(
         F.count(F.lit(1)).cast("long").alias("outdeg")
     )
-    outdeg = ckpt(outdeg)
+    outdeg = materialize(outdeg)
 
     ranks = hosts.crossJoin(F.broadcast(n_hosts)).select(
         "host", F.expr(f"CAST({PAGERANK_SCALE} AS BIGINT) DIV _n").alias("pr")
     )
-    ranks = ckpt(ranks)
+    ranks = materialize(ranks)
     teleport = F.expr(
         f"({100 - damping_pct} * (CAST({PAGERANK_SCALE} AS BIGINT) DIV _n) "
         f"+ {damping_pct} * coalesce(_in, CAST(0 AS BIGINT))) DIV 100"
@@ -435,7 +431,7 @@ def pagerank(
             .crossJoin(F.broadcast(n_hosts))
             .select("host", teleport.alias("pr"))
         )
-        ranks = ckpt(ranks)
+        ranks = materialize(ranks)
     return ranks
 
 

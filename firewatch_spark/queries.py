@@ -48,7 +48,7 @@ from .operators import (
     text,
     web,
 )
-from .operators.util import ensure_parallelism, make_checkpointer
+from .operators.util import ensure_parallelism, materialize
 from .streaming.replay import replay, write_replay_chunks
 
 # Deterministic surrogate probability of an event row (FIXTURES.md §2),
@@ -1424,8 +1424,8 @@ def host_pagerank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     lowercase edge rules, self-loop drop, dangling-mass evaporation,
     per-round teleport floor.  Each round is one edges⋈ranks hash
     join + one map-side-combinable integer sum — K linear jobs,
-    lineage cut per round via make_checkpointer (reliable checkpoint
-    at cluster scale)."""
+    lineage cut per round via util.materialize (reliable when
+    spark.checkpoint.dir is set, at cluster scale)."""
     pages = (
         _tbl(spark, sf_dir, "documents")
         .select("doc_id")
@@ -1658,7 +1658,7 @@ def frontier_schedule_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         frontier.join(ranks, "host", "left")
         .withColumn("host_pr", F.coalesce(F.col("pr"), F.lit(0)).cast("long"))
         .drop("pr")
-    ).localCheckpoint()
+    ).transform(materialize)
     return web.frontier_schedule(pri, per_host_rate=_FRONTIER_RATE).select(
         "host", "canonical_url", "host_pr", "slot_in_host", "fetch_wave"
     )
@@ -2193,14 +2193,14 @@ def frontier_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "discovered_by"
             )
         )
-        .localCheckpoint(eager=False)
+        .transform(materialize, eager=False)
     )
     rules = web.parse_robots(_synth_robots(ufront))
     allowed = (
         web.robots_filter(ufront, rules)
         .filter(F.col("allowed"))
         .select("host", "canonical_url", "discovered_by")
-        .localCheckpoint(eager=False)
+        .transform(materialize, eager=False)
     )
     return web.frontier_schedule(allowed, per_host_rate=_FRONTIER_RATE).select(
         "host", "canonical_url", "discovered_by", "slot_in_host", "fetch_wave"
@@ -2478,7 +2478,7 @@ def crawl_delay_schedule_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # branch (plan: 24 Exchanges / 10 parquet scans for one documents
     # table).  fr is narrow (host, url, provenance, delay, rate); the
     # registered frontier_schedule row took the same cut in r13.
-    fr = fr.localCheckpoint(eager=False)
+    fr = materialize(fr, eager=False)
     return web.frontier_schedule(fr, rate_col="rate").select(
         "host",
         "canonical_url",
@@ -2571,17 +2571,13 @@ def _recrawl_fetched(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _recrawl_flow(
-    sm: DataFrame, fetched: DataFrame, materialize: bool = False
-) -> DataFrame:
+def _recrawl_flow(sm: DataFrame, fetched: DataFrame) -> DataFrame:
     """triage → schedule-the-due → output projection, shared by the
-    batch and streamed recrawl rows.  ``materialize`` localCheckpoints
-    the triage table, which feeds BOTH the schedule and the final
-    projection — the streamed twin sets it because inside a micro-batch
-    the duplicated subtree is re-planned and re-run per batch (r13)."""
-    out = web.recrawl_outcomes(sm, fetched)
-    if materialize:
-        out = out.localCheckpoint()
+    batch and streamed recrawl rows.  The triage table is materialized
+    because it feeds BOTH the schedule and the final projection —
+    inside a micro-batch the duplicated subtree is otherwise re-planned
+    and re-run per batch (r13)."""
+    out = materialize(web.recrawl_outcomes(sm, fetched))
     due = out.filter(F.col("due")).select("host", "canonical_url")
     sched = web.frontier_schedule(due, per_host_rate=_FRONTIER_RATE).select(
         "canonical_url", "slot_in_host", "fetch_wave"
@@ -2660,14 +2656,14 @@ def recrawl_schedule_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     sm = entries.select(
         F.expr(_FRONTIER_HOST).alias("host"), "canonical_url", "lastmod"
     )
-    # r14: materialize=True for the BATCH row too — the streamed twin
+    # r14: the triage cut applies to the BATCH row too — the streamed twin
     # had the cut since r13 but the batch path was never A/B'd; on the
     # honest build+sink bench clock the same-session
     # interleaved A/B reads 2.50 -> 1.24 s (2.0x): the triage table
     # feeds the schedule AND the final projection, and the replayed
     # subtree is the whole sitemap-parse -> canonicalize -> stream-
     # static-join chain.
-    return _recrawl_flow(sm, _recrawl_fetched(spark, sf_dir), materialize=True)
+    return _recrawl_flow(sm, _recrawl_fetched(spark, sf_dir))
 
 
 # the streamed twin attests the SAME oracle: outcomes are row-pure
@@ -2701,13 +2697,13 @@ def streaming_recrawl_schedule_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select((F.col("doc_id") % 97).cast("int").alias("n"))
             .distinct()
         )
-        # r13: localCheckpoint the (≤ 97-row) sitemap table BEFORE the
+        # r13: materialize the (≤ 97-row) sitemap table BEFORE the
         # delivery loop — each filtered write otherwise re-runs the
         # documents scan + distinct + sitemap synthesis (one full
         # corpus pass per tiny file; guide §2.4)
         sm_src = hosts.withColumn(
             "sitemap_xml", F.expr(_SITEMAP_SYNTH)
-        ).localCheckpoint()
+        ).transform(materialize)
         # 3 host-group delivery files (r13: was 5 — micro-batch count
         # is the dominant cost of the streamed twin at ~1.5 s of
         # planning + stream-static join + write per batch, and three
@@ -2719,7 +2715,7 @@ def streaming_recrawl_schedule_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             sm_src.filter(F.col("n") % 3 == c).coalesce(1).write.mode(
                 "append"
             ).json(arrive_dir)
-        fetched = _recrawl_fetched(spark, sf_dir).localCheckpoint()
+        fetched = materialize(_recrawl_fetched(spark, sf_dir))
 
         def body(batch_df: DataFrame) -> DataFrame:
             entries = web.parse_sitemap(batch_df, keep=()).select("loc", "lastmod")
@@ -2731,9 +2727,9 @@ def streaming_recrawl_schedule_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             # faster at sf0.1 but was REJECTED by the audit — the stored
             # fetch table is host-derived, unbounded at a 10^8-host
             # frontier; the shuffled stream-static join is the plan that
-            # scales.  materialize=True is the honest win: the triage
+            # scales.  The triage cut is the honest win: the triage
             # table feeds two consumers per batch.)
-            return _recrawl_flow(sm_b, fetched, materialize=True)
+            return _recrawl_flow(sm_b, fetched)
 
         return reader.schema("n int, sitemap_xml string").json(arrive_dir), body
 
@@ -2842,7 +2838,7 @@ def _crawl_budget_spark(spark: SparkSession, sf_dir: str):
     # crawl_budget_apply) the politeness schedule's two passes —
     # materialize it once instead of replaying extract→canonicalize→
     # distinct per consumer (guide §2.4)
-    frontier = frontier.localCheckpoint()
+    frontier = materialize(frontier)
     ranks = web.pagerank(web.host_edges(links))
     counts = frontier.groupBy("host").agg(
         F.count(F.lit(1)).cast("long").alias("due_urls")
@@ -3716,7 +3712,7 @@ def image_text_pair_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # replayed per branch (plan: 36 parquet scans of ONE documents
     # table).  The keyed table is (id, two 64-bit keys); the build is
     # on the bench clock, so the eager cut is too.
-    keyed = keyed.localCheckpoint()
+    keyed = materialize(keyed)
     return dedup.image_text_pair_dedup(keyed)
 
 
@@ -4519,9 +4515,7 @@ def _llm_pipeline_sql() -> str:
 
 
 @q("llm_pipeline", _llm_pipeline_sql())
-def llm_pipeline(
-    spark: SparkSession, sf_dir: str, checkpoint_dir: str | None = None
-) -> DataFrame:
+def llm_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The end-to-end LLM-data-pipeline walkthrough as ONE lineage:
     documents → token/quality stats (filter quality ≥ 0.5) →
     repetition stats (filter dup-token/top-bigram/run-length) → exact
@@ -4535,11 +4529,11 @@ def llm_pipeline(
     (the per-doc repetition metrics and the split assignment — both
     O(docs) narrow tables, not the corpus), exactly where a production
     pipeline would write intermediate datasets; see the inline comments
-    for the measured pushdown/codegen trap they avoid.  `checkpoint_dir`
-    swaps every stage materialization (and the label propagation's
-    per-round truncation) to executor-loss-safe reliable checkpoints —
-    the cluster-run posture."""
-    ckpt = make_checkpointer(spark, checkpoint_dir)
+    for the measured pushdown/codegen trap they avoid.  Every stage
+    materialization (and the label propagation's per-round truncation)
+    goes through `util.materialize`, so a deployment that sets
+    `spark.checkpoint.dir` gets executor-loss-safe reliable checkpoints
+    — the cluster-run posture."""
     # fan the (test-scale single-file) scan out before the expression-
     # heavy token/repetition/minhash folds — a no-op at real scale
     docs = ensure_parallelism(
@@ -4558,7 +4552,7 @@ def llm_pipeline(
     # and the filter tests plain attributes; the surviving ids join
     # back to the text.  At production scale this checkpoint is the
     # natural stage boundary a real pipeline writes to storage anyway.
-    rep_metrics = ckpt(
+    rep_metrics = materialize(
         text.with_repetition_stats(qkeep, ngram_n=2).select(
             "doc_id", "dup_token_frac", "top_ngram_frac", "max_run_len"
         )
@@ -4571,15 +4565,13 @@ def llm_pipeline(
     # the cleaned corpus is referenced by the exact-dedup grouping, the
     # minhash signatures, the cluster-label seed and the survivor join —
     # materialize it once (the "cleaned dataset" stage write)
-    clean = ckpt(qkeep.join(keep_rep, "doc_id"))
+    clean = materialize(qkeep.join(keep_rep, "doc_id"))
     keep_exact = dedup.exact_dedup(clean).select(
         F.col("keep_doc_id").alias("doc_id")
     )
     clean2 = clean.join(keep_exact, "doc_id")
     pairs = dedup.lsh_candidate_pairs(clean2, num_hashes=12, bands=4, shingle_n=3)
-    clusters = dedup.near_dup_clusters(
-        pairs, clean2.select("doc_id"), checkpoint_dir=checkpoint_dir
-    )
+    clusters = dedup.near_dup_clusters(pairs, clean2.select("doc_id"))
     keep_near = clusters.filter(
         F.col("doc_id") == F.col("cluster_id")
     ).select("doc_id")
@@ -4587,7 +4579,7 @@ def llm_pipeline(
     # second stage boundary: the split assignment feeds FOUR downstream
     # aggregates (docs/chunks/packs/vectors) — materialize it once
     # instead of re-running the clean→dedup lineage per reference
-    split_docs = ckpt(sampling.split_by_hash(survivors, _SPLIT_FRACTIONS))
+    split_docs = materialize(sampling.split_by_hash(survivors, _SPLIT_FRACTIONS))
 
     # r13 NEGATIVE result: lazy-checkpointing `chunks` WITH its text
     # column (it feeds the packer AND the chunk agg) measured
@@ -4601,7 +4593,7 @@ def llm_pipeline(
     # twice and the persisted bytes are three ints per chunk.
     chunk_meta = text.chunk_documents(
         split_docs.select("doc_id", "text"), max_tokens=PACK_CHUNK, overlap=0
-    ).select("doc_id", "chunk_idx", "n_tokens").localCheckpoint(eager=False)
+    ).select("doc_id", "chunk_idx", "n_tokens").transform(materialize, eager=False)
     packs = text.pack_chunks_per_doc(chunk_meta, budget=PACK_BUDGET)
     splits = split_docs.select("doc_id", "split")
     chunk_agg = chunk_meta.join(splits, "doc_id").groupBy("split").agg(
@@ -5249,19 +5241,18 @@ _CLUSTER_REPS_SQL = f"""
 
 
 @q("cluster_representatives", _CLUSTER_REPS_SQL)
-def cluster_representatives(
-    spark: SparkSession, sf_dir: str, checkpoint_dir: str | None = None
-) -> DataFrame:
+def cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-argmax canonical doc per near-dup cluster — the keep-list
     policy real pipelines prefer over min-id (keep the BEST copy, not
     the first): near_dup_clusters labels + token-quality scores, argmax
     by (quality desc, doc_id asc) per cluster.  Adds one doc-keyed
     broadcast-able join and a cluster-partitioned window on top of the
-    connected-components machinery.  `checkpoint_dir` selects reliable
-    checkpointing for the iterative label propagation (cluster runs)."""
+    connected-components machinery; its label propagation cuts each
+    round with `util.materialize` (reliable when the deployment sets
+    `spark.checkpoint.dir`)."""
     docs = _tbl(spark, sf_dir, "documents")
     pairs = dedup.lsh_candidate_pairs(docs, num_hashes=12, bands=4, shingle_n=3)
-    clusters = dedup.near_dup_clusters(pairs, docs, checkpoint_dir=checkpoint_dir)
+    clusters = dedup.near_dup_clusters(pairs, docs)
     quality = text.with_token_stats(docs).select("doc_id", "quality_score")
     joined = clusters.join(quality, "doc_id")
     w = Window.partitionBy("cluster_id").orderBy(
@@ -5571,7 +5562,7 @@ def quality_tier_mixture_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # "scored corpus" / "tiered corpus" stage datasets.
     qd = scored.join(docs, "doc_id").withColumn(
         "n_tokens", F.size(F.split(F.col("text"), " ")).cast("long")
-    ).localCheckpoint()
+    ).transform(materialize)
     ranked = sampling.with_global_rank(qd, "score", out_col="_rk")
     total = qd.agg(F.count(F.lit(1)).alias("_n"))
     qt = ranked.crossJoin(F.broadcast(total)).withColumn(
@@ -5581,7 +5572,7 @@ def quality_tier_mixture_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             "WHEN (_rk - 1) * 3 < 2 * _n THEN 'middle' "
             "ELSE 'tail' END"
         ),
-    ).select("doc_id", "tier", "n_tokens", "text").localCheckpoint()
+    ).select("doc_id", "tier", "n_tokens", "text").transform(materialize)
     stats = (
         qt.groupBy("tier")
         .agg(F.sum("n_tokens").cast("long").alias("avail_tokens"))
@@ -5931,7 +5922,7 @@ def dsir_importance_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # documents scans → one chain pass).  The build is on the bench
     # clock, so the eager cut is too.
     return sampling.dsir_importance_sample(
-        docs, target, keep_frac=_DSIR_KEEP_FRAC, materialize=True
+        docs, target, keep_frac=_DSIR_KEEP_FRAC
     )
 
 
@@ -5987,7 +5978,7 @@ def quality_budget_select_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 112 Exchanges / 48 documents scans → one chain pass).  The scored
     # table is 4 ints per doc; the build is on the bench clock, so the
     # eager cut is too.
-    scored = imp.join(toks, "doc_id").localCheckpoint()
+    scored = materialize(imp.join(toks, "doc_id"))
     return sampling.quality_budget_select(
         scored, _QB_TOKEN_BUDGET, "importance"
     ).select("doc_id", "importance", "n_tokens", "cum_tokens_before")
@@ -7057,7 +7048,7 @@ def streaming_ann_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def feed(reader, tmp):
         emb = _tbl(spark, sf_dir, "embeddings")
-        cents = similarity.ivf_centroids(emb, k=_IVF_K).localCheckpoint()
+        cents = materialize(similarity.ivf_centroids(emb, k=_IVF_K))
         similarity.ivf_index_cells(emb, cents).write.mode("overwrite").parquet(
             f"{tmp}/index"
         )
@@ -7519,7 +7510,7 @@ def ann_pq_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE PQ build/search: the ADC top-5 is by definition the first 5
     # rows of the ADC top-15 shortlist, and the refine side re-ranks
     # that same shortlist — so the index is trained and probed once,
-    # the (queries × 15)-row shortlist localCheckpoints (it feeds two
+    # the (queries × 15)-row shortlist is materialized (it feeds two
     # consumers), and no lineage replays the Lloyd rounds
     shortlist = similarity.ivf_pq_topk(
         emb,
@@ -7528,7 +7519,7 @@ def ann_pq_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         nprobe=_IVF_NPROBE,
         k_centroids=_IVF_K,
         train_iters=1,
-    ).localCheckpoint()
+    ).transform(materialize)
     adc = (
         shortlist.filter(F.col("rank") <= 5)
         .select("query_id", "neighbor_id")
@@ -8366,7 +8357,7 @@ def length_quantile_sketch_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = _tbl(spark, sf_dir, "documents").select("source", "text")
-    hist = text.length_histogram(docs, "source").localCheckpoint()
+    hist = materialize(text.length_histogram(docs, "source"))
     p50 = text.histogram_quantile(hist, 1, 2).withColumnRenamed("est", "est_p50")
     p90 = text.histogram_quantile(hist, 9, 10).withColumnRenamed("est", "est_p90")
     lens = docs.select(
@@ -8756,7 +8747,7 @@ def curation_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     cln = clean.select(
         "doc_id",
         F.regexp_replace(F.col("clean_text"), "\n", " ").alias("text"),
-    ).localCheckpoint()
+    ).transform(materialize)
     imp = text.interpolated_lm_score(
         cln, lam_num=_JM_LAM_NUM, lam_den=_JM_LAM_DEN
     ).select("doc_id", F.col("sum_interp_scaled").alias("score"))
@@ -8769,7 +8760,7 @@ def curation_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # range-bucket keying, bucket counts, final join) — without the cut
     # the boilerplate+LM lineage re-executes per reference (measured
     # 86 s -> 21 s at 25x)
-    scored = imp.join(toks, "doc_id").localCheckpoint()
+    scored = materialize(imp.join(toks, "doc_id"))
     return sampling.quality_budget_select(
         scored, _CURATION_BUDGET, "score"
     ).select("doc_id", "score", "n_tokens", "cum_tokens_before")
@@ -9232,7 +9223,7 @@ def quality_filter_ensemble_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cut; unmaterialized, the bigram scorer re-runs per consumer)
     scored = text.interpolated_lm_score(
         docs, lam_num=_JM_LAM_NUM, lam_den=_JM_LAM_DEN
-    ).select("doc_id", F.col("sum_interp_scaled").alias("score")).localCheckpoint()
+    ).select("doc_id", F.col("sum_interp_scaled").alias("score")).transform(materialize)
     total = scored.agg(F.count(F.lit(1)).alias("_n"))
     tiers = (
         sampling.with_global_rank(scored, "score", out_col="_rk")
@@ -9385,7 +9376,7 @@ def curation_funnel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no text), exactly the "persist keys, not payloads" shape; at
     # production scale it is the per-doc verdict table a curation run
     # publishes anyway.
-    flags = flags.localCheckpoint(eager=False)
+    flags = materialize(flags, eager=False)
     keepers = (
         flags.filter("k3").groupBy("h").agg(F.min("doc_id").alias("_keeper"))
     )
@@ -9496,12 +9487,12 @@ def web_corpus_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # extracted join-back, and through them the budget rank) with no
     # materialization — the before-plan re-read the dump text 80 times
     # across 180 Exchanges (plans/r13/web_corpus_pipeline_before.txt).
-    # One localCheckpoint runs the extraction regex ONCE; this is the
+    # One materialize runs the extraction regex ONCE; this is the
     # "extracted corpus" stage write a production pipeline does anyway.
     ex = (
         _crawl_extracted(spark, sf_dir, "fw_webcorpus_")
         .select("canonical_url", "extracted")
-        .localCheckpoint()
+        .transform(materialize)
     )
     mirrored = ex.filter(
         F.expr("substr(md5(extracted), 1, 1) IN ('0', '1', '2', '3')")
@@ -9528,7 +9519,7 @@ def web_corpus_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the Gopher rule folds per consumer
     kept = gop.filter(F.col("keep")).select(
         "url", "text_md5", "n_text_copies", "n_tokens", "n_distinct_stopwords"
-    ).localCheckpoint()
+    ).transform(materialize)
     sel = sampling.quality_budget_select(
         kept,
         _WEB_CORPUS_BUDGET,
@@ -9746,8 +9737,8 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs = _tbl(spark, sf_dir, "documents").select("doc_id", "text")
         u = docs.withColumn("_u", sampling._hash_uniform("doc_id", "incr"))
         # the static side: materialized once, reused by every micro-batch
-        idx_docs = u.filter(F.col("_u") < _INCR_FRAC).drop("_u").localCheckpoint()
-        index = dedup.build_dedup_index(idx_docs).localCheckpoint()
+        idx_docs = materialize(u.filter(F.col("_u") < _INCR_FRAC).drop("_u"))
+        index = materialize(dedup.build_dedup_index(idx_docs))
         new = u.filter(F.col("_u") >= _INCR_FRAC).drop("_u")
         write_replay_chunks(new, f"{tmp}/new", order_col="doc_id", n_chunks=2)
         stream = reader.schema("doc_id long, text string").parquet(f"{tmp}/new")
@@ -9779,11 +9770,11 @@ def incremental_dedup_indexed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx_docs = u.filter(F.col("_u") < _INCR_FRAC).drop("_u")
     new = u.filter(F.col("_u") >= _INCR_FRAC).drop("_u")
     # the operator's contract says `index` is a precomputed TABLE; the
-    # localCheckpoint is the in-session stand-in for that stored
+    # materialized index is the in-session stand-in for that stored
     # artifact — without it every downstream consumer (candidate join,
     # md5 set, Bloom bits) re-runs the full minhash build (the 25×
     # probe measured the redundancy directly)
-    index = dedup.build_dedup_index(idx_docs).localCheckpoint()
+    index = materialize(dedup.build_dedup_index(idx_docs))
     return dedup.incremental_dedup_indexed(
         new, index, idx_docs, threshold=_INCR_THRESHOLD
     )
@@ -9833,7 +9824,7 @@ def dedup_index_roll_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     u = docs.withColumn("_u", sampling._hash_uniform("doc_id", "incr"))
     idx_docs = u.filter(F.col("_u") < _INCR_FRAC).drop("_u")
     new = u.filter(F.col("_u") >= _INCR_FRAC).drop("_u")
-    index = dedup.build_dedup_index(idx_docs).localCheckpoint()
+    index = materialize(dedup.build_dedup_index(idx_docs))
     rolled = dedup.update_dedup_index(index, new)
     return rolled.select(
         "doc_id",
@@ -9869,7 +9860,7 @@ def incremental_dedup_bloom_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bloom path reads the index THREE times (bits build + candidate
     # join + md5 set) — unmaterialized, that tripled the linear index
     # build and drove the 25× probe to slope 0.93
-    index = dedup.build_dedup_index(idx_docs).localCheckpoint()
+    index = materialize(dedup.build_dedup_index(idx_docs))
     return dedup.incremental_dedup_indexed(
         new,
         index,
@@ -10798,13 +10789,13 @@ def semantic_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     sc = (
         similarity.with_scaled_vec(similarity.ensure_parallelism(emb))
         .select("vec_id", "iv")
-        .localCheckpoint()
+        .transform(materialize)
     )
     cents = similarity.ivf_train(sc, k=_IVF_K, iters=2)
     cells = (
         similarity.ivf_assign(sc, cents)
         .select("vec_id", "centroid_id")
-        .localCheckpoint()
+        .transform(materialize)
     )
     pairs = similarity.cell_near_dup(sc, cells, threshold=_SEMDEDUP_THR)
     clusters = dedup.near_dup_clusters(
@@ -10871,13 +10862,13 @@ def semantic_dedup_kscaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     sc = (
         similarity.with_scaled_vec(similarity.ensure_parallelism(emb))
         .select("vec_id", "iv")
-        .localCheckpoint()
+        .transform(materialize)
     )
     cents = similarity.ivf_train(sc, k=k, iters=2)
     cells = (
         similarity.ivf_assign(sc, cents)
         .select("vec_id", "centroid_id")
-        .localCheckpoint()
+        .transform(materialize)
     )
     pairs = similarity.cell_near_dup(sc, cells, threshold=_SEMDEDUP_THR)
     clusters = dedup.near_dup_clusters(
@@ -10959,7 +10950,7 @@ def _ep2_replay(
         # per-key frame order is non-decreasing across batches by
         # construction; one executor-side materialization feeds the
         # sentinel agg, the boundary sampling and the chunk writes
-        ev = ev.localCheckpoint()
+        ev = materialize(ev)
         if sentinels:
             ev = ev.unionByName(
                 ev.groupBy("video_id").agg(

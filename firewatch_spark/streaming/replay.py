@@ -31,9 +31,9 @@ runs on, plus the Spark-side chunk writer that feeds it.
 - **Drain.** The query runs with ``availableNow`` and must terminate
   within ``DRAIN_TIMEOUT_S``; otherwise `replay` raises
   ``TimeoutError`` rather than return a truncated table.
-- **Result.** The union of batch outputs, read back and
-  ``localCheckpoint``-ed before the temp dir goes, without the
-  ``batch_id`` column.
+- **Result.** The union of batch outputs, read back and cut with
+  ``operators.util.materialize`` (eagerly) before the temp dir goes,
+  without the ``batch_id`` column.
 
 `write_replay_chunks` writes the replay input: chunks by *value range*
 of an ordering column, written by one Spark job.  The stateful
@@ -58,6 +58,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamReader
+
+from ..operators.util import materialize
 
 DRAIN_TIMEOUT_S = 300
 _SHUFFLE = "spark.sql.shuffle.partitions"
@@ -92,7 +94,7 @@ def replay(
         )
         if not query.awaitTermination(DRAIN_TIMEOUT_S):
             raise TimeoutError(f"replay did not drain in {DRAIN_TIMEOUT_S}s")
-        return spark.read.parquet(sink).drop("batch_id").localCheckpoint()
+        return materialize(spark.read.parquet(sink).drop("batch_id"))
     finally:
         if query is not None:
             query.stop()

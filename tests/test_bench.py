@@ -112,3 +112,22 @@ def test_bench_some_cli_runs(sf_dir):
     result = json.loads(out.stdout.strip().splitlines()[-1])
     assert set(result) == {"global_counters", "host_pagerank"}
     assert result["host_pagerank"]["build_jobs"] >= 1
+
+
+def test_oracle_check_imports_its_own_checkout(tmp_path, monkeypatch):
+    # a copy of the script under another root (a parent checkout for an
+    # A/B, say) must check that root's tree on the driver AND on the
+    # Python workers, never a fixed path; loading it starts no JVM
+    import importlib.util
+    import shutil
+
+    (tmp_path / "tools").mkdir()
+    script = tmp_path / "tools" / "oracle_check.py"
+    shutil.copy(Path(REPO) / "tools" / "oracle_check.py", script)
+    monkeypatch.setattr(sys, "path", list(sys.path))
+    monkeypatch.setenv("PYTHONPATH", "elsewhere")
+    spec = importlib.util.spec_from_file_location("oracle_check_copy", script)
+    spec.loader.exec_module(importlib.util.module_from_spec(spec))
+    root = str(tmp_path.resolve())
+    assert sys.path[0] == root
+    assert os.environ["PYTHONPATH"] == root + os.pathsep + "elsewhere"

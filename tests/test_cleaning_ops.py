@@ -193,54 +193,90 @@ def test_cluster_representatives_prefers_quality(spark):
     assert reps[3] == 3
 
 
-def test_reliable_checkpoint_matches_local_for_clusters_and_ivf(spark, tmp_path):
-    """VERDICT r5 #3: the checkpoint_dir parameter must swap
-    localCheckpoint for reliable checkpoint() WITHOUT changing any
-    result — same cluster labels, same trained centroids — and must
-    actually write checkpoint blocks under the given dir."""
-    import os
+def _lineage_cut_results(spark) -> dict:
+    """Three operators that cut their lineage every round (label
+    propagation, Lloyd's iterations, BPE induction and its per-round
+    argmax table), as sorted JSON-ready rows."""
+    import random
 
     from firewatch_spark.operators import similarity
+
+    def collect(df, *cols):
+        return sorted([r[c] for c in cols] for r in df.collect())
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (5, 6), (8, 9), (9, 10), (10, 11)],
         "doc_a long, doc_b long",
     )
     docs = spark.createDataFrame([(i,) for i in range(1, 13)], "doc_id long")
-    local = {
-        (r["doc_id"], r["cluster_id"])
-        for r in dedup.near_dup_clusters(pairs, docs).collect()
-    }
-    ck_dir = str(tmp_path / "ck")
-    reliable = {
-        (r["doc_id"], r["cluster_id"])
-        for r in dedup.near_dup_clusters(
-            pairs, docs, checkpoint_dir=ck_dir
-        ).collect()
-    }
-    assert reliable == local
-    assert os.listdir(ck_dir), "reliable checkpoint wrote nothing"
-
-    import random
-
     rng = random.Random(7)
     emb = spark.createDataFrame(
         [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(24)],
         "vec_id long, embedding array<float>",
     )
-    cents_local = {
-        r["centroid_id"]: list(r["civ"])
-        for r in similarity.ivf_train(emb, k=4, iters=2).collect()
+    corpus = spark.createDataFrame(
+        [(1, "a b a b c d"), (2, "a b e f a b")], "doc_id long, text string"
+    )
+    bpe = text.bpe_vocab_induction(
+        corpus, vocab_target=10_000, min_freq=1, max_rounds=3
+    )
+    return {
+        "clusters": collect(
+            dedup.near_dup_clusters(pairs, docs), "doc_id", "cluster_id"
+        ),
+        "centroids": collect(
+            similarity.ivf_train(emb, k=4, iters=2), "centroid_id", "civ"
+        ),
+        "bpe": collect(bpe, "doc_id", "n_merges", "new_text"),
     }
-    ck_dir2 = str(tmp_path / "ck2")
-    cents_reliable = {
-        r["centroid_id"]: list(r["civ"])
-        for r in similarity.ivf_train(
-            emb, k=4, iters=2, checkpoint_dir=ck_dir2
-        ).collect()
-    }
-    assert cents_reliable == cents_local
-    assert os.listdir(ck_dir2)
+
+
+# A fresh session whose SparkContext starts with spark.checkpoint.dir
+# set (from PYSPARK_SUBMIT_ARGS); any local checkpoint on the path raises.
+_RELIABLE_SESSION = """
+import json
+from pyspark.sql import SparkSession
+from pyspark.sql.classic.dataframe import DataFrame
+from tests.test_cleaning_ops import _lineage_cut_results
+
+def no_local_cut(*_, **__):
+    raise AssertionError("localCheckpoint with a checkpoint dir set")
+
+DataFrame.localCheckpoint = no_local_cut
+spark = SparkSession.builder.master("local[2]").getOrCreate()
+print(json.dumps(_lineage_cut_results(spark)))
+spark.stop()
+"""
+
+
+def test_reliable_checkpoint_matches_local_for_clusters_and_ivf(spark, tmp_path):
+    """With ``spark.checkpoint.dir`` set at launch every lineage cut,
+    including those inside the called operators, is a reliable
+    checkpoint, and the results equal the shared session's local-
+    checkpoint run.  The blocks land in the dir, and the shared
+    session never acquires a checkpoint dir."""
+    import json
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    root = str(Path(__file__).resolve().parents[1])
+    ck_dir = tmp_path / "ck"
+    env = dict(
+        os.environ,
+        PYSPARK_SUBMIT_ARGS=f"--conf spark.checkpoint.dir={ck_dir} pyspark-shell",
+        PYTHONPATH=root,
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", _RELIABLE_SESSION],
+        cwd=root, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    reliable = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert reliable == json.loads(json.dumps(_lineage_cut_results(spark)))
+    assert any(p.is_file() for p in ck_dir.rglob("rdd-*/*")), "no blocks written"
+    assert spark.sparkContext.getCheckpointDir() is None
 
 
 def test_quality_classifier_matches_python_reference(spark):

@@ -27,7 +27,7 @@ SKIP = {
     "warc_ingest",  # same: builds by writing the WARC-shaped dump
     "crawl_pipeline",  # same dump write in-build
     "web_corpus_pipeline",  # same dump write in-build
-    "curation_pipeline",  # localCheckpoints the scored corpus in-build
+    "curation_pipeline",  # materializes the scored corpus in-build
     "ann_ivf_upsert",  # builds by writing the stored base index; its
     # join shape is ivf_assign's, already swept via ann_ivf_cells
 }

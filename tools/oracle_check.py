@@ -10,12 +10,18 @@ value hash.  Use this BEFORE the driver does:
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
+from pathlib import Path
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# The driver and the Python workers import the same tree: this checkout.
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
+_path = os.environ.get("PYTHONPATH")
+os.environ["PYTHONPATH"] = str(ROOT) + (os.pathsep + _path if _path else "")
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"

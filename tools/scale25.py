@@ -67,7 +67,7 @@ def _semdedup_kscaled(spark, sf_dir: str, k: int):
 def _semdedup_stages(spark, sf_dir: str, k: int) -> dict[str, float]:
     """Per-stage wall seconds for the SemDeDup composition (VERDICT
     r12 #5): train / assign / pairs / cluster, each stage materialized
-    via localCheckpoint so its clock is isolated from lineage
+    via util.materialize so its clock is isolated from lineage
     re-execution.  This turns the n·k (train/assign) vs n²/k (pairs)
     split from arithmetic into measurement: at a scale point, compare
     fixed k=16 against k = 16·sqrt(f) stage by stage to see WHERE the
@@ -76,23 +76,24 @@ def _semdedup_stages(spark, sf_dir: str, k: int) -> dict[str, float]:
 
     from firewatch_spark import queries as Q
     from firewatch_spark.operators import dedup, similarity
+    from firewatch_spark.operators.util import materialize
 
     out: dict[str, float] = {}
     emb = Q._tbl(spark, sf_dir, "embeddings")
     t0 = time.perf_counter()
-    cents = similarity.ivf_train(emb, k=k, iters=2).localCheckpoint()
+    cents = materialize(similarity.ivf_train(emb, k=k, iters=2))
     out["train"] = time.perf_counter() - t0
     t0 = time.perf_counter()
     cells = (
         similarity.ivf_assign(emb, cents)
         .select("vec_id", "centroid_id")
-        .localCheckpoint()
+        .transform(materialize)
     )
     out["assign"] = time.perf_counter() - t0
     t0 = time.perf_counter()
-    pairs = similarity.cell_near_dup(
-        emb, cells, threshold=Q._SEMDEDUP_THR
-    ).localCheckpoint()
+    pairs = materialize(
+        similarity.cell_near_dup(emb, cells, threshold=Q._SEMDEDUP_THR)
+    )
     out["pairs"] = time.perf_counter() - t0
     t0 = time.perf_counter()
     clusters = dedup.near_dup_clusters(
