@@ -1,10 +1,11 @@
 """Projection / filter / scalar-transform operators (SURVEY.md §2.2).
 
-P1 transport decode, P5 per-box confidence filter, P8 detection-event
-projection — all pure Column algebra.  P2/P10/P11 (JPEG decode,
-overlay, model transform) need cv2/torch, which are not in this
-container: their Spark-side plumbing lives in sources/multimodal.py as
-clearly-marked stubs with real schemas and batch shapes.
+P1 transport decode and P5 per-box confidence filter — pure Column
+algebra (the P8 detection event is `streaming.pipeline.detection_events`).
+P2/P10/P11 (JPEG decode, overlay, model transform) need cv2/torch, which
+are not in this container: their Spark-side plumbing lives in
+sources/multimodal.py as clearly-marked stubs with real schemas and
+batch shapes.
 """
 
 from __future__ import annotations
@@ -47,42 +48,3 @@ def filter_detections(detections: Column, threshold: float) -> Column:
     which is `>=` (fire_detect_nn.py:132) — pinned by tests.
     """
     return F.filter(detections, lambda d: d["confidence"] > F.lit(threshold))
-
-
-def detection_event(
-    video_id: Column,
-    frame_number: Column,
-    timestamp: Column,
-    has_fire: Column,
-    fire_probability: Column,
-    detections: Column,
-    width: Column,
-    height: Column,
-    fps: Column,
-    deterministic_ts: "Column | None" = None,
-) -> Column:
-    """P8 — the nested detection-event record (stream.py:405-418).
-
-    `processing_timestamp` is wall-clock in the reference and excluded
-    from comparisons (SURVEY.md §7); pass ``deterministic_ts`` in test
-    mode to make the record hashable.
-    """
-    proc_ts = deterministic_ts if deterministic_ts is not None else F.current_timestamp()
-    return F.struct(
-        video_id.alias("video_id"),
-        frame_number.alias("frame_number"),
-        timestamp.alias("timestamp"),
-        proc_ts.alias("processing_timestamp"),
-        has_fire.alias("has_fire"),
-        fire_probability.alias("fire_probability"),
-        detections.alias("detections"),
-        F.struct(
-            width.alias("width"), height.alias("height"), fps.alias("fps")
-        ).alias("frame_metadata"),
-    )
-
-
-def detection_event_json(event: Column) -> Column:
-    """P8 wire form — `to_json` of the nested event, the exact payload
-    the reference publishes to the detections topic (stream.py:528-545)."""
-    return F.to_json(event)

@@ -157,7 +157,9 @@ def _surrogate_column_expr(seq: Column, width: Column, height: Column) -> Column
         surrogate.fire_probability(raw).alias("fire_probability"),
         surrogate.no_fire_probability(raw).alias("no_fire_probability"),
         F.lit("surrogate").alias("model_type"),
-        surrogate.synth_detection(raw, width, height).alias("detections"),
+        surrogate.synth_detection(
+            surrogate.has_fire(raw), raw, width, height
+        ).alias("detections"),
     )
 
 

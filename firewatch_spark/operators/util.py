@@ -92,7 +92,12 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     die with their executor.  With one set (``spark.checkpoint.dir`` at
     launch, or ``SparkContext.setCheckpointDir``) it is a reliable
     checkpoint whose blocks survive executor loss — the posture
-    SCALE.md's iterative section requires.  Same rows either way."""
+    SCALE.md's iterative section requires.  Same rows either way.
+
+    A session using ``spark.checkpoint.dir`` also needs
+    ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` (as
+    `session.get_spark` sets): without it Spark never deletes a
+    reliable checkpoint, and the dir grows with every cut."""
     if df.sparkSession.sparkContext.getCheckpointDir() is None:
         return df.localCheckpoint(eager)
     return df.checkpoint(eager)

@@ -64,15 +64,10 @@ INTERVAL = 5
 
 
 def _tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # events.ts is parquet TIMESTAMP(NANOS): pyspark ≤4.0 errors on it
-    # unless nanosAsLong is set (runtime-settable; the driver's session
-    # is vanilla, so set it here, not in our own session builder) and
-    # then reads int64 nanos; 4.1+ ignores the legacy conf and reads a
-    # real TIMESTAMP_NTZ truncated to micros.  Consumers of `ts` go
-    # through `_event_time`, which absorbs both shapes.  The
-    # ms-precision columns (l_shipdate, o_orderdate) are unaffected and
-    # read natively as TIMESTAMP_NTZ, matching DuckDB wall-clock.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    # pyspark 4.1+ reads events.ts (parquet TIMESTAMP(NANOS)) as
+    # TIMESTAMP_NTZ truncated to micros; the ms-precision columns
+    # (l_shipdate, o_orderdate) read as TIMESTAMP_NTZ too, matching
+    # DuckDB wall-clock.
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
@@ -86,15 +81,6 @@ def _atexit_tmpdir(prefix: str) -> str:
     tmp = tempfile.mkdtemp(prefix=prefix)
     atexit.register(shutil.rmtree, tmp, ignore_errors=True)
     return tmp
-
-
-def _event_time(ev: DataFrame):
-    """`events.ts` as a micro-precision timestamp Column, whatever the
-    runtime's parquet-nanos behavior (int64 nanos on ≤4.0 with
-    nanosAsLong, TIMESTAMP_NTZ on 4.1+)."""
-    if dict(ev.dtypes).get("ts") == "bigint":
-        return F.timestamp_micros(F.expr("ts div 1000"))
-    return F.col("ts")
 
 
 def _with_surrogate(ev: DataFrame) -> DataFrame:
@@ -180,7 +166,8 @@ def detection_synthesis(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _tbl(spark, sf_dir, "events")
     w = (F.lit(320) + (F.col("user_id") % 3).cast("int") * 320).cast("int")
     h = (F.lit(240) + (F.col("user_id") % 3).cast("int") * 240).cast("int")
-    dets = surrogate.synth_detection(_raw_spark(), w, h)
+    raw = _raw_spark()
+    dets = surrogate.synth_detection(surrogate.has_fire(raw), raw, w, h)
     df = ev.select("event_id", "user_id", dets.alias("_d"))
     first = F.try_element_at("_d", F.lit(1))
     return df.select(
@@ -10548,13 +10535,10 @@ def topk_events_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
 def tumbling_window_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling time window via F.window — declared parity-plus
     (SURVEY.md §2.5 note: the reference has no time windows at all).
-    events.ts is normalized by `_event_time` (nanos-long or native
-    TIMESTAMP_NTZ depending on the pyspark version), reported as epoch
-    seconds (portable)."""
+    Windows are reported as epoch seconds (portable)."""
     ev = _tbl(spark, sf_dir, "events")
-    ev = ev.withColumn("ts_t", _event_time(ev))
     return (
-        ev.groupBy(F.window("ts_t", "1 hour").alias("w"))
+        ev.groupBy(F.window(F.col("ts"), "1 hour").alias("w"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(F.floor(F.col("value") * 10000.0).cast("long")).alias(
@@ -11039,9 +11023,8 @@ def sliding_window_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     event lands in two windows; the oracle replays the assignment as a
     union of the containing hour bucket and its predecessor."""
     ev = _tbl(spark, sf_dir, "events")
-    ev = ev.withColumn("ts_t", _event_time(ev))
     return (
-        ev.groupBy(F.window("ts_t", "2 hours", "1 hour").alias("w"))
+        ev.groupBy(F.window(F.col("ts"), "2 hours", "1 hour").alias("w"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(F.floor(F.col("value") * 10000.0).cast("long")).alias(

@@ -4,8 +4,7 @@ Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default local[*]);
 the same config block is what we would ship to a 1000-executor cluster —
 AQE on (runtime re-plan, skew-join splitting, partition coalescing),
 explicit shuffle-partition sizing, Arrow enabled for the pandas-UDF path,
-and nanosecond parquet timestamps read as long (the synthetic testdata is
-written with TIMESTAMP(NANOS), which Spark does not support natively).
+and reliable checkpoint files cleaned once unreferenced.
 """
 
 from __future__ import annotations
@@ -35,8 +34,6 @@ def get_spark(
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.session.timeZone", "UTC")
-        # testdata parquet uses TIMESTAMP(NANOS); read as bigint nanos.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # AQE: runtime partition coalescing + skew-join handling — the
         # mechanism that keeps these plans healthy at 1000 executors.
         .config("spark.sql.adaptive.enabled", "true")
@@ -55,14 +52,12 @@ def get_spark(
         # false on busy clusters).  spark.sql.shuffle.partitions stays
         # the INITIAL fan-out (env SPARK_GRAFT_SHUFFLE; raise it on a
         # real cluster — AQE only ever merges, it never splits).
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"),
-        )
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION", "64m"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
+        # With spark.checkpoint.dir set, every `operators.util.materialize`
+        # cut writes reliable checkpoint files; without this Spark never
+        # deletes them, and a long-lived session grows the dir unbounded.
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         # Arrow batches for the pandas-UDF path (inference / media ops).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")

@@ -16,6 +16,7 @@ import hashlib
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
     DoubleType,
@@ -109,6 +110,23 @@ def synthetic_frames(
                 )
         i += 1
     return spark.createDataFrame(rows, FRAME_SCHEMA)
+
+
+def frame_envelopes(frames: DataFrame) -> DataFrame:
+    """S6 — frames as the producer publishes them: Kafka-shaped
+    ``(key, value)`` binary records, key = video_id, value = the JSON
+    envelope with a base64 payload (reference
+    producer/video_producer.py:69-77,126-133) that
+    `streaming.pipeline.decode_frame_stream` reads.  A narrow
+    projection, so it maps a frame stream as well as a batch."""
+    from ..functions.projections import encode_transport
+
+    payload = encode_transport(F.col("frame_data"), "base64-json").alias("frame_data")
+    envelope = F.struct(*[payload if c == "frame_data" else c for c in frames.columns])
+    return frames.select(
+        F.col("video_id").cast("binary").alias("key"),
+        F.to_json(envelope).cast("binary").alias("value"),
+    )
 
 
 def video_file_scan(

@@ -1,4 +1,4 @@
-"""Kafka source/sink builders — S6-S9, S11 from SURVEY.md §2.1.
+"""Kafka source/sink builders — S6-S9 from SURVEY.md §2.1.
 
 Option-complete translations of the reference's producer/consumer
 tuning into Spark's ``kafka.*`` pass-through options:
@@ -8,24 +8,24 @@ tuning into Spark's ``kafka.*`` pass-through options:
   streams/stream.py:85-95; rationale docs/PERFORMANCE.md:40-49);
 * consumer (S7): earliest offsets, fetch.min.bytes 32768,
   fetch.max.wait 500 ms, 10 MB/partition
-  (streams/stream.py:58-83; docs/PERFORMANCE.md:51-58);
-* completions consumer (S11): its own group, small polls
-  (consumer/s3_video_consumer.py:113-122).
+  (streams/stream.py:58-83; docs/PERFORMANCE.md:51-58).
 
 The reference's offset-commit cadence (W6, stream.py:462-497) and
 idle-poll loop (W7) have NO translated code: Structured Streaming
 checkpointing subsumes both (`checkpointLocation` + trigger).
 
-These builders return lazy readers/writers; no broker is contacted
-until a query starts, so they are unit-testable option-wise (the
+These builders are lazy; no broker is contacted until a query starts
+or a batch is published, so they are unit-testable option-wise (the
 container has no Kafka).
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import DataStreamReader, DataStreamWriter
+from pyspark.sql.streaming import DataStreamReader
 
 # topic layout: config.py:14-16 + scripts/setup_kafka_topics.sh
 FRAMES_TOPIC = "video-frames"         # 6 partitions
@@ -69,22 +69,6 @@ def frames_source(
     return reader
 
 
-def completions_source(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str = COMPLETIONS_TOPIC,
-) -> DataStreamReader:
-    """S11 — completions consumer (small batches, own group id)."""
-    return (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("subscribe", topic)
-        .option("startingOffsets", "earliest")
-        .option("maxOffsetsPerTrigger", "30")  # max_poll_records=10 × 3
-        .option("kafka.group.id", "s3-video-uploader-group")
-    )
-
-
 def kafka_key_value(df: DataFrame, key_col: str, value_col: str) -> DataFrame:
     """The exact record shape every keyed sink sends: utf-8 key (the
     video_id — per-video ordering within a partition, reference
@@ -97,53 +81,28 @@ def kafka_key_value(df: DataFrame, key_col: str, value_col: str) -> DataFrame:
     )
 
 
-def keyed_kafka_sink(
-    df: DataFrame,
-    bootstrap_servers: str,
-    topic: str,
-    key_col: str,
-    value_col: str,
-    checkpoint_location: str,
-    extra_options: dict[str, str] | None = None,
-) -> DataStreamWriter:
-    """S6/S8/S9 — keyed Kafka sink with the reference's producer knobs.
+def kafka_publisher(bootstrap_servers: str) -> Callable[[DataFrame, str], None]:
+    """S6/S8/S9 — ``publish(records, topic)``: one batch Kafka write of
+    `kafka_key_value` records with the reference's producer knobs, the
+    publisher `streaming.pipeline.fire_detection_query` calls from its
+    foreachBatch for each batch's detections and completions.
 
     Keying by video_id preserves per-video ordering within a partition
-    (reference producer/video_producer.py:126-133).  Spark's sink is
-    batched/async by construction — the reference's hand-rolled async
-    sends + fire-only callbacks (stream.py:528-545) need no analog.
-    Checkpointing replaces the offset-commit cadence (W6).
-    """
-    out = kafka_key_value(df, key_col, value_col)
-    writer = (
-        out.writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("topic", topic)
-        .option("checkpointLocation", checkpoint_location)
-    )
-    for k, v in {**PRODUCER_OPTIONS, **(extra_options or {})}.items():
-        writer = writer.option(k, v)
-    return writer
+    (reference producer/video_producer.py:126-133).  Spark's writer is
+    batched by construction — the reference's hand-rolled async sends +
+    fire-only callbacks (stream.py:528-545) need no analog.  The
+    query's checkpoint replaces the offset-commit cadence (W6); a
+    redelivered batch publishes again (at-least-once, like the
+    reference)."""
 
-
-def batch_topic_inspector(
-    spark: SparkSession, bootstrap_servers: str, topic: str, limit: int | None = None
-) -> DataFrame:
-    """S14 — ad-hoc topic scan (scripts/kafka_inspect.py:28-120) as a
-    batch Kafka read; offsets/counts come free from the DataFrame."""
-    df = (
-        spark.read.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("subscribe", topic)
-        .option("startingOffsets", "earliest")
-        .option("endingOffsets", "latest")
-        .load()
-        .select(
-            "partition",
-            "offset",
-            F.col("key").cast("string").alias("key"),
-            F.col("value").cast("string").alias("value"),
-            "timestamp",
+    def publish(records: DataFrame, topic: str) -> None:
+        writer = (
+            records.write.format("kafka")
+            .option("kafka.bootstrap.servers", bootstrap_servers)
+            .option("topic", topic)
         )
-    )
-    return df.limit(limit) if limit else df
+        for k, v in PRODUCER_OPTIONS.items():
+            writer = writer.option(k, v)
+        writer.save()
+
+    return publish

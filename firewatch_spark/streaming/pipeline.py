@@ -1,101 +1,97 @@
-"""EP2 — the main detection pipeline as Structured Streaming queries
+"""EP2 — the main detection pipeline as ONE Structured Streaming query
 (SURVEY.md §3 EP2: readStream → decode → predict → stateful session →
-two output streams).
+detection and completion events plus the media sinks).
 
 Reference topology (streams/stream.py:444-582): a single consumer loop
 doing decode → session bookkeeping → cadence → inference → stats →
-sinks per message.  Spark splits it into a declarative pipeline:
+sinks per message.  `fire_detection_query` builds the same dataflow as
+a declarative query:
 
-    frames (kafka/file source)
-      → decode (P1; frame bytes stay columnar, pruned when unused)
-      → stateful_pipeline.fire_detection_stream: cadence (M6) +
-        model + LOCF + sessions (W1-W4) in one stateful stage
-          ├─ 'frame' rows   ──► detections sink
-          └─ 'session' rows ──► completion_events_json (S9) ──► completions sink
+    Kafka-shaped (key, value) frame records
+      → decode_frame_stream (P1): JSON envelope + base64 payload;
+        malformed records → dead-letter stream
+      → frame metadata only (the frame bytes are dropped here)
+      → stateful_pipeline.fire_detection_stream: cadence (M6) + model +
+        LOCF + sessions (W1-W4) in one stateful stage
+      → one foreachBatch:
+          ├─ 'frame' rows   ──► detection_events (P8) ──► publish (S8)
+          │                 ──► media_manifest_sink (S10)
+          └─ 'session' rows ──► media_finalize_sink (S10)
+                            ──► completion_events_json (S9) ──► publish
 
 Stage boundaries: source tasks → shuffle by video_id (the ONLY wide
 exchange, required by per-key state) → stateful stage → sinks.  The
 frame binary column is dropped before the shuffle: at 100 TB the
-payload never crosses the network — only ids, numbers and booleans do.
+payload never crosses the network — only ids, numbers and strings do.
 
-The P8 nested detection record needs frame metadata (timestamp, size,
-fps, detections) that the stateful operator does not carry, so it is
-built from a per-frame prediction without cadence: `with_predictions`
-→ `detection_events`.
+P8 is projected from the operator's frame rows, so it carries the
+cadence and carry-forward: the operator copies each frame's timestamp,
+fps, width and height onto that frame's row, and the P7 full-frame box
+is built from the row's own (possibly carried-forward) prediction.
+One foreachBatch writes every output (as in *Structured Streaming*,
+SIGMOD 2018), so the query has one checkpoint and a redelivered batch
+re-runs every sink with the same batch id.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
-from .. import models, surrogate
-from ..functions.projections import (
-    decode_transport,
-    detection_event,
-    detection_event_json,
+from .. import surrogate
+from ..functions.projections import decode_transport
+from ..sources.kafka import COMPLETIONS_TOPIC, DETECTIONS_TOPIC, kafka_key_value
+from . import sinks
+from .stateful_pipeline import DEFAULT_GAP, fire_detection_stream, surrogate_predict_fn
+
+# the producer's frame envelope (reference streams/stream.py:125-137)
+ENVELOPE_SCHEMA = (
+    "video_id string, frame_number long, timestamp string, fps double,"
+    " frame_data string, width int, height int"
 )
 
 
-def decode_frame_stream(kafka_df: DataFrame, transport: str = "msgpack") -> DataFrame:
-    """P1 over a raw Kafka frame topic: key = video_id, value = frame
-    payload (msgpack: raw JPEG bytes; base64-json: JSON envelope with a
-    base64 payload — reference streams/stream.py:58-68,125-137)."""
-    if transport == "msgpack":
-        return kafka_df.select(
-            F.col("key").cast("string").alias("video_id"),
-            decode_transport(F.col("value"), "msgpack").alias("frame_data"),
-            F.col("timestamp").alias("kafka_ts"),
-        )
-    env_schema = (
-        "video_id string, frame_number long, timestamp string, fps double,"
-        " frame_data string, width int, height int"
-    )
-    parsed = kafka_df.select(
-        F.from_json(F.col("value").cast("string"), env_schema).alias("m")
-    ).select("m.*")
-    return parsed.withColumn(
-        "frame_data", decode_transport(F.col("frame_data"), "base64-json")
-    )
+def decode_frame_stream(kafka_df: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """P1 over a Kafka-shaped frame topic: ``value`` is the JSON
+    envelope with a base64 payload (reference streams/stream.py:58-68,
+    125-137).  Returns ``(good, dead)``.
 
-
-def decode_frame_stream_dead_letter(
-    kafka_df: DataFrame,
-) -> tuple[DataFrame, DataFrame]:
-    """§1.3 schema-system upgrade: malformed frame envelopes are ROUTED
-    to a dead-letter stream instead of swallowed.
-
-    The reference wraps each frame in try/except and drops failures on
-    the floor (reference streams/stream.py:421-423); plain ``from_json``
-    would do the same silently (null struct).  PERMISSIVE parsing with
+    §1.3 schema-system upgrade: malformed envelopes are ROUTED to a
+    dead-letter stream instead of swallowed.  The reference wraps each
+    frame in try/except and drops failures on the floor (reference
+    streams/stream.py:421-423); plain ``from_json`` would do the same
+    silently (null struct).  PERMISSIVE parsing with
     ``columnNameOfCorruptRecord`` keeps the raw payload of every bad
-    record: unparseable JSON and envelopes missing the required
-    ``video_id`` both land in the dead-letter output with a reason —
-    re-playable, countable, alertable.  Returns ``(good, dead)``."""
-    env_schema = (
-        "video_id string, frame_number long, timestamp string, fps double,"
-        " frame_data string, width int, height int, _corrupt_record string"
-    )
+    record: unparseable JSON and envelopes missing ``video_id`` or
+    ``frame_number`` (the stateful operator's key and sequence) land in
+    the dead-letter output with a reason — re-playable, countable,
+    alertable."""
     parsed = kafka_df.select(
         F.col("value").cast("string").alias("_raw"),
         F.from_json(
             F.col("value").cast("string"),
-            env_schema,
+            ENVELOPE_SCHEMA + ", _corrupt_record string",
             {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt_record"},
         ).alias("m"),
     )
     is_corrupt = F.col("m._corrupt_record").isNotNull() | F.col("m").isNull()
     missing_key = F.col("m.video_id").isNull()
+    missing_seq = F.col("m.frame_number").isNull()
+    is_dead = is_corrupt | missing_key | missing_seq
     good = (
-        parsed.filter(~is_corrupt & ~missing_key)
+        parsed.filter(~is_dead)
         .select("m.*")
         .drop("_corrupt_record")
         .withColumn("frame_data", decode_transport(F.col("frame_data"), "base64-json"))
     )
-    dead = parsed.filter(is_corrupt | missing_key).select(
+    dead = parsed.filter(is_dead).select(
         F.col("_raw").alias("raw_value"),
         F.when(is_corrupt, F.lit("malformed_json"))
-        .otherwise(F.lit("missing_video_id"))
+        .when(missing_key, F.lit("missing_video_id"))
+        .otherwise(F.lit("missing_frame_number"))
         .alias("reason"),
     )
     return good, dead
@@ -131,62 +127,87 @@ def with_late_policy(
     return out.dropDuplicates(keys)
 
 
-def with_predictions(
-    frames: DataFrame,
-    backend: str = "surrogate",
-    use_udf: bool = False,
-    threshold: float = surrogate.DEFAULT_THRESHOLD,
-) -> DataFrame:
-    """M1/M2' applied to a frame stream; prediction fields flattened the
-    way the consumer loop sees them (stream.py:380-418)."""
-    out = models.with_prediction(
-        frames, backend, seq="frame_number", width="width", height="height",
-        use_udf=use_udf,
+def detection_events(frames: DataFrame) -> DataFrame:
+    """Output stream 1 (S8 payload): the nested P8 record
+    (stream.py:405-418) of each of `fire_detection_stream`'s frame rows,
+    serialized to JSON and keyed by video_id.  The detections are the
+    P7 full-frame box built from the row's own, possibly carried-forward,
+    prediction; `processing_timestamp` is wall-clock, as in the
+    reference (SURVEY.md §7 excludes it from comparisons)."""
+    event = F.struct(
+        "video_id",
+        "frame_number",
+        "timestamp",
+        F.current_timestamp().alias("processing_timestamp"),
+        "has_fire",
+        "fire_probability",
+        surrogate.synth_detection(
+            F.col("has_fire"), F.col("fire_probability"), F.col("width"), F.col("height")
+        ).alias("detections"),
+        F.struct(
+            "width", "height",
+            F.coalesce(F.col("fps"), F.lit(30.0)).alias("fps"),  # consumer default, stream.py:328
+        ).alias("frame_metadata"),
     )
-    return out.select(
-        "*",
-        F.col("prediction.has_fire").alias("has_fire"),
-        F.col("prediction.fire_probability").alias("fire_probability"),
-        F.col("prediction.detections").alias("detections"),
-    ).drop("prediction")
-
-
-def detection_events(predicted: DataFrame, deterministic_ts=None) -> DataFrame:
-    """Output stream 1 (S8 payload): the nested P8 record serialized to
-    JSON, keyed by video_id.  The heavy frame bytes are pruned HERE —
-    Catalyst never carries them past this projection."""
-    ev = detection_event(
-        F.col("video_id"),
-        F.col("frame_number"),
-        F.col("timestamp"),
-        F.col("has_fire"),
-        F.col("fire_probability"),
-        F.col("detections"),
-        F.col("width"),
-        F.col("height"),
-        F.coalesce(F.col("fps"), F.lit(30.0)),  # consumer default, stream.py:328
-        deterministic_ts=deterministic_ts,
-    )
-    return predicted.select(
-        F.col("video_id").alias("key"), detection_event_json(ev).alias("value")
+    return kafka_key_value(
+        frames.select("video_id", F.to_json(event).alias("value")), "video_id", "value"
     )
 
 
 def completion_events_json(completions: DataFrame) -> DataFrame:
     """S9 wire form (stream.py:305-311) of `fire_detection_stream`'s
     session rows: nested stats payload."""
+    stats = F.struct("total_frames", "fire_count", "max_fire_probability")
     payload = F.struct(
-        F.col("video_id"),
-        F.struct(
-            F.col("total_frames"),
-            F.col("fire_count"),
-            F.col("max_fire_probability"),
-        ).alias("stats"),
-        F.col("session_id"),
-        F.col("first_seq"),
-        F.col("last_seq"),
-        F.col("closed_by"),
+        "video_id", stats.alias("stats"), "session_id", "first_seq", "last_seq", "closed_by"
     )
-    return completions.select(
-        F.col("video_id").alias("key"), F.to_json(payload).alias("value")
+    return kafka_key_value(
+        completions.select("video_id", F.to_json(payload).alias("value")),
+        "video_id", "value",
     )
+
+
+def fire_detection_query(
+    kafka_df: DataFrame,
+    media_dir: str,
+    publish: Callable[[DataFrame, str], None],
+    gap: int = DEFAULT_GAP,
+    inference_every_n: int = 1,
+    timeout_ms: "int | None" = 60_000,
+    predict_fn: Callable = surrogate_predict_fn,
+    key: str = "video_id",
+) -> tuple[DataStreamWriter, DataFrame]:
+    """EP2 as one query over a Kafka-shaped ``(key, value)`` frame
+    stream: decode, drop the frame bytes, run `fire_detection_stream`
+    (its parameters pass through), then one foreachBatch that publishes
+    P8 to the detections topic, runs the two media sinks under
+    ``media_dir`` and publishes S9 to the completions topic.
+
+    ``publish(records, topic)`` writes one batch of key/value records;
+    `sources.kafka.kafka_publisher` is the Kafka one.  Returns the
+    unstarted writer (set its checkpoint location and trigger, then
+    ``start()``) and the dead-letter stream of `decode_frame_stream`."""
+    good, dead = decode_frame_stream(kafka_df)
+    out = fire_detection_stream(
+        good.drop("frame_data"), gap, inference_every_n, timeout_ms, predict_fn, key
+    )
+    manifest = sinks.media_manifest_sink(media_dir)
+    finalize = sinks.media_finalize_sink(media_dir)
+
+    def write(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df.persist()  # four outputs read it; the state op runs once
+        try:
+            frames = batch_df.where(F.col("row_type") == "frame")
+            sessions = batch_df.where(F.col("row_type") == "session")
+            publish(detection_events(frames), DETECTIONS_TOPIC)
+            # a closing session's frames of this batch reach its segment
+            # before it finalizes; the next session's start after that
+            closing = sessions.select("video_id", "session_id")
+            manifest(frames.join(closing, ["video_id", "session_id"], "left_semi"), batch_id)
+            finalize(sessions, batch_id)
+            manifest(frames.join(closing, ["video_id", "session_id"], "left_anti"), batch_id)
+            publish(completion_events_json(sessions), COMPLETIONS_TOPIC)  # S11 uploads after
+        finally:
+            batch_df.unpersist()
+
+    return out.writeStream.foreachBatch(write), dead

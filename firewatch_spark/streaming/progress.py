@@ -6,9 +6,7 @@ updated from inside the consumer loop (reference
 streams/pipeline/progress.py:52-135).  SURVEY.md's S13 row names the
 Spark-native replacement: `StreamingQueryListener` /
 `query.lastProgress` — the engine already counts rows, batches and
-rates per query; no user code runs on the hot path at all.  The
-foreachBatch twin (`sinks.progress_file_sink`) exists for byte-shape
-parity; THIS is what production should use.
+rates per query; no user code runs on the hot path at all.
 
 Driver-side only and O(queries) per micro-batch; writes go through the
 sinks' fsync'd atomic replace, and row counts are monotone by

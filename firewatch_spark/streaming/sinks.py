@@ -1,14 +1,13 @@
-"""Custom sinks — S10 (per-video media sink), S12 (S3 upload), S13
-(progress side-channel) as foreachBatch functions.
+"""Custom sinks — S10 (per-video media sink) and S12 (S3 upload) as
+foreachBatch functions.  (S13, the progress file, is
+`progress.ProgressFileListener`.)
 
 The reference's MP4 writer is executor-local cv2 state with a
 finalize/verify dance (streams/pipeline/video_writer.py:23-167); cv2
 is not in this container, so S10 here writes per-video ordered frame
 *manifests* (same lifecycle: lazy open → ordered append → finalize +
 verify) — the cv2 codec call is the only stubbed line.  S12 wraps
-boto3 behind an import-try.  S13 writes the reference's progress-file
-shape; in Spark the idiomatic channel is StreamingQueryListener /
-query.lastProgress (SURVEY.md S13 row), so this exists for parity.
+boto3 behind an import-try.
 
 Scale note: foreachBatch runs on the driver, and both media sinks
 write from there.  They launch no Python-worker stage: a per-video
@@ -21,12 +20,10 @@ frames on the driver (three narrow columns; see
 from __future__ import annotations
 
 import itertools
-import json
 import os
 from operator import itemgetter
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 try:
     import boto3  # type: ignore
@@ -256,40 +253,3 @@ def s3_upload_sink(bucket: str, delete_local: bool = False, client_factory=None)
 def s3_key(video_id: str) -> str:
     """Key layout contract (consumer/s3_video_consumer.py:72)."""
     return f"videos/{video_id}_with_heatmaps.mp4"
-
-
-def progress_file_sink(progress_path: str, total_frames: dict[str, int]):
-    """S13 — throttle-free batch variant of the fcntl progress file
-    (streams/pipeline/progress.py:52-135): monotone, capped, merged
-    per micro-batch.  Single-writer (the driver), so no lock needed."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        state = {"videos": []}
-        if os.path.exists(progress_path):
-            with open(progress_path) as f:
-                state = json.load(f)
-        # idempotent under micro-batch retry: frames_done would
-        # double-count on a re-delivered batch_id
-        if state.get("last_batch_id", -1) >= batch_id:
-            return
-        counts = {
-            r["video_id"]: r["n"]
-            for r in batch_df.groupBy("video_id").agg(F.count("*").alias("n")).collect()
-        }
-        state["last_batch_id"] = batch_id
-        by_id = {v["video_id"]: v for v in state["videos"]}
-        for vid, n in counts.items():
-            entry = by_id.setdefault(
-                vid,
-                {"video_id": vid, "stream_progress": 0,
-                 "total_frames": total_frames.get(vid, 0)},
-            )
-            entry["frames_done"] = entry.get("frames_done", 0) + n
-            total = entry["total_frames"] or 1
-            pct = min((entry["frames_done"] * 100) // total, 100)
-            # monotone guard (progress.py:125-131)
-            entry["stream_progress"] = max(entry["stream_progress"], pct)
-        state["videos"] = list(by_id.values())
-        _write_atomic(progress_path, [json.dumps(state)])
-
-    return sink

@@ -21,12 +21,16 @@ the last-prediction cache in the same per-video dicts
   frame, LOCF-filled), 'session' rows mirror the completions stream,
   one per CLOSED session (W3), emitted when the gap rule fires (W2) or
   on state timeout (W4, the analog of the reference's shutdown flush,
-  `_cleanup`, stream.py:427-442).
+  `_cleanup`, stream.py:427-442).  Every other input column (the P8
+  frame metadata: timestamp, fps, width, height) rides along on its own
+  frame's row, after the OUTPUT_SCHEMA columns; session rows hold null
+  there.
 
 `fold_sessions` is the session state machine (stream.py:340-349).  The
 gap is in the **sequence-number domain**, not event time, with a strict
 `>` boundary (a jump of exactly `gap` keeps the session).  Rows are
-processed in seq order *within* each micro-batch (sort), and
+processed in seq order *within* each micro-batch (a stable sort, so
+duplicates keep their arrival order), and
 `last_seen` is overwritten per row exactly like the reference's dict
 update (stream.py:349) — late rows inside the gap are absorbed.
 
@@ -153,12 +157,17 @@ def surrogate_predict_fn(seq: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return hf, np.where(hf, raw, 0.0)
 
 
-def _rows(cols: dict) -> pd.DataFrame:
-    """An output frame of ``cols``; the OUTPUT_SCHEMA columns it lacks are null."""
-    return pd.DataFrame({**dict.fromkeys(OUTPUT_SCHEMA.names), **cols})
+def _pipeline_fn(
+    gap: int, every_n: int, timeout_ms: "int | None", predict_fn: Callable,
+    carried: tuple[str, ...] = (),
+):
+    """The per-key function; ``carried`` input columns go onto frame rows."""
+    names = [*OUTPUT_SCHEMA.names, *carried]
 
+    def rows(cols: dict) -> pd.DataFrame:
+        # the output columns ``cols`` lacks are null
+        return pd.DataFrame({**dict.fromkeys(names), **cols})
 
-def _pipeline_fn(gap: int, every_n: int, timeout_ms: "int | None", predict_fn: Callable):
     def fn(
         key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
@@ -166,7 +175,7 @@ def _pipeline_fn(gap: int, every_n: int, timeout_ms: "int | None", predict_fn: C
         if state.hasTimedOut:
             closed = [state.get[:6]]
             state.remove()
-            yield _rows(session_columns(video_id, closed, "timeout"))
+            yield rows(session_columns(video_id, closed, "timeout"))
             return
 
         if state.exists:
@@ -175,7 +184,9 @@ def _pipeline_fn(gap: int, every_n: int, timeout_ms: "int | None", predict_fn: C
             session, ctr, c_hf, c_prob = None, 0, False, 0.0
 
         batch = pd.concat(list(pdfs), ignore_index=True)
-        seqs = np.sort(batch["frame_number"].to_numpy("int64"))
+        seqs = batch["frame_number"].to_numpy("int64")
+        order = np.argsort(seqs, kind="stable")  # carried values follow their frame
+        seqs = seqs[order]
         n = len(seqs)
 
         # M6 cadence: inference iff (per-key running counter) % N == 0;
@@ -204,7 +215,7 @@ def _pipeline_fn(gap: int, every_n: int, timeout_ms: "int | None", predict_fn: C
         frames = {
             "row_type": "frame", "video_id": video_id, "frame_number": seqs,
             "is_inference": is_inf, "has_fire": hf, "fire_probability": prob,
-            "session_id": sids,
+            "session_id": sids, **{c: batch[c].to_numpy()[order] for c in carried},
         }
         if closed:  # concat fills each row type's missing columns with nulls
             yield pd.concat(
@@ -212,7 +223,7 @@ def _pipeline_fn(gap: int, every_n: int, timeout_ms: "int | None", predict_fn: C
                 ignore_index=True,
             )
         else:
-            yield _rows(frames)
+            yield rows(frames)
 
     return fn
 
@@ -225,18 +236,30 @@ def fire_detection_stream(
     predict_fn: Callable = surrogate_predict_fn,
     key: str = "video_id",
 ) -> DataFrame:
-    """EP2 in one stateful stage: frames (video_id, frame_number) →
+    """EP2 in one stateful stage: frames (video_id, frame_number, ...) →
     per-frame detection rows (cadence+LOCF applied) + session
     completion rows, exactly like the reference consumer loop.
+
+    The output schema is OUTPUT_SCHEMA followed by the input's other
+    columns (not the key, ``frame_number`` or an OUTPUT_SCHEMA name),
+    nullable, filled on frame rows only; a ``(video_id, frame_number)``
+    input yields exactly OUTPUT_SCHEMA.
 
     Requires a streaming DataFrame; output mode `append` at the sink.
     ``timeout_ms=None`` → NoTimeout (no W4 idle flush); required for
     ``availableNow`` replays to terminate: Spark keeps a query with a
     pending ProcessingTimeTimeout timer alive for future timers, so a
     timer-armed replay burns its whole awaitTermination budget."""
+    carried = [
+        StructField(f.name, f.dataType)
+        for f in frames.schema.fields
+        if f.name not in (key, "frame_number", *OUTPUT_SCHEMA.names)
+    ]
     return frames.groupBy(key).applyInPandasWithState(
-        _pipeline_fn(gap, inference_every_n, timeout_ms, predict_fn),
-        outputStructType=OUTPUT_SCHEMA,
+        _pipeline_fn(
+            gap, inference_every_n, timeout_ms, predict_fn, tuple(f.name for f in carried)
+        ),
+        outputStructType=StructType(OUTPUT_SCHEMA.fields + carried),
         stateStructType=STATE_SCHEMA,
         outputMode="append",
         timeoutConf=(

@@ -48,21 +48,18 @@ def no_fire_probability(raw: Column) -> Column:
 
 
 def synth_detection(
-    raw: Column,
-    width: Column,
-    height: Column,
-    threshold: float = DEFAULT_THRESHOLD,
+    fire: Column, confidence: Column, width: Column, height: Column
 ) -> Column:
     """Full-frame bbox synthesis (P7, fire_detect_nn.py:155-165): the
     classifier backend has no boxes, so a positive frame gets one
     detection covering the whole frame; negatives get an empty list."""
     det = F.struct(
         F.array(F.lit(0), F.lit(0), width.cast("int"), height.cast("int")).alias("bbox"),
-        raw.alias("confidence"),
+        confidence.alias("confidence"),
         F.lit("fire").alias("class"),
         F.lit(1).alias("class_id"),
     )
-    return F.when(has_fire(raw, threshold), F.array(det)).otherwise(
+    return F.when(fire, F.array(det)).otherwise(
         F.array().cast("array<struct<bbox:array<int>,confidence:double,class:string,class_id:int>>")
     )
 

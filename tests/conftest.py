@@ -50,3 +50,23 @@ def rows(df, *order_cols):
     if order_cols:
         df = df.orderBy(*order_cols)
     return [r.asDict(recursive=True) for r in df.collect()]
+
+
+def exchange_inputs(jplan) -> list:
+    """The output attributes of every Exchange's child in a physical
+    plan tree (``df._jdf.queryExecution().executedPlan()``)."""
+    if "AdaptiveSparkPlan" in jplan.nodeName():
+        jplan = jplan.initialPlan()  # AQE root hides its children
+    carried = []
+
+    def walk(node):
+        ch = node.children()
+        for i in range(ch.size()):
+            c = ch.apply(i)
+            if "Exchange" in node.nodeName():
+                outs = c.output()
+                carried.extend(outs.apply(j) for j in range(outs.size()))
+            walk(c)
+
+    walk(jplan)
+    return carried

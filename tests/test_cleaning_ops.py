@@ -231,20 +231,38 @@ def _lineage_cut_results(spark) -> dict:
     }
 
 
-# A fresh session whose SparkContext starts with spark.checkpoint.dir
-# set (from PYSPARK_SUBMIT_ARGS); any local checkpoint on the path raises.
+# A fresh `get_spark` session whose SparkContext starts with
+# spark.checkpoint.dir set (from PYSPARK_SUBMIT_ARGS); any local
+# checkpoint on the path raises.  Two passes with a Python and JVM GC
+# between them: the cleaner must delete the first pass's checkpoints
+# (it runs asynchronously, so poll up to 10 s).
 _RELIABLE_SESSION = """
-import json
-from pyspark.sql import SparkSession
+import gc, json, time
+from pathlib import Path
 from pyspark.sql.classic.dataframe import DataFrame
+from firewatch_spark.session import get_spark
 from tests.test_cleaning_ops import _lineage_cut_results
 
 def no_local_cut(*_, **__):
     raise AssertionError("localCheckpoint with a checkpoint dir set")
 
+def collect_garbage():
+    gc.collect()
+    spark.sparkContext._jvm.System.gc()
+
 DataFrame.localCheckpoint = no_local_cut
-spark = SparkSession.builder.master("local[2]").getOrCreate()
-print(json.dumps(_lineage_cut_results(spark)))
+spark = get_spark("reliable-checkpoints")
+ck = Path(spark.sparkContext.getCheckpointDir().removeprefix("file:"))
+n_dirs = lambda: len(list(ck.rglob("rdd-*")))
+first = _lineage_cut_results(spark)
+n1, blocks = n_dirs(), any(p.is_file() for p in ck.rglob("rdd-*/*"))
+collect_garbage()
+second = _lineage_cut_results(spark)
+deadline = time.monotonic() + 10
+while n_dirs() > n1 and time.monotonic() < deadline:
+    collect_garbage()
+    time.sleep(0.5)
+print(json.dumps({"results": [first, second], "dirs": [n1, n_dirs()], "blocks": blocks}))
 spark.stop()
 """
 
@@ -253,8 +271,9 @@ def test_reliable_checkpoint_matches_local_for_clusters_and_ivf(spark, tmp_path)
     """With ``spark.checkpoint.dir`` set at launch every lineage cut,
     including those inside the called operators, is a reliable
     checkpoint, and the results equal the shared session's local-
-    checkpoint run.  The blocks land in the dir, and the shared
-    session never acquires a checkpoint dir."""
+    checkpoint run.  The blocks land in the dir, a second pass leaves
+    no more checkpoint dirs than the first (the session cleans them),
+    and the shared session never acquires a checkpoint dir."""
     import json
     import os
     import subprocess
@@ -267,15 +286,19 @@ def test_reliable_checkpoint_matches_local_for_clusters_and_ivf(spark, tmp_path)
         os.environ,
         PYSPARK_SUBMIT_ARGS=f"--conf spark.checkpoint.dir={ck_dir} pyspark-shell",
         PYTHONPATH=root,
+        SPARK_MASTER="local[2]",
     )
     proc = subprocess.run(
         [sys.executable, "-c", _RELIABLE_SESSION],
         cwd=root, env=env, capture_output=True, text=True, timeout=600,
     )
     assert proc.returncode == 0, proc.stderr[-4000:]
-    reliable = json.loads(proc.stdout.strip().splitlines()[-1])
-    assert reliable == json.loads(json.dumps(_lineage_cut_results(spark)))
-    assert any(p.is_file() for p in ck_dir.rglob("rdd-*/*")), "no blocks written"
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    local = json.loads(json.dumps(_lineage_cut_results(spark)))
+    assert out["results"] == [local, local]
+    assert out["blocks"], "no blocks written"
+    n1, n2 = out["dirs"]
+    assert 0 < n1 and n2 <= n1, out["dirs"]
     assert spark.sparkContext.getCheckpointDir() is None
 
 

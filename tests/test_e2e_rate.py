@@ -1,13 +1,12 @@
 """EP2 topology end-to-end from a LIVE unbounded source.
 
-No Kafka broker exists in this sandbox (and no embedded/testcontainer
-broker can be installed), so the transport endpoints are swapped: the
-`rate` source stands in for `frames_source` and a memory sink receives
-the EXACT record projection `keyed_kafka_sink` would send
-(`kafka_key_value`).  Everything between source and sink — the
-one-operator cadence+session state machine and the key/value framing —
-is the production code path; the Kafka builders themselves are
-option-parity- and laziness-tested in test_streaming.py.  Reference
+No Kafka broker is available to the tests, so the transport endpoints
+are swapped: the `rate` source stands in for `frames_source` and a
+memory sink receives the EXACT record projection `kafka_publisher`
+would send (`kafka_key_value`).  Everything between source and sink —
+the one-operator cadence+session state machine and the key/value
+framing — is the production code path; the Kafka builders themselves
+are option-parity- and laziness-tested in test_streaming.py.  Reference
 behavior under test: the stream.py:444-582 run loop wired end-to-end.
 """
 

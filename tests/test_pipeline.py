@@ -5,50 +5,123 @@ import json
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
+from firewatch_spark import surrogate
 from firewatch_spark.sources import frames as frames_src
+from firewatch_spark.sources.kafka import COMPLETIONS_TOPIC, DETECTIONS_TOPIC
 from firewatch_spark.streaming import pipeline, sinks
-from tests.conftest import rows
+from tests.conftest import exchange_inputs, rows
 
 
-def _frame_stream(spark, tmp_path, n_files=2):
-    data_dir = str(tmp_path / "frames_in")
-    frames_src.write_frame_stream_dir(spark, data_dir, n_files=n_files)
-    return (
-        spark.readStream.schema(frames_src.FRAME_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(data_dir)
+def _envelope(vid, fn, fps, width, height):
+    import base64
+
+    return json.dumps(
+        {"video_id": vid, "frame_number": fn, "timestamp": f"{vid}@{fn}",
+         "fps": fps, "frame_data": base64.b64encode(b"JPEG").decode(),
+         "width": width, "height": height}
     )
 
 
 def test_detection_event_stream_end_to_end(spark, tmp_path):
-    stream = _frame_stream(spark, tmp_path)
-    predicted = pipeline.with_predictions(stream)
-    events = pipeline.detection_events(
-        predicted, deterministic_ts=F.lit("2024-01-01T00:00:00")
+    """`fire_detection_query` over a file source of Kafka-shaped JSON
+    envelopes, malformed ones included, with cadence N=3, in two
+    micro-batches (frames out of order within each).  P8 equals an
+    independent cadence + carry-forward model of each frame plus its
+    own metadata; S9 equals the gap-closed session; the closed session
+    promotes its manifest; dead letters carry their reasons; no binary
+    column reaches the state shuffle."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    videos = {"a": (30.0, 640, 480), "b": (None, 320, 240)}  # b: fps omitted
+    # a's frame 400 jumps the 300-frame gap: session 1 (0-9) closes in batch 1
+    batches = [
+        [("a", fn) for fn in (5, 1, 0, 9, 3, 7, 2, 8, 4, 6)] + [("b", fn) for fn in (2, 0, 1)],
+        [("a", fn) for fn in (402, 400, 404, 401, 403)] + [("b", fn) for fn in (5, 3, 4)],
+    ]
+    garbage = "{not json at all"
+    no_key = json.dumps({"frame_number": 7, "frame_data": ""})
+    no_seq = json.dumps({"video_id": "a", "frame_data": ""})
+    in_dir, topics, media = (str(tmp_path / d) for d in ("in", "topics", "media"))
+    os.mkdir(in_dir)
+    for i, bad in enumerate([[garbage], [no_key, no_seq]]):
+        values = [_envelope(v, fn, *videos[v]).encode() for v, fn in batches[i]]
+        values += [v.encode() for v in bad]
+        path = f"{in_dir}/b{i}.parquet"
+        pq.write_table(pa.table({"key": [b"k"] * len(values), "value": values}), path)
+        os.utime(path, (1_700_000_000 + i,) * 2)  # replay order = batch order
+
+    def publish(records, topic):
+        records.write.mode("append").parquet(f"{topics}/{topic}")
+
+    writer, dead = pipeline.fire_detection_query(
+        spark.readStream.schema("key binary, value binary")
+        .option("maxFilesPerTrigger", 1).parquet(in_dir),
+        media, publish, gap=300, inference_every_n=3, timeout_ms=None,
     )
-    q = (
-        events.writeStream.format("memory")
-        .queryName("det_events")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt1"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    out = rows(spark.sql("SELECT * FROM det_events"))
-    n_frames = frames_src.synthetic_frames(spark).count()
-    assert len(out) == n_frames  # one event per frame, skipped or not
-    ev = json.loads(out[0]["value"])
-    assert set(ev) == {
-        "video_id", "frame_number", "timestamp", "processing_timestamp",
-        "has_fire", "fire_probability", "detections", "frame_metadata",
+    q = writer.option("checkpointLocation", str(tmp_path / "ckpt"))
+    dq = dead.writeStream.format("memory").queryName("ep2_dead")
+    dq = dq.option("checkpointLocation", str(tmp_path / "ckpt_dead"))
+    q, dq = (w.trigger(availableNow=True).start() for w in (q, dq))
+    assert q.awaitTermination(120) and dq.awaitTermination(120), "EP2 did not drain"
+
+    # the independent model: per video, every 3rd frame in frame order
+    # is inferred, the others carry the last inference forward
+    want = {}
+    for vid, (fps, w, h) in videos.items():
+        for i, fn in enumerate(sorted(fn for b in batches for v, fn in b if v == vid)):
+            if i % 3 == 0:
+                raw = (fn * surrogate.KNUTH % surrogate.MOD) / surrogate.MOD
+                hf = raw >= surrogate.DEFAULT_THRESHOLD
+                p = raw if hf else 0.0
+            box = {"bbox": [0, 0, w, h], "confidence": p, "class": "fire", "class_id": 1}
+            want[(vid, fn)] = {
+                "video_id": vid, "frame_number": fn, "timestamp": f"{vid}@{fn}",
+                "has_fire": hf, "fire_probability": p, "detections": [box] if hf else [],
+                "frame_metadata": {"width": w, "height": h, "fps": fps or 30.0},
+            }
+    # frame 4 carries frame 3's fire; per-frame inference would differ
+    assert want[("a", 4)]["has_fire"] and want[("a", 5)]["fire_probability"] == 0.7283
+
+    p8 = rows(spark.read.parquet(f"{topics}/{DETECTIONS_TOPIC}"))
+    got = {}
+    for r in p8:
+        ev = json.loads(r["value"])
+        assert r["key"] == ev["video_id"] and ev.pop("processing_timestamp")
+        got[(ev["video_id"], ev["frame_number"])] = ev
+    assert len(p8) == len(want) and got == want
+
+    s1 = [want[("a", fn)] for fn in range(10)]
+    (s9,) = rows(spark.read.parquet(f"{topics}/{COMPLETIONS_TOPIC}"))
+    assert s9["key"] == "a" and json.loads(s9["value"]) == {
+        "video_id": "a", "session_id": 1, "first_seq": 0, "last_seq": 9,
+        "closed_by": "gap",
+        "stats": {"total_frames": 10, "fire_count": sum(e["has_fire"] for e in s1),
+                  "max_fire_probability": max(e["fire_probability"] for e in s1)},
     }
-    assert set(ev["frame_metadata"]) == {"width", "height", "fps"}
-    # fps default backfill for the fps-less video (stream.py:328)
-    short = [json.loads(r["value"]) for r in out if r["key"] == "short"]
-    assert short and all(e["frame_metadata"]["fps"] == 30.0 for e in short)
+
+    # a's closed session is promoted with exactly its own frames (plus
+    # the flush rewrite of its last); the next session's frames, which
+    # arrived in the closing batch, open a fresh segment
+    def lines(fns):
+        return [f"{fn}\t{int(want[('a', fn)]['has_fire'])}\n" for fn in fns]
+
+    assert [f for f in os.listdir(media) if f.endswith(".manifest")] == [
+        "a_with_heatmaps.manifest"
+    ]
+    assert open(f"{media}/a_with_heatmaps.manifest").readlines() == lines([*range(10), 9])
+    (seg,) = sinks._seg_glob(media, "a")
+    assert open(seg).readlines() == lines(range(400, 405))
+
+    assert {r["reason"]: r["raw_value"] for r in rows(spark.sql("SELECT * FROM ep2_dead"))} == {
+        "malformed_json": garbage, "missing_video_id": no_key,
+        "missing_frame_number": no_seq,
+    }
+
+    shuffled = exchange_inputs(q._jsq.streamingQuery().lastExecution().executedPlan())
+    assert {a.name() for a in shuffled} >= {"video_id", "frame_number", "width"}
+    assert not [a.name() for a in shuffled if a.dataType().typeName() == "binary"]
 
 
 def _frame_lines(path) -> int:
@@ -56,26 +129,18 @@ def _frame_lines(path) -> int:
 
 
 def test_completion_stream_and_manifest_sink(spark, tmp_path):
-    stream = _frame_stream(spark, tmp_path)
-    predicted = pipeline.with_predictions(stream)
-
     media_dir = str(tmp_path / "media")
     manifest = sinks.media_manifest_sink(media_dir)
-    q = (
-        predicted.select("video_id", "frame_number", "has_fire")
-        .writeStream.foreachBatch(manifest)
-        .option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    files = sorted(os.listdir(media_dir))
+    for bid, fns in enumerate((range(0, 200, 2), range(1, 200, 2), range(200, 400))):
+        manifest(spark.createDataFrame(
+            [("dense", fn, fn % 3 == 0) for fn in fns],
+            "video_id string, frame_number long, has_fire boolean",
+        ), bid)
     # one SEGMENT per (video, micro-batch) — batch-id name order is the
     # cross-batch frame order; finalize compacts them (round 6: O(batch)
     # write per micro-batch instead of an O(session) manifest rewrite)
-    dense = [f for f in files if f.startswith("dense_with_heatmaps")]
-    assert all(".manifest.seg-" in f for f in dense) and len(dense) >= 2
-    assert sum(_frame_lines(os.path.join(media_dir, f)) for f in dense) == 400
+    dense = sinks._seg_glob(media_dir, "dense")
+    assert len(dense) == 3 and sum(_frame_lines(f) for f in dense) == 400
 
     # W3 finalize on a completion row: compact + last-frame rewrite +
     # promote; segments removed so the next lifecycle starts fresh
@@ -86,82 +151,32 @@ def test_completion_stream_and_manifest_sink(spark, tmp_path):
     assert not [f for f in os.listdir(media_dir) if ".manifest.seg-" in f and f.startswith("dense")]
     lines = open(final).readlines()
     assert len(lines) == 401 and lines[-1] == lines[-2]
-    # frames compacted in order across segments
+    # frames compacted in batch-id order across segments
     frame_nums = [int(ln.split("\t")[0]) for ln in lines[:-1]]
-    assert frame_nums == sorted(frame_nums)
+    assert frame_nums == [*range(0, 200, 2), *range(1, 200, 2), *range(200, 400)]
     # a second session of the same video promotes collision-safe
     open(os.path.join(media_dir, "dense_with_heatmaps.manifest.seg-000000000007"), "w").write("1\t0\n")
     fin(spark.createDataFrame([("dense",)], "video_id string"), 1)
     assert os.path.exists(os.path.join(media_dir, "dense_with_heatmaps_1.manifest"))
 
 
-def test_completion_events_json_shape(spark, tmp_path):
-    from firewatch_spark.streaming.stateful_pipeline import fire_detection_stream
-
-    stream = _frame_stream(spark, tmp_path).select("video_id", "frame_number")
-    # NoTimeout: an armed processing-time timer keeps an availableNow
-    # query alive forever, so the drain would never finish
-    out = fire_detection_stream(stream, gap=300, timeout_ms=None)
-    comp = pipeline.completion_events_json(out.where("row_type = 'session'"))
-    q = (
-        comp.writeStream.format("memory")
-        .queryName("comp_events")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt3"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120), "completion stream did not drain in 120s"
-    out = rows(spark.sql("SELECT * FROM comp_events"))
-    # the gap fixture closes at least one session during the stream
-    assert out
-    payload = json.loads(out[0]["value"])
-    assert set(payload["stats"]) == {"total_frames", "fire_count", "max_fire_probability"}
-
-
-def test_progress_file_sink_monotone(spark, tmp_path):
-    path = str(tmp_path / "progress.json")
-    sink = sinks.progress_file_sink(path, {"v": 10})
-    b1 = spark.createDataFrame([("v", i) for i in range(4)], "video_id string, frame_number long")
-    b2 = spark.createDataFrame([("v", i) for i in range(4, 10)], "video_id string, frame_number long")
-    sink(b1, 0)
-    state1 = json.load(open(path))
-    assert state1["videos"][0]["stream_progress"] == 40
-    sink(b2, 1)
-    state2 = json.load(open(path))
-    assert state2["videos"][0]["stream_progress"] == 100
-
-
-def test_progress_writers_fsync_each_applied_batch(spark, tmp_path, monkeypatch):
-    """Both progress writers commit through the fsync'd atomic replace:
-    one fsync per applied batch, none for a redelivered batch id the
-    sink skips, and no temp file left behind."""
+def test_progress_writers_fsync_each_applied_batch(tmp_path, monkeypatch):
+    """The progress listener commits each flush through the fsync'd
+    atomic replace, leaving no temp file behind."""
     from firewatch_spark.streaming.progress import ProgressFileListener
 
     calls = []
-    real_fsync = os.fsync
-    monkeypatch.setattr(os, "fsync", lambda fd: (calls.append(fd), real_fsync(fd)))
-    path = str(tmp_path / "progress.json")
-    sink = sinks.progress_file_sink(path, {"v": 10})
-    batch = spark.createDataFrame([("v", 1)], "video_id string, frame_number long")
-    sink(batch, 0)
-    assert len(calls) == 1
-    sink(batch, 0)  # redelivered: skipped, nothing written
-    assert len(calls) == 1
-    sink(batch, 1)
-    assert len(calls) == 2
-    assert json.load(open(path))["videos"][0]["frames_done"] == 2
-
+    monkeypatch.setattr(os, "fsync", calls.append)
     listener = ProgressFileListener(str(tmp_path / "listener.json"))
     listener._flush()
-    assert len(calls) == 3
+    listener._flush()
+    assert len(calls) == 2 and os.listdir(tmp_path) == ["listener.json"]
     assert json.load(open(listener.path)) == {"queries": []}
-    assert sorted(os.listdir(tmp_path)) == ["listener.json", "progress.json"]
 
 
 def test_sinks_idempotent_under_batch_retry(spark, tmp_path):
-    """foreachBatch re-delivers the SAME batch_id after a failure;
-    both file sinks must apply each batch exactly once (the documented
+    """foreachBatch re-delivers the SAME batch_id after a failure; the
+    media sinks must apply each batch exactly once (the documented
     idempotency-by-batch-id pattern exactly-once relies on)."""
     media_dir = str(tmp_path / "media_retry")
     msink = sinks.media_manifest_sink(media_dir)
@@ -186,17 +201,6 @@ def test_sinks_idempotent_under_batch_retry(spark, tmp_path):
         spark.createDataFrame([("v",)], "video_id string"), 2
     )
     assert sinks._seg_glob(media_dir, "v") == []
-
-    ppath = str(tmp_path / "progress_retry.json")
-    psink = sinks.progress_file_sink(ppath, {"v": 10})
-    pb = spark.createDataFrame(
-        [("v", i) for i in range(5)], "video_id string, frame_number long"
-    )
-    psink(pb, 0)
-    psink(pb, 0)  # retry
-    state = json.load(open(ppath))
-    assert state["videos"][0]["frames_done"] == 5
-    assert state["videos"][0]["stream_progress"] == 50
 
 
 def test_manifest_segments_from_unsorted_partitions(spark, tmp_path):
@@ -286,7 +290,11 @@ def test_streaming_query_listener_progress(spark, tmp_path):
     listener = ProgressFileListener(path)
     spark.streams.addListener(listener)
     try:
-        stream = _frame_stream(spark, tmp_path)
+        data_dir = str(tmp_path / "frames_in")
+        frames_src.write_frame_stream_dir(spark, data_dir, n_files=2)
+        stream = spark.readStream.schema(frames_src.FRAME_SCHEMA).option(
+            "maxFilesPerTrigger", 1
+        ).parquet(data_dir)
         q = (
             stream.select("video_id", "frame_number")
             .writeStream.format("memory")
@@ -454,35 +462,29 @@ def test_s3_upload_sink_missing_path_without_uploaded_object_fails(
 def test_dead_letter_routing(spark):
     """§1.3 upgrade: malformed envelopes are routed with a reason, not
     swallowed (reference drops them, stream.py:421-423)."""
-    import base64
-
-    good_payload = base64.b64encode(b"JPEG!").decode()
-    good = json.dumps(
-        {"video_id": "v", "frame_number": 1, "timestamp": "t", "fps": 30.0,
-         "frame_data": good_payload, "width": 2, "height": 2}
-    )
-    no_key = json.dumps({"frame_number": 2, "frame_data": good_payload})
+    good = _envelope("v", 1, 30.0, 2, 2)
+    no_key = json.dumps({"frame_number": 2, "frame_data": ""})
+    no_seq = json.dumps({"video_id": "v", "frame_data": ""})
     garbage = "{not json at all"
     kafka_like = spark.createDataFrame(
-        [("v", good), ("v", no_key), ("v", garbage)], "key string, value string"
+        [("v", v) for v in (good, no_key, no_seq, garbage)], "key string, value string"
     )
-    ok, dead = pipeline.decode_frame_stream_dead_letter(kafka_like)
+    ok, dead = pipeline.decode_frame_stream(kafka_like)
     ok_rows = rows(ok)
-    assert len(ok_rows) == 1 and bytes(ok_rows[0]["frame_data"]) == b"JPEG!"
+    assert len(ok_rows) == 1 and bytes(ok_rows[0]["frame_data"]) == b"JPEG"
     dead_rows = {r["reason"]: r["raw_value"] for r in rows(dead)}
-    assert dead_rows == {"malformed_json": garbage, "missing_video_id": no_key}
+    assert dead_rows == {
+        "malformed_json": garbage, "missing_video_id": no_key,
+        "missing_frame_number": no_seq,
+    }
     # nothing is lost: good + dead partitions the input
-    assert len(ok_rows) + len(dead_rows) == 3
+    assert len(ok_rows) + len(dead_rows) == 4
 
 
 def test_base64_transport_roundtrip(spark):
-    import base64
-
-    payload = base64.b64encode(b"JPEG!").decode()
-    msg = json.dumps(
-        {"video_id": "v", "frame_number": 1, "timestamp": "t", "fps": 30.0,
-         "frame_data": payload, "width": 2, "height": 2}
+    kafka_like = spark.createDataFrame(
+        [("v", _envelope("v", 1, 30.0, 2, 2))], "key string, value string"
     )
-    kafka_like = spark.createDataFrame([("v", msg)], "key string, value string")
-    out = rows(pipeline.decode_frame_stream(kafka_like, transport="base64-json"))
-    assert bytes(out[0]["frame_data"]) == b"JPEG!"
+    out = rows(pipeline.decode_frame_stream(kafka_like)[0])
+    assert bytes(out[0]["frame_data"]) == b"JPEG"
+    assert (out[0]["video_id"], out[0]["frame_number"], out[0]["width"]) == ("v", 1, 2)

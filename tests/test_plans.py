@@ -6,9 +6,9 @@ cheap; streaming replays and the temp-file scan are excluded because
 building their DataFrame runs a stream."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from firewatch_spark.queries import registry
+from tests.conftest import exchange_inputs
 
 SF = "/root/testdata/sf0.001"
 SKIP = {
@@ -40,8 +40,13 @@ def _plan(spark, name: str) -> str:
 
 @pytest.fixture(scope="module")
 def plans(spark):
-    """The executed plan string of every non-SKIP query."""
-    return {name: _plan(spark, name) for name in registry() if name not in SKIP}
+    """The executed plan string of every non-SKIP query.  Building them
+    leaks no session conf: the conf after the sweep equals the conf
+    before it."""
+    before = spark.conf.getAll
+    out = {name: _plan(spark, name) for name in registry() if name not in SKIP}
+    assert spark.conf.getAll == before
+    return out
 
 
 def test_forced_broadcasts_have_bounded_build_sides():
@@ -362,25 +367,6 @@ def test_ann_topk_reduces_exchange_with_partial_topk(plans):
         )
 
 
-def test_media_payload_never_enters_exchange(spark):
-    """The EP2 batch topology prunes frame bytes before the session
-    shuffle: no binary column in any Exchange's output."""
-    from firewatch_spark.sources.frames import synthetic_frames
-    from firewatch_spark.streaming.pipeline import with_predictions
-
-    frames = synthetic_frames(spark)
-    predicted = with_predictions(frames)
-    slim = predicted.select("video_id", "frame_number", "has_fire", "fire_probability")
-    agg = slim.groupBy("video_id").agg(F.count(F.lit(1)).alias("n"))
-    plan = agg._jdf.queryExecution().executedPlan().toString()
-    lines = plan.split("\n")
-    (ex_idx,) = [i for i, l in enumerate(lines) if "Exchange hashpartitioning" in l]
-    # everything the exchange receives (the partial-agg feeding it and
-    # the projection under that) must already have dropped the payload
-    assert "frame_data" not in lines[ex_idx + 1]
-    assert "frame_data" not in lines[ex_idx + 2]
-
-
 def test_image_phash_payload_never_enters_exchange(spark):
     """The image dedup discipline at 100 TB: fingerprints are computed
     scan-side and only (id, 64-char phash) rows shuffle — the binary
@@ -394,21 +380,6 @@ def test_image_phash_payload_never_enters_exchange(spark):
         [(i, bytes([i]) * 64) for i in range(8)], "media_id long, payload binary"
     )
     jplan = dedup.image_phash_pairs(media)._jdf.queryExecution().executedPlan()
-    if "AdaptiveSparkPlan" in jplan.nodeName():
-        jplan = jplan.initialPlan()  # AQE root hides its children
-
-    carried: list[list[str]] = []
-
-    def walk(node):
-        ch = node.children()
-        for i in range(ch.size()):
-            c = ch.apply(i)
-            if "Exchange" in node.nodeName():
-                outs = c.output()
-                carried.append([outs.apply(j).name() for j in range(outs.size())])
-            walk(c)
-
-    walk(jplan)
+    carried = [a.name() for a in exchange_inputs(jplan)]
     assert carried, "expected at least one Exchange in the pair plan"
-    for cols in carried:
-        assert "payload" not in cols, cols
+    assert "payload" not in carried, carried

@@ -1,7 +1,8 @@
 """The README Quickstart must actually run: extract the first
 ```python fence from README.md and exec it verbatim, then check the
-sink output it promises."""
+detection events and the promoted manifest it promises."""
 
+import json
 import os
 import re
 
@@ -14,8 +15,15 @@ def test_readme_quickstart_executes(spark):
 
     q = ns["q"]
     assert not q.isActive  # availableNow run completed
+    (p8,) = spark.read.parquet(f"{ns['workdir']}/topics/fire-detections").limit(1).collect()
+    assert set(json.loads(p8["value"])) == {
+        "video_id", "frame_number", "timestamp", "processing_timestamp",
+        "has_fire", "fire_probability", "detections", "frame_metadata",
+    }
+    # the gap video closes a session: its manifest is promoted
     media = f"{ns['workdir']}/media"
-    manifests = [f for f in os.listdir(media) if ".manifest.seg-" in f]
-    assert manifests, "quickstart produced no media manifests"
-    lines = open(os.path.join(media, manifests[0])).readlines()
+    assert [f for f in os.listdir(media) if f.endswith(".manifest")] == [
+        "gapvid_with_heatmaps.manifest"
+    ]
+    lines = open(os.path.join(media, "gapvid_with_heatmaps.manifest")).readlines()
     assert lines and all("\t" in l for l in lines)

@@ -14,8 +14,9 @@ from firewatch_spark.streaming.stateful_pipeline import (
 from tests.conftest import rows
 
 
-def _run(spark, pdf, every_n, n_files):
-    """Replay `pdf` split into `n_files` row chunks, one micro-batch each."""
+def _run(spark, pdf, every_n, n_files, extra=""):
+    """Replay `pdf` split into `n_files` row chunks, one micro-batch
+    each; ``extra`` is the DDL of its columns after the first two."""
     import os
 
     import pyarrow as pa
@@ -38,7 +39,9 @@ def _run(spark, pdf, every_n, n_files):
         base = int(os.path.getmtime(written[0]))
         for i, p in enumerate(written):
             os.utime(p, (base + i, base + i))
-        stream = reader.schema("video_id string, frame_number long").parquet(data_dir)
+        stream = reader.schema("video_id string, frame_number long" + extra).parquet(
+            data_dir
+        )
         # NoTimeout: availableNow never terminates with an armed
         # processing-time timer; these tests only assert gap/frame rows
         out = fire_detection_stream(
@@ -117,6 +120,34 @@ def test_frame_and_session_rows_consistent(spark):
     s1_frames = [r for r in frames if r["session_id"] == 1]
     assert s1["fire_count"] == sum(r["has_fire"] for r in s1_frames)
     assert s1["max_fire_probability"] == max(r["fire_probability"] for r in s1_frames)
+
+
+def test_carried_columns_stay_with_their_frame(spark):
+    """One batch whose frames arrive out of order and whose gap closes
+    a session in that same batch: each frame row keeps its own frame's
+    timestamp and width (null where the frame's was), session rows hold
+    null there, frame rows hold null in the session columns, and the
+    collected schema is the declared one."""
+    import pandas as pd
+    from pyspark.sql.types import StructType
+
+    seqs = [5, 1, 400, 3, 0, 2, 401, 4]  # 400 closes session 0-5
+    width = pd.array([None if fn == 3 else 10 * fn for fn in seqs], "Int32")
+    pdf = pd.DataFrame({"video_id": "v", "frame_number": seqs,
+                        "timestamp": [f"t{fn}" for fn in seqs], "width": width})
+    df = _run(spark, pdf, every_n=2, n_files=1, extra=", timestamp string, width int")
+    assert df.schema == StructType(
+        OUTPUT_SCHEMA.fields + StructType.fromDDL("timestamp string, width int").fields
+    )
+    out = rows(df, "frame_number")
+    (s1,) = [r for r in out if r["row_type"] == "session"]
+    assert (s1["first_seq"], s1["last_seq"], s1["closed_by"]) == (0, 5, "gap")
+    assert (s1["timestamp"], s1["width"], s1["frame_number"]) == (None, None, None)
+    frames = [r for r in out if r["row_type"] == "frame"]
+    assert [(r["frame_number"], r["timestamp"], r["width"]) for r in frames] == [
+        (fn, f"t{fn}", None if fn == 3 else 10 * fn) for fn in sorted(seqs)
+    ]
+    assert {r[c] for r in frames for c in OUTPUT_SCHEMA.names[7:]} == {None}
 
 
 def test_restart_from_checkpoint_matches_uninterrupted_run(spark, tmp_path):

@@ -47,7 +47,9 @@ def test_fullframe_bbox_synthesis(spark):
     out = rows(
         df.select(
             "id",
-            surrogate.synth_detection(F.col("raw"), F.col("w"), F.col("h")).alias("d"),
+            surrogate.synth_detection(
+                surrogate.has_fire(F.col("raw")), F.col("raw"), F.col("w"), F.col("h")
+            ).alias("d"),
         ),
         "id",
     )
@@ -61,7 +63,8 @@ def test_box_filter_is_strict_gt(spark):
     # P5: per-box confidence filter is strict `>` — a box exactly at
     # the threshold is DROPPED (asymmetric with P3's `>=`)
     df = spark.createDataFrame([(1, 0.5, 640, 480)], "id long, raw double, w int, h int")
-    dets = surrogate.synth_detection(F.col("raw"), F.col("w"), F.col("h"))
+    raw = F.col("raw")
+    dets = surrogate.synth_detection(surrogate.has_fire(raw), raw, F.col("w"), F.col("h"))
     out = rows(df.select(filter_detections(dets, 0.5).alias("d")))
     assert out[0]["d"] == []  # conf == 0.5 fails strict >
     out2 = rows(df.select(filter_detections(dets, 0.4999).alias("d")))
