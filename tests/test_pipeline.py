@@ -160,6 +160,37 @@ def test_completion_stream_and_manifest_sink(spark, tmp_path):
     assert os.path.exists(os.path.join(media_dir, "dense_with_heatmaps_1.manifest"))
 
 
+def test_completion_events_json_shape(spark, tmp_path):
+    from firewatch_spark.streaming.stateful_pipeline import fire_detection_stream
+
+    data_dir = str(tmp_path / "frames_in")
+    frames_src.write_frame_stream_dir(spark, data_dir, n_files=2)
+    stream = (
+        spark.readStream.schema(frames_src.FRAME_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(data_dir)
+        .select("video_id", "frame_number")
+    )
+    # NoTimeout: an armed processing-time timer keeps an availableNow
+    # query alive forever, so the drain would never finish
+    out = fire_detection_stream(stream, gap=300, timeout_ms=None)
+    comp = pipeline.completion_events_json(out.where("row_type = 'session'"))
+    q = (
+        comp.writeStream.format("memory")
+        .queryName("comp_events")
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt3"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120), "completion stream did not drain in 120s"
+    out = rows(spark.sql("SELECT * FROM comp_events"))
+    # the gap fixture closes at least one session during the stream
+    assert out
+    payload = json.loads(out[0]["value"])
+    assert set(payload["stats"]) == {"total_frames", "fire_count", "max_fire_probability"}
+
+
 def test_progress_writers_fsync_each_applied_batch(tmp_path, monkeypatch):
     """The progress listener commits each flush through the fsync'd
     atomic replace, leaving no temp file behind."""

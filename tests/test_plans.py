@@ -367,6 +367,26 @@ def test_ann_topk_reduces_exchange_with_partial_topk(plans):
         )
 
 
+def test_media_payload_never_enters_exchange(spark, tmp_path):
+    """EP2 prunes frame bytes before the session shuffle: what the one
+    Exchange of `fire_detection_query` receives is the decoded frame
+    metadata, without the base64 payload or the raw Kafka value.  The
+    query is planned, never started (a streaming plan is only reachable
+    as explain text)."""
+    from firewatch_spark.streaming.pipeline import fire_detection_query
+
+    src = spark.readStream.schema("key binary, value binary").parquet(str(tmp_path))
+    writer, _ = fire_detection_query(
+        src, str(tmp_path / "media"), lambda records, topic: None, timeout_ms=None
+    )
+    plan = spark._jvm.PythonSQLUtils.explainString(writer._df._jdf.queryExecution(), "simple")
+    lines = plan.split("\n")
+    (ex_idx,) = [i for i, l in enumerate(lines) if "Exchange hashpartitioning" in l]
+    fed = lines[ex_idx + 1]
+    assert "Project [" in fed and "video_id" in fed and "frame_number" in fed, fed
+    assert "frame_data" not in fed and "value#" not in fed and "key#" not in fed, fed
+
+
 def test_image_phash_payload_never_enters_exchange(spark):
     """The image dedup discipline at 100 TB: fingerprints are computed
     scan-side and only (id, 64-char phash) rows shuffle — the binary
