@@ -30,7 +30,8 @@ fps, width and height onto that frame's row, and the P7 full-frame box
 is built from the row's own (possibly carried-forward) prediction.
 One foreachBatch writes every output (as in *Structured Streaming*,
 SIGMOD 2018), so the query has one checkpoint and a redelivered batch
-re-runs every sink with the same batch id.
+re-runs every sink with the same batch id: the media sinks key their
+files by batch id and session, so the re-run leaves the same files.
 """
 
 from __future__ import annotations
@@ -175,7 +176,6 @@ def fire_detection_query(
     inference_every_n: int = 1,
     timeout_ms: "int | None" = 60_000,
     predict_fn: Callable = surrogate_predict_fn,
-    key: str = "video_id",
 ) -> tuple[DataStreamWriter, DataFrame]:
     """EP2 as one query over a Kafka-shaped ``(key, value)`` frame
     stream: decode, drop the frame bytes, run `fire_detection_stream`
@@ -188,11 +188,16 @@ def fire_detection_query(
     unstarted writer (set its checkpoint location and trigger, then
     ``start()``) and the dead-letter stream of `decode_frame_stream`."""
     good, dead = decode_frame_stream(kafka_df)
-    out = fire_detection_stream(
-        good.drop("frame_data"), gap, inference_every_n, timeout_ms, predict_fn, key
-    )
-    manifest = sinks.media_manifest_sink(media_dir)
-    finalize = sinks.media_finalize_sink(media_dir)
+    out = fire_detection_stream(good.drop("frame_data"), gap, inference_every_n, timeout_ms, predict_fn)
+    return out.writeStream.foreachBatch(_write_outputs(media_dir, publish)), dead
+
+
+def _write_outputs(media_dir: str, publish: Callable[[DataFrame, str], None]):
+    """The foreachBatch body of `fire_detection_query`.  A re-run batch
+    (same batch id) rewrites its manifest segments and finds its
+    promoted manifests in place; the publishes are at-least-once, like
+    the reference's producer."""
+    manifest, finalize = sinks.media_manifest_sink(media_dir), sinks.media_finalize_sink(media_dir)
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.persist()  # four outputs read it; the state op runs once
@@ -200,14 +205,10 @@ def fire_detection_query(
             frames = batch_df.where(F.col("row_type") == "frame")
             sessions = batch_df.where(F.col("row_type") == "session")
             publish(detection_events(frames), DETECTIONS_TOPIC)
-            # a closing session's frames of this batch reach its segment
-            # before it finalizes; the next session's start after that
-            closing = sessions.select("video_id", "session_id")
-            manifest(frames.join(closing, ["video_id", "session_id"], "left_semi"), batch_id)
+            manifest(frames, batch_id)
             finalize(sessions, batch_id)
-            manifest(frames.join(closing, ["video_id", "session_id"], "left_anti"), batch_id)
             publish(completion_events_json(sessions), COMPLETIONS_TOPIC)  # S11 uploads after
         finally:
             batch_df.unpersist()
 
-    return out.writeStream.foreachBatch(write), dead
+    return write

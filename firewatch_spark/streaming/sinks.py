@@ -13,7 +13,7 @@ Scale note: foreachBatch runs on the driver, and both media sinks
 write from there.  They launch no Python-worker stage: a per-video
 executor stage paid a fixed pyspark task cost per micro-batch that
 outweighed its rows.  The manifest sink pays instead with its batch's
-frames on the driver (three narrow columns; see
+frames on the driver (four narrow columns; see
 `media_manifest_sink`).
 """
 
@@ -38,45 +38,32 @@ def _encode_line(frame_number, has_fire) -> str:
     return f"{frame_number}\t{int(bool(has_fire))}\n"
 
 
-def _seg_path(output_dir: str, video_id: str, batch_id: int) -> str:
+def _seg_path(output_dir: str, video_id: str, session_id: int, batch_id: int) -> str:
     return os.path.join(
-        output_dir, f"{video_id}_with_heatmaps.manifest.seg-{batch_id:012d}"
+        output_dir,
+        f"{video_id}_with_heatmaps.manifest.seg-{session_id:012d}-{batch_id:012d}",
     )
 
 
-def _seg_glob(output_dir: str, video_id: str) -> list[str]:
-    """Committed segment files for a video, in batch-id order.
+def _segments(output_dir: str, video_id: str, session_id: int) -> list[str]:
+    """Committed segment files of one session of a video, in batch-id
+    order.  A prefix match, not a glob, so glob metacharacters in the
+    video id or the directory cannot hide a file; in-flight temps are
+    ``.tmp-``-prefixed (see _write_atomic), so they never match."""
+    prefix = os.path.basename(_seg_path(output_dir, video_id, session_id, 0))[:-12]
+    return sorted(os.path.join(output_dir, f) for f in os.listdir(output_dir) if f.startswith(prefix))
 
-    BOTH path components are glob-ESCAPED: a video_id containing '[',
-    '*' or '?' (round-6 review) — or an output_dir containing them
-    (ADVICE r6) — would otherwise make the pattern miss its own files
-    and finalize would silently never promote the video.  In-flight
-    ``.tmp-``-prefixed temps can never match: they share no suffix
-    with the pattern (see _write_atomic)."""
-    import glob as _glob
 
-    return sorted(
-        _glob.glob(
-            os.path.join(
-                _glob.escape(output_dir),
-                _glob.escape(video_id) + "_with_heatmaps.manifest.seg-",
-            )
-            + "[0-9]*"
-        )
-    )
+def _final_path(output_dir: str, video_id: str, batch_id: int) -> str:
+    return os.path.join(output_dir, f"{video_id}_with_heatmaps-{batch_id:012d}.manifest")
 
 
 def _write_atomic(path: str, lines: list[str]) -> None:
     """fsync'd temp + os.replace — the one commit primitive of the
     streaming file writers (these sinks and `progress.ProgressFileListener`).
     Without the fsync a crash can land the rename before the data and
-    leave an empty or torn file behind.
-
-    The temp lives at ``.tmp-<name>`` (PREFIX, not suffix): a suffixed
-    ``<segment>.tmp`` would match the ``.seg-*`` glob, and a finalize
-    running concurrently with an append (two foreachBatch queries) or
-    after a torn retry would compact the half-written temp into the
-    final manifest (round-6 review)."""
+    leave an empty or torn file behind.  The temp is ``.tmp-<name>``
+    (a prefix), so a half-written temp never looks like a segment."""
     d, name = os.path.split(path)
     tmp = os.path.join(d, f".tmp-{name}")
     with open(tmp, "w") as f:
@@ -87,96 +74,80 @@ def _write_atomic(path: str, lines: list[str]) -> None:
 
 
 def media_manifest_sink(output_dir: str):
-    """S10 analog, append phase: ONE logical writer per video across
-    micro-batches (the reference keeps a single open cv2.VideoWriter
-    for the video's whole lifetime, stream.py:360-396), realized as
-    per-batch SEGMENT files compacted at finalize (VERDICT r5 "What's
-    wrong" #5 — the round-5 design rewrote the whole per-video manifest
-    every micro-batch: O(session frames) write amplification per batch;
-    a segment write is O(batch) however long the session runs).
+    """S10 analog, append phase: ONE logical writer per video session
+    across micro-batches (the reference keeps a single open
+    cv2.VideoWriter for the video's whole lifetime, stream.py:360-396),
+    realized as per-batch SEGMENT files compacted at finalize, so a
+    batch writes O(batch) lines however long the session runs.
 
-    Crash/retry correctness WITHOUT any read-back or batch-id header:
-    each batch owns the segment file named by its batch id and commits
-    it with one fsync'd ``os.replace`` — a micro-batch retry rewrites
-    the SAME segment with the SAME content (rows are sorted on all
-    three columns, so duplicate frames land in the same order too; the
-    batch is a deterministic replay), so redelivery is idempotent by
-    construction, and a crash mid-write leaves only a stale ``.tmp``
-    that the retry's rename supersedes.  Ordering across segments is
-    the batch-id name order; within a segment frames are sorted — the
-    same arrival-order contract the reference's single open writer
-    sees.
+    Segments are named by (video_id, session_id, batch_id), from the
+    ``session_id`` every frame row carries.  A session closed by the gap
+    rule is closed by a frame of the next session, usually in the same
+    batch; keyed by session, that frame lands in the next session's
+    segment, and finalize never compacts it into the closed one.
+
+    Each segment commits with one fsync'd ``os.replace``; a retry of the
+    batch rewrites the SAME segments with the SAME content (rows are
+    sorted on all four columns, so duplicate frames keep their order),
+    so redelivery is idempotent with no read-back, and a crash mid-write
+    leaves only a stale temp that the retry's rename supersedes.
 
     The driver is the single writer: one ``toArrow()`` collect of
-    (video_id, frame_number, has_fire), a sort in pyarrow (a Spark
-    sort would add a sampling job and a shuffle), then one segment per
-    video run of the sorted rows.  That ships O(frames) x 3 narrow
-    columns to the driver per batch, about 0.2 MB at 12k rows and
-    about 30 MB for a 1M-frame batch, in exchange for no Python-worker
-    stage.  Real codec integration replaces `_encode_line`."""
+    (video_id, session_id, frame_number, has_fire), a sort in pyarrow (a
+    Spark sort would add a sampling job and a shuffle), then one segment
+    per (video, session) run of the sorted rows — O(frames) x 4 narrow
+    columns on the driver per batch (~0.3 MB at 12k rows) in exchange
+    for no Python-worker stage.  Real codec integration replaces
+    `_encode_line`."""
 
     os.makedirs(output_dir, exist_ok=True)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        table = (
-            batch_df.select("video_id", "frame_number", "has_fire")
-            .toArrow()
-            .sort_by([("video_id", "ascending"), ("frame_number", "ascending"),
-                      ("has_fire", "ascending")])
-        )
-        rows = zip(*(table.column(c).to_pylist() for c in table.column_names))
-        for video_id, group in itertools.groupby(rows, key=itemgetter(0)):
+        cols = ["video_id", "session_id", "frame_number", "has_fire"]
+        table = batch_df.select(*cols).toArrow().sort_by([(c, "ascending") for c in cols])
+        rows = zip(*(table.column(c).to_pylist() for c in cols))
+        for (video_id, session_id), group in itertools.groupby(rows, key=itemgetter(0, 1)):
             _write_atomic(
-                _seg_path(output_dir, video_id, batch_id),
-                [_encode_line(fn, hf) for _, fn, hf in group],
+                _seg_path(output_dir, video_id, session_id, batch_id),
+                [_encode_line(fn, hf) for _, _, fn, hf in group],
             )
 
     return sink
 
 
 def media_finalize_sink(output_dir: str):
-    """S10 analog, finalize phase (W3): for each completed video —
-    rows on the completion stream carry `video_id` — COMPACT its
-    segment files in batch-id order, re-write the last frame to flush
-    codec buffers (video_writer.py:112-117), fsync, verify (moov-atom
-    probe analog, :119-167), then promote to the final name with
-    collision-safe suffixing per completed session (:52-58).  A later
-    session of the same video starts a fresh segment lifecycle.
+    """S10 analog, finalize phase (W3), on a batch's session rows (each
+    names a closed ``session_id`` of its ``video_id``): per video,
+    COMPACT the closed sessions' segments in session then batch-id
+    order, re-write the last frame to flush codec buffers
+    (video_writer.py:112-117), fsync, verify (moov-atom probe analog,
+    :119-167), promote, and remove those segments.  The video's open
+    session keeps its segments.
 
-    Crash windows: mid-compaction leaves segments intact (clean
-    retry); between promote and segment removal, the retry re-promotes
-    under a collision suffix — a duplicate FILE, never duplicated
-    frames within one (the lossy alternative, removing segments first,
-    could drop the video)."""
-
-    def finalize_one(video_id: str) -> str | None:
-        segs = _seg_glob(output_dir, video_id)
-        lines: list[str] = []
-        for seg in segs:
-            with open(seg) as f:
-                lines.extend(f.readlines())
-        if not lines:  # verify: an empty session never promotes
-            return None
-        lines.append(lines[-1])  # last-frame rewrite (flush analog)
-        tmp = os.path.join(output_dir, f"{video_id}_with_heatmaps.manifest.fin")
-        with open(tmp, "w") as f:
-            f.writelines(lines)
-            f.flush()
-            os.fsync(f.fileno())
-        final = os.path.join(output_dir, f"{video_id}_with_heatmaps.manifest")
-        k = 1
-        while os.path.exists(final):
-            final = os.path.join(output_dir, f"{video_id}_with_heatmaps_{k}.manifest")
-            k += 1
-        os.replace(tmp, final)
-        for seg in segs:  # next session starts a fresh lifecycle
-            os.remove(seg)
-        return final
+    The promoted name is a pure function of (video_id, batch_id), in
+    place of the reference's collision suffixing (:52-58), so a retried
+    batch finds its own manifest: it then only removes the segments its
+    re-run manifest write re-created.  Session ids cannot name it, as
+    they restart at 1 when a timed-out video returns.  Sessions of one
+    video that close in the same batch share its manifest, in session
+    order."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         # O(completion rows) per batch, one Arrow collect, no shuffle
-        for video_id in set(batch_df.select("video_id").toArrow().column(0).to_pylist()):
-            finalize_one(video_id)
+        table = batch_df.select("video_id", "session_id").toArrow()
+        closed = sorted(set(zip(*(c.to_pylist() for c in table.columns))))
+        for video_id, group in itertools.groupby(closed, key=itemgetter(0)):
+            segs = [seg for _, sid in group for seg in _segments(output_dir, video_id, sid)]
+            final = _final_path(output_dir, video_id, batch_id)
+            if not os.path.exists(final):
+                lines: list[str] = []
+                for seg in segs:
+                    with open(seg) as f:
+                        lines.extend(f.readlines())
+                if lines:  # verify: an empty session never promotes
+                    _write_atomic(final, [*lines, lines[-1]])  # last-frame rewrite
+            for seg in segs:
+                os.remove(seg)
 
     return sink
 
@@ -189,8 +160,7 @@ def s3_upload_sink(bucket: str, delete_local: bool = False, client_factory=None)
 
     Uploads happen EXECUTOR-SIDE via ``foreachPartition`` — one client
     per partition task, parallel across the cluster, and no
-    ``collect()`` of file paths to the driver (the round-4 version
-    uploaded serially from the driver; VERDICT r4 "What's wrong" #2).
+    ``collect()`` of file paths to the driver.
     Like the reference's consumer, a retry re-PUTs the same key —
     `s3_key` is a pure function of video_id, so S3's last-writer-wins
     overwrite makes re-delivery idempotent without a batch-id sidecar.
@@ -227,7 +197,7 @@ def s3_upload_sink(bucket: str, delete_local: bool = False, client_factory=None)
                     # and deleted it (idempotent key) — but CONFIRM the
                     # object is really there before skipping: a wrong
                     # path or evicted file would otherwise silently
-                    # drop the video (ADVICE r5).  NB: speculative
+                    # drop the video.  NB: speculative
                     # execution must stay off for this sink — a zombie
                     # attempt's phase-2 delete could race a live
                     # attempt's upload (documented trade; the reference

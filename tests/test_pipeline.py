@@ -107,11 +107,11 @@ def test_detection_event_stream_end_to_end(spark, tmp_path):
     def lines(fns):
         return [f"{fn}\t{int(want[('a', fn)]['has_fire'])}\n" for fn in fns]
 
-    assert [f for f in os.listdir(media) if f.endswith(".manifest")] == [
-        "a_with_heatmaps.manifest"
-    ]
-    assert open(f"{media}/a_with_heatmaps.manifest").readlines() == lines([*range(10), 9])
-    (seg,) = sinks._seg_glob(media, "a")
+    final = sinks._final_path(media, "a", 1)
+    assert [f for f in os.listdir(media) if f.endswith(".manifest")] == [os.path.basename(final)]
+    assert open(final).readlines() == lines([*range(10), 9])
+    assert sinks._segments(media, "a", 1) == []
+    (seg,) = sinks._segments(media, "a", 2)
     assert open(seg).readlines() == lines(range(400, 405))
 
     assert {r["reason"]: r["raw_value"] for r in rows(spark.sql("SELECT * FROM ep2_dead"))} == {
@@ -124,40 +124,33 @@ def test_detection_event_stream_end_to_end(spark, tmp_path):
     assert not [a.name() for a in shuffled if a.dataType().typeName() == "binary"]
 
 
-def _frame_lines(path) -> int:
-    return sum(1 for _ in open(path))
+FRAME_DDL = "video_id string, session_id long, frame_number long, has_fire boolean"
 
 
 def test_completion_stream_and_manifest_sink(spark, tmp_path):
+    """One SEGMENT per (video, session, micro-batch); finalize compacts
+    a closed session's segments in batch-id order and rewrites the last
+    frame, consumes only the closed sessions' segments, and two sessions
+    of one video closing in one batch share its manifest, in session
+    order."""
     media_dir = str(tmp_path / "media")
-    manifest = sinks.media_manifest_sink(media_dir)
-    for bid, fns in enumerate((range(0, 200, 2), range(1, 200, 2), range(200, 400))):
-        manifest(spark.createDataFrame(
-            [("dense", fn, fn % 3 == 0) for fn in fns],
-            "video_id string, frame_number long, has_fire boolean",
-        ), bid)
-    # one SEGMENT per (video, micro-batch) — batch-id name order is the
-    # cross-batch frame order; finalize compacts them (round 6: O(batch)
-    # write per micro-batch instead of an O(session) manifest rewrite)
-    dense = sinks._seg_glob(media_dir, "dense")
-    assert len(dense) == 3 and sum(_frame_lines(f) for f in dense) == 400
-
-    # W3 finalize on a completion row: compact + last-frame rewrite +
-    # promote; segments removed so the next lifecycle starts fresh
-    fin = sinks.media_finalize_sink(media_dir)
-    fin(spark.createDataFrame([("dense",)], "video_id string"), 0)
-    final = os.path.join(media_dir, "dense_with_heatmaps.manifest")
-    assert os.path.exists(final)
-    assert not [f for f in os.listdir(media_dir) if ".manifest.seg-" in f and f.startswith("dense")]
-    lines = open(final).readlines()
-    assert len(lines) == 401 and lines[-1] == lines[-2]
-    # frames compacted in batch-id order across segments
-    frame_nums = [int(ln.split("\t")[0]) for ln in lines[:-1]]
-    assert frame_nums == [*range(0, 200, 2), *range(1, 200, 2), *range(200, 400)]
-    # a second session of the same video promotes collision-safe
-    open(os.path.join(media_dir, "dense_with_heatmaps.manifest.seg-000000000007"), "w").write("1\t0\n")
-    fin(spark.createDataFrame([("dense",)], "video_id string"), 1)
-    assert os.path.exists(os.path.join(media_dir, "dense_with_heatmaps_1.manifest"))
+    manifest, fin = sinks.media_manifest_sink(media_dir), sinks.media_finalize_sink(media_dir)
+    batches = [[(1, fn) for fn in fns] for fns in (range(0, 200, 2), range(1, 200, 2), range(200, 400))]
+    batches.append([(3, 1200), (1, 400), (2, 800)])  # session 1's last frame; sessions 2 and 3
+    for bid, b in enumerate(batches):
+        manifest(spark.createDataFrame([("dense", sid, fn, fn % 3 == 0) for sid, fn in b], FRAME_DDL), bid)
+    assert len(sinks._segments(media_dir, "dense", 1)) == 4
+    closed = "video_id string, session_id long"
+    fin(spark.createDataFrame([("dense", 1)], closed), 3)
+    lines = open(sinks._final_path(media_dir, "dense", 3)).readlines()
+    assert [int(ln.split("\t")[0]) for ln in lines] == [
+        *range(0, 200, 2), *range(1, 200, 2), *range(200, 401), 400
+    ]
+    assert sinks._segments(media_dir, "dense", 1) == []
+    assert len(sinks._segments(media_dir, "dense", 2)) == 1
+    fin(spark.createDataFrame([("dense", 3), ("dense", 2)], closed), 4)
+    assert open(sinks._final_path(media_dir, "dense", 4)).read() == "800\t0\n1200\t1\n1200\t1\n"
+    assert not [f for f in os.listdir(media_dir) if ".manifest.seg-" in f]
 
 
 def test_completion_events_json_shape(spark, tmp_path):
@@ -206,107 +199,95 @@ def test_progress_writers_fsync_each_applied_batch(tmp_path, monkeypatch):
 
 
 def test_sinks_idempotent_under_batch_retry(spark, tmp_path):
-    """foreachBatch re-delivers the SAME batch_id after a failure; the
-    media sinks must apply each batch exactly once (the documented
-    idempotency-by-batch-id pattern exactly-once relies on)."""
-    media_dir = str(tmp_path / "media_retry")
-    msink = sinks.media_manifest_sink(media_dir)
-    b0 = spark.createDataFrame(
-        [("v", i, False) for i in range(5)],
-        "video_id string, frame_number long, has_fire boolean",
-    )
-    msink(b0, 0)
-    msink(b0, 0)  # retry of the same micro-batch
-    b1 = spark.createDataFrame(
-        [("v", i, False) for i in range(5, 8)],
-        "video_id string, frame_number long, has_fire boolean",
-    )
-    msink(b1, 1)
-    segs = sinks._seg_glob(media_dir, "v")
-    # one segment per batch id; the retry OVERWROTE batch 0's segment
-    # with identical content instead of appending a duplicate
-    assert [os.path.basename(s)[-3:] for s in segs] == ["000", "001"]
-    assert sum(_frame_lines(s) for s in segs) == 8  # 5 + 3
-    # finalize removes the segments so the next lifecycle starts fresh
-    sinks.media_finalize_sink(media_dir)(
-        spark.createDataFrame([("v",)], "video_id string"), 2
-    )
-    assert sinks._seg_glob(media_dir, "v") == []
+    """foreachBatch re-delivers the SAME batch_id after a failure (say
+    the S9 publish raised after the media sinks ran).  Re-running
+    `fire_detection_query`'s body on it leaves the files of one run: per
+    video one promoted manifest with exactly its closed session's
+    frames, whether or not some of them arrived in the closing batch,
+    and the next session's frames in an open segment."""
+    from pyspark.sql.types import StructType
+
+    from firewatch_spark.streaming.stateful_pipeline import OUTPUT_SCHEMA
+
+    metadata = StructType.fromDDL("timestamp string, fps double, width int, height int")
+    schema = StructType([*OUTPUT_SCHEMA, *metadata])
+
+    def batch(frames, closed):
+        out = [{"row_type": "frame", "video_id": v, "session_id": sid, "frame_number": fn,
+                "has_fire": fn % 2 == 0, "width": 4, "height": 3} for v, sid, fn in frames]
+        out += [{"row_type": "session", "video_id": v, "session_id": 1} for v in closed]
+        return spark.createDataFrame([[r.get(c) for c in schema.names] for r in out], schema)
+
+    sent, media_dir = [], str(tmp_path / "media_retry")
+    write = pipeline._write_outputs(media_dir, lambda df, topic: sent.append((topic, df.count())))
+    write(batch([("a", 1, fn) for fn in range(5)] + [("b", 1, fn) for fn in range(3)], []), 0)
+    # batch 1 closes session 1 of both videos: a's closing batch still
+    # holds two of its frames, b's none
+    b1 = batch([("a", 1, 6), ("a", 1, 5), ("a", 2, 400), ("a", 2, 401), ("b", 2, 500)], "ab")
+    write(b1, 1)
+    write(b1, 1)  # the retry
+
+    def lines(fns):
+        return "".join(f"{fn}\t{int(fn % 2 == 0)}\n" for fn in [*fns, fns[-1]])
+
+    assert sorted(f for f in os.listdir(media_dir) if f.endswith(".manifest")) == [
+        os.path.basename(sinks._final_path(media_dir, v, 1)) for v in "ab"
+    ]
+    assert open(sinks._final_path(media_dir, "a", 1)).read() == lines(range(7))
+    assert open(sinks._final_path(media_dir, "b", 1)).read() == lines(range(3))
+    assert sinks._segments(media_dir, "a", 1) == sinks._segments(media_dir, "b", 1) == []
+    assert open(sinks._segments(media_dir, "a", 2)[0]).read() == "400\t1\n401\t0\n"
+    assert open(sinks._segments(media_dir, "b", 2)[0]).read() == "500\t1\n"
+    # the publishes are at-least-once: the retry sends its records again
+    det, comp = DETECTIONS_TOPIC, COMPLETIONS_TOPIC
+    assert sent == [(det, 8), (comp, 0), (det, 5), (comp, 2), (det, 5), (comp, 2)]
 
 
 def test_manifest_segments_from_unsorted_partitions(spark, tmp_path):
-    """A segment holds its video's lines in frame order, whatever the
-    partitioning and row order of the batch; a video id with glob
+    """A segment holds one session's lines of its video in frame order,
+    whatever the partitioning and row order of the batch; a video id with glob
     metacharacters and a space gets its own segment; an empty batch
     writes no file."""
     media_dir = str(tmp_path / "media_unsorted")
     msink = sinks.media_manifest_sink(media_dir)
     odd = "cam [*] 2"
-    rows = [("v", fn, fn % 4 == 1) for fn in (17, 3, 11, 0, 8, 5, 14, 2, 9)]
-    rows += [(odd, fn, fn % 2 == 0) for fn in (6, 1, 4)]
-    batch = spark.createDataFrame(
-        rows, "video_id string, frame_number long, has_fire boolean"
-    ).repartition(3)
+    # v's frames from 10 on belong to its second session
+    rows = [("v", 1 + (fn >= 10), fn, fn % 4 == 1) for fn in (17, 3, 11, 0, 8, 5, 14, 2, 9)]
+    rows += [(odd, 1, fn, fn % 2 == 0) for fn in (6, 1, 4)]
+    batch = spark.createDataFrame(rows, FRAME_DDL).repartition(3)
     per_part = batch.rdd.glom().map(lambda p: {r["video_id"] for r in p}).collect()
     assert sum("v" in p for p in per_part) > 1  # one video over several partitions
     msink(batch, 3)
 
+    segs = [("v", 1), ("v", 2), (odd, 1)]
     assert sorted(os.listdir(media_dir)) == sorted(
-        os.path.basename(sinks._seg_path(media_dir, v, 3)) for v in ("v", odd)
+        os.path.basename(sinks._seg_path(media_dir, v, sid, 3)) for v, sid in segs
     )
-    for vid in ("v", odd):
+    for vid, sid in segs:
         want = "".join(
-            f"{fn}\t{int(hf)}\n" for v, fn, hf in sorted(rows) if v == vid
+            f"{fn}\t{int(hf)}\n" for v, s, fn, hf in sorted(rows) if (v, s) == (vid, sid)
         )
-        assert open(sinks._seg_path(media_dir, vid, 3)).read() == want
-    assert sinks._seg_glob(media_dir, odd) == [sinks._seg_path(media_dir, odd, 3)]
+        assert open(sinks._seg_path(media_dir, vid, sid, 3)).read() == want
+    assert sinks._segments(media_dir, odd, 1) == [sinks._seg_path(media_dir, odd, 1, 3)]
 
     msink(batch.limit(0), 4)
-    assert len(os.listdir(media_dir)) == 2
+    assert len(os.listdir(media_dir)) == 3
 
 
 def test_manifest_append_crash_atomic(spark, tmp_path):
-    """Each batch's frames commit in ONE os.replace of that batch's OWN
-    segment file, so a retry after a crash at ANY point re-applies
-    exactly once — with no read-back or batch-id header at all (the
-    retry rewrites the same segment name with the same content).
-
-    Both crash sides are simulated: (a) crash BEFORE the rename (a
-    stale .tmp exists, no segment) → the retry applies the batch;
-    (b) crash AFTER the rename (commit complete, foreachBatch still
-    re-delivers the batch id) → the retry overwrites identically."""
+    """Each segment commits in ONE os.replace of its own file, so a
+    crash BEFORE the rename (a torn temp exists, no segment) is
+    invisible to finalize, and the retry applies the batch exactly once
+    (a crash AFTER the rename is `test_sinks_idempotent_under_batch_retry`)."""
     media_dir = str(tmp_path / "media_crash")
-    os.makedirs(media_dir)
     msink = sinks.media_manifest_sink(media_dir)
-    seg0 = sinks._seg_path(media_dir, "v", 0)
-
-    b0 = spark.createDataFrame(
-        [("v", i, False) for i in range(5)],
-        "video_id string, frame_number long, has_fire boolean",
-    )
-    # (a) crash mid-write: a partial temp file exists, no segment yet.
-    # The temp is PREFIX-named (.tmp-<seg>) so finalize's .seg-* glob
-    # can never compact a torn temp (round-6 review)
-    torn = os.path.join(media_dir, ".tmp-" + os.path.basename(seg0))
-    with open(torn, "w") as f:
+    seg0 = sinks._seg_path(media_dir, "v", 1, 0)
+    # the temp is PREFIX-named (.tmp-<seg>), so it never looks like a segment
+    with open(os.path.join(media_dir, ".tmp-" + os.path.basename(seg0)), "w") as f:
         f.write("0\t0\n")  # torn write, never renamed
-    assert sinks._seg_glob(media_dir, "v") == []  # invisible to finalize
-    msink(b0, 0)  # the retry
-    assert _frame_lines(seg0) == 5
-
-    # (b) crash after the atomic rename: state committed, batch 0
-    # re-delivered once more — the rewrite is byte-identical
-    before = open(seg0).read()
-    msink(b0, 0)
-    assert open(seg0).read() == before
-    assert len(set(open(seg0))) == 5  # no duplicated frames, ever
-
-    # normal progress still works after the simulated crashes
-    b1 = spark.createDataFrame(
-        [("v", 5, True)], "video_id string, frame_number long, has_fire boolean"
-    )
-    msink(b1, 1)
-    assert sum(_frame_lines(s) for s in sinks._seg_glob(media_dir, "v")) == 6
+    assert sinks._segments(media_dir, "v", 1) == []
+    msink(spark.createDataFrame([("v", 1, i, False) for i in range(5)], FRAME_DDL), 0)
+    assert sinks._segments(media_dir, "v", 1) == [seg0] and len(set(open(seg0))) == 5
 
 
 def test_streaming_query_listener_progress(spark, tmp_path):
@@ -360,7 +341,7 @@ def test_s3_key_layout():
 
 
 def test_s3_upload_sink_runs_executor_side(spark, tmp_path):
-    """VERDICT r4 #2 contract: the partition path uploads every row
+    """The partition path uploads every row
     with the documented key layout, from executor tasks (proven by the
     fake client writing through the shared filesystem), honors
     delete_local, and never collects paths to the driver (the sink body
@@ -459,7 +440,7 @@ def test_s3_upload_sink_task_retry_after_partial_delete(spark, tmp_path):
         f"videos__{v}_with_heatmaps.mp4" for v in vids[1:]
     )
     assert os.listdir(locals_dir) == []
-    # the skip was CONFIRMED against S3, not assumed (ADVICE r5)
+    # the skip was CONFIRMED against S3, not assumed
     assert os.path.exists(
         os.path.join(rd, "HEAD__" + sinks.s3_key("w0").replace("/", "__"))
     )
@@ -469,8 +450,7 @@ def test_s3_upload_sink_missing_path_without_uploaded_object_fails(
     spark, tmp_path
 ):
     """A missing local path whose object is NOT in S3 (caller bug, disk
-    eviction) must fail the task loudly, not silently drop the video
-    (ADVICE r5)."""
+    eviction) must fail the task loudly, not silently drop the video."""
     batch = spark.createDataFrame(
         [("x0", str(tmp_path / "nope.mp4"))],
         "video_id string, local_filepath string",
