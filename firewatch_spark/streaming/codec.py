@@ -3,8 +3,9 @@ injectable cv2 seam.
 
 The reference probes codecs in a fixed preference order and takes the
 first writer that actually opens (reference
-streams/pipeline/video_writer.py:23-42); collision-safe filename
-suffixing lives at :52-58 (mirrored by streaming/sinks.py).  cv2 is not
+streams/pipeline/video_writer.py:23-42); its collision-safe filename
+suffixing (:52-58) is replaced in streaming/sinks.py by a name fixed
+by (video, batch id), so a retried batch finds its own file.  cv2 is not
 in this container, so the cv2 surface used here (``VideoWriter_fourcc``
 + ``VideoWriter`` with ``isOpened``/``release``) is a constructor
 argument — seam tests drive it with a fake; production passes the real
