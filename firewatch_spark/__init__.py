@@ -13,7 +13,6 @@ column plumbing.
 
 Layout:
   session.py              SparkSession builder (scale-aware defaults)
-  schemas.py              explicit StructTypes for the wire records
   surrogate.py            deterministic surrogate "model" (oracle-testable)
   models.py               model-backend registry (M1) + pandas-UDF path
   operators/              cadence, sessions, aggregates, dedup, text,

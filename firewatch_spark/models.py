@@ -3,21 +3,19 @@
 The reference's extensibility point is a config-driven dispatcher with a
 uniform ``predict(frame) -> dict`` contract
 (reference streams/models/dispatcher.py:34-87).  Here the same contract is
-a *batch* function ``predict_batch(pd.DataFrame) -> pd.DataFrame`` wrapped
-in a struct-returning scalar pandas UDF: the model loads once per Python
-worker (executor singleton), Arrow ships columnar batches, and batch size is
-governed by ``spark.sql.execution.arrow.maxRecordsPerBatch`` — which is
-exactly the batched-inference win the reference deferred
+a *batch* function ``predict_batch(pd.DataFrame) -> pd.DataFrame``, and
+there is one way to run it on a DataFrame: `with_prediction_iter`, an
+iterator-form pandas UDF.  Only the columns the backend names in its
+``input_cols`` cross the Arrow boundary, per-partition setup runs once
+before the batch loop, and batch size is governed by
+``spark.sql.execution.arrow.maxRecordsPerBatch`` — exactly the
+batched-inference win the reference deferred
 (reference docs/PERFORMANCE.md:148-150).
 
-Two execution paths per backend, both returning the same answer:
-
-* **column path** — pure Column expressions (JVM-side, whole-stage
-  codegen); available for the deterministic surrogate and any backend
-  whose math is expressible in Spark SQL.  This is the 100 TB fast path.
-* **udf path** — Arrow-batched pandas UDF; required for real torch/ONNX
-  backends.  The surrogate implements both so the oracle can prove
-  udf-output == column-output == DuckDB SQL.
+The deterministic surrogate also has a JVM Column form,
+`surrogate_column_expr`.  No applier runs it: it is the reference the
+tests compare the UDF's output against, as the DuckDB oracle is for the
+registry's ``predict_batch`` query.
 
 Real ML backends (DenseNet M2, YOLO M4, GradCAM M3 — reference
 streams/models/fire_detect_nn.py:93-175, yolov8.py:115-162,
@@ -29,8 +27,10 @@ plumbing (schema, batching, registry) is real and tested.
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from typing import Iterator, Tuple
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame
@@ -81,11 +81,8 @@ class ModelBackend:
     # batch predict: input pandas DataFrame with columns the backend
     # declares in `input_cols`; returns PREDICTION_SCHEMA-shaped frame.
     predict_batch: Callable[[pd.DataFrame], pd.DataFrame]
+    # the columns with_prediction_iter ships to predict_batch, in order
     input_cols: tuple[str, ...] = ("seq", "width", "height")
-    # optional JVM-side fast path: (df, col mapping) -> Column of
-    # PREDICTION_SCHEMA struct
-    column_expr: Callable[..., Column] | None = None
-    options: dict = field(default_factory=dict)
 
 
 _REGISTRY: dict[str, ModelBackend] = {}
@@ -111,46 +108,51 @@ def get_backend(name: str) -> ModelBackend:
 # Surrogate backend — deterministic, oracle-replayable (FIXTURES.md §2).
 
 
-def _surrogate_predict_batch(pdf: pd.DataFrame, threshold: float = 0.5) -> pd.DataFrame:
-    """Vectorized numpy implementation of the surrogate model.
-
-    Identical arithmetic to surrogate.raw_probability (Knuth
-    multiplicative hash) so the pandas-UDF path, the Column path, and
-    the DuckDB oracle agree bit-for-bit.
-    """
-    import numpy as np
-
-    seq = pdf["seq"].to_numpy(dtype="int64")
-    raw = ((seq * surrogate.KNUTH) % surrogate.MOD) / float(surrogate.MOD)
+def _thresholded(
+    raw: np.ndarray, pdf: pd.DataFrame, threshold: float, model_type: str
+) -> pd.DataFrame:
+    """PREDICTION_SCHEMA frame of a binary fire classifier from its
+    raw probabilities: ``>=`` threshold (fire_detect_nn.py:132),
+    probability zeroed below it (:169), complement (:173), and the P7
+    full-frame box on fire frames (:155-165), sized by the ``width`` /
+    ``height`` columns of `pdf`."""
     has_fire = raw >= threshold
-    fire_p = np.where(has_fire, raw, 0.0)
     width = pdf["width"].to_numpy(dtype="int64")
     height = pdf["height"].to_numpy(dtype="int64")
     dets = [
-        [
-            {
-                "bbox": [0, 0, int(w), int(h)],
-                "confidence": float(r),
-                "class": "fire",
-                "class_id": 1,
-            }
-        ]
-        if hf
-        else []
+        [{"bbox": [0, 0, int(w), int(h)], "confidence": float(r),
+          "class": "fire", "class_id": 1}]
+        if hf else []
         for r, hf, w, h in zip(raw, has_fire, width, height)
     ]
     return pd.DataFrame(
         {
             "has_fire": has_fire,
-            "fire_probability": fire_p,
+            "fire_probability": np.where(has_fire, raw, 0.0),
             "no_fire_probability": 1.0 - raw,
-            "model_type": "surrogate",
+            "model_type": model_type,
             "detections": dets,
         }
     )
 
 
-def _surrogate_column_expr(seq: Column, width: Column, height: Column) -> Column:
+def _surrogate_predict_batch(
+    pdf: pd.DataFrame, threshold: float = surrogate.DEFAULT_THRESHOLD
+) -> pd.DataFrame:
+    """Vectorized numpy implementation of the surrogate model.
+
+    Identical arithmetic to surrogate.raw_probability (Knuth
+    multiplicative hash) so the pandas-UDF path, the Column reference
+    and the DuckDB oracle agree bit-for-bit.
+    """
+    seq = pdf["seq"].to_numpy(dtype="int64")
+    raw = ((seq * surrogate.KNUTH) % surrogate.MOD) / float(surrogate.MOD)
+    return _thresholded(raw, pdf, threshold, "surrogate")
+
+
+def surrogate_column_expr(seq: Column, width: Column, height: Column) -> Column:
+    """The surrogate's prediction struct as JVM Column expressions —
+    the reference `with_prediction_iter`'s output is tested against."""
     raw = surrogate.raw_probability(seq)
     return F.struct(
         surrogate.has_fire(raw).alias("has_fire"),
@@ -163,13 +165,7 @@ def _surrogate_column_expr(seq: Column, width: Column, height: Column) -> Column
     )
 
 
-register_backend(
-    ModelBackend(
-        name="surrogate",
-        predict_batch=_surrogate_predict_batch,
-        column_expr=_surrogate_column_expr,
-    )
-)
+register_backend(ModelBackend(name="surrogate", predict_batch=_surrogate_predict_batch))
 
 
 def _torch_stub(kind: str) -> Callable[[pd.DataFrame], pd.DataFrame]:
@@ -253,11 +249,9 @@ def make_densenet_backend(
     device pick CUDA→MPS→CPU (fire_detect_nn.py:40-52), 224×224
     transform request (:108-110), fp16 autocast enabled only on CUDA
     at batch ≥ `autocast_min_batch` (:119-128 + PERFORMANCE.md:98-106),
-    `>=` threshold (:132), probability zeroing (:169), complement
-    (:173), full-frame bbox synthesis (:155-165), and the safe no-fire
-    error record (:177-189)."""
-    import numpy as np
-
+    `>=` threshold, probability zeroing, complement and full-frame
+    bbox synthesis (`_thresholded`, shared with the surrogate), and the
+    safe no-fire error record (:177-189)."""
     device = pick_device(set(engine.available_devices()))
 
     def predict_batch(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -275,24 +269,7 @@ def make_densenet_backend(
             )
         except Exception:
             return _safe_no_fire(n, "fire-detect-nn")
-        has_fire = raw >= threshold
-        width = pdf["width"].to_numpy(dtype="int64")
-        height = pdf["height"].to_numpy(dtype="int64")
-        dets = [
-            [{"bbox": [0, 0, int(w), int(h)], "confidence": float(r),
-              "class": "fire", "class_id": 1}]
-            if hf else []
-            for r, hf, w, h in zip(raw, has_fire, width, height)
-        ]
-        return pd.DataFrame(
-            {
-                "has_fire": has_fire,
-                "fire_probability": np.where(has_fire, raw, 0.0),
-                "no_fire_probability": 1.0 - raw,
-                "model_type": "fire-detect-nn",
-                "detections": dets,
-            }
-        )
+        return _thresholded(raw, pdf, threshold, "fire-detect-nn")
 
     return ModelBackend(
         name="fire-detect-nn-real",
@@ -358,92 +335,7 @@ def make_yolo_backend(
 # Applying a backend to a DataFrame.
 
 
-def _with_scalar_prediction(
-    df: DataFrame,
-    predict_batch: Callable[[pd.DataFrame], pd.DataFrame],
-    key: str,
-    key_col: Column,
-    width_col: str,
-    height_col: str,
-    out_col: str,
-) -> DataFrame:
-    """Scalar pandas UDF returning the prediction struct: ONLY the three
-    input columns cross the Arrow boundary (``predict_batch`` sees them
-    as ``key``, ``width``, ``height``); every passthrough column stays
-    JVM-side untouched.  (The previous mapInPandas wrapper round-tripped
-    the whole row through Python — measured ~2× slower at sf0.1.)"""
-
-    def _predict(key_s, width_s, height_s):
-        return predict_batch(
-            pd.DataFrame({key: key_s, "width": width_s, "height": height_s})
-        )
-
-    # manual annotations: `from __future__ import annotations` would
-    # stringify inline hints and break pandas_udf signature inference
-    _predict.__annotations__ = {
-        "key_s": pd.Series,
-        "width_s": pd.Series,
-        "height_s": pd.Series,
-        "return": pd.DataFrame,
-    }
-    udf = F.pandas_udf(_predict, returnType=PREDICTION_SCHEMA)
-    return df.withColumn(
-        out_col,
-        udf(key_col, F.col(width_col).cast("long"), F.col(height_col).cast("long")),
-    )
-
-
-def with_frame_prediction(
-    df: DataFrame,
-    backend: ModelBackend,
-    frame_col: str = "frame_data",
-    width_col: str = "width",
-    height_col: str = "height",
-    out_col: str = "prediction",
-) -> DataFrame:
-    """Arrow-batched UDF path for FRAME-input backends (M2-real / M4):
-    only the payload bytes + dims cross the Arrow boundary; the engine
-    (torch/ultralytics or a seam-test fake) runs once per Arrow batch
-    inside the Python worker.  Batch size follows
-    ``spark.sql.execution.arrow.maxRecordsPerBatch`` — with the default
-    (10k) the autocast-at-batch≥16 gate in make_densenet_backend is ON
-    for every full batch, which IS the reference's deferred batched-
-    inference win (docs/PERFORMANCE.md:148-150)."""
-    return _with_scalar_prediction(
-        df, backend.predict_batch, "frame_data", F.col(frame_col),
-        width_col, height_col, out_col,
-    )
-
-
-def with_prediction(
-    df: DataFrame,
-    backend_name: str,
-    seq: str,
-    width: str,
-    height: str,
-    out_col: str = "prediction",
-    use_udf: bool = False,
-) -> DataFrame:
-    """Attach a PREDICTION_SCHEMA struct column via the chosen backend.
-
-    ``use_udf=False`` (default) takes the JVM Column fast path when the
-    backend has one; ``use_udf=True`` forces the Arrow-batched pandas-UDF
-    path (the only option for real model backends).  Both paths are
-    per-row transforms: no shuffle, fully parallel, and the binary/frame
-    columns never need to leave the executor.
-    """
-    backend = get_backend(backend_name)
-    if not use_udf and backend.column_expr is not None:
-        return df.withColumn(
-            out_col, backend.column_expr(F.col(seq), F.col(width), F.col(height))
-        )
-    return _with_scalar_prediction(
-        df, backend.predict_batch, "seq", F.col(seq).cast("long"),
-        width, height, out_col,
-    )
-
-
-def make_iter_predict_fn(backend_name: str):
+def make_iter_predict_fn(backend: ModelBackend):
     """Build the generator the iterator-form pandas UDF wraps —
     exposed separately so tests can drive it with hand-made batches
     and count the one-time setup.
@@ -451,59 +343,55 @@ def make_iter_predict_fn(backend_name: str):
     The iterator contract is the load-bearing part (the shape real
     model serving uses, reference docs/PERFORMANCE.md:148-150): the
     function receives ALL of a partition's Arrow batches through one
-    iterator, so per-worker setup — backend resolution here; model
-    weights onto the device in a real torch backend — runs ONCE per
-    partition, not once per batch, and the partition round-trips
-    through ONE Python worker invocation."""
+    iterator, so per-worker setup — reading the backend's predict
+    function here; model weights onto the device in a real torch
+    backend — runs ONCE per partition, not once per batch, and the
+    partition round-trips through ONE Python worker invocation.  Each
+    batch is a tuple of Series, one per ``backend.input_cols``."""
+    cols = backend.input_cols
 
     def _predict_iter(it):
-        # one-time per-partition setup: resolve the backend INSIDE the
-        # worker (only the name is serialized), before the batch loop —
-        # a real backend loads its weights exactly here
-        predict_batch = get_backend(backend_name).predict_batch
-        for seq_s, width_s, height_s in it:
-            yield predict_batch(
-                pd.DataFrame(
-                    {"seq": seq_s, "width": width_s, "height": height_s}
-                )
-            )
+        # one-time per-partition setup, before the batch loop — a real
+        # backend loads its weights exactly here
+        predict_batch = backend.predict_batch
+        for batch in it:
+            yield predict_batch(pd.DataFrame(dict(zip(cols, batch))))
 
     return _predict_iter
 
 
 def with_prediction_iter(
     df: DataFrame,
-    backend_name: str,
-    seq: str,
-    width: str,
-    height: str,
+    backend: ModelBackend,
+    *cols: str,
     out_col: str = "prediction",
 ) -> DataFrame:
-    """Iterator-form Arrow-batched inference (M2' — the reference's
+    """Attach `backend`'s PREDICTION_SCHEMA struct as `out_col` through
+    the iterator-form Arrow-batched pandas UDF (M2' — the reference's
     deferred batched-inference win as a REGISTERED path, VERDICT r12
-    #4): same PREDICTION_SCHEMA output as with_prediction's scalar UDF
-    (hash-matched by the predict_batch oracle row), but the pandas UDF
-    is the Iterator[Tuple[Series, ...]] -> Iterator[DataFrame] form,
-    so model setup amortizes over the whole partition and every full
-    Arrow batch (maxRecordsPerBatch, default 10k) clears the
+    #4).
+
+    ``cols`` name the columns of `df` that feed ``backend.input_cols``,
+    in that order; by default the columns of the same names.  Only
+    they cross the Arrow boundary: every other column stays JVM-side,
+    and a per-row transform needs no shuffle.  The UDF is the
+    Iterator[Tuple[Series, ...]] -> Iterator[DataFrame] form, so model
+    setup amortizes over the whole partition and every full Arrow
+    batch (maxRecordsPerBatch, default 10k) clears the
     autocast-at-batch>=16 gate of make_densenet_backend.  Plan-wise
     this is ONE ArrowEvalPython node — one Python worker round-trip
     serves the partition (asserted in tests/test_models.py)."""
-    from typing import Iterator, Tuple
-
-    _predict_iter = make_iter_predict_fn(backend_name)
+    cols = cols or backend.input_cols
+    if len(cols) != len(backend.input_cols):
+        raise ValueError(
+            f"backend {backend.name!r} reads {backend.input_cols}; got {cols}"
+        )
+    _predict_iter = make_iter_predict_fn(backend)
     # manual annotations: `from __future__ import annotations` would
     # stringify inline hints and break pandas_udf eval-type inference
     _predict_iter.__annotations__ = {
-        "it": Iterator[Tuple[pd.Series, pd.Series, pd.Series]],
+        "it": Iterator[Tuple[pd.Series, ...]],
         "return": Iterator[pd.DataFrame],
     }
     udf = F.pandas_udf(_predict_iter, returnType=PREDICTION_SCHEMA)
-    return df.withColumn(
-        out_col,
-        udf(
-            F.col(seq).cast("long"),
-            F.col(width).cast("long"),
-            F.col(height).cast("long"),
-        ),
-    )
+    return df.withColumn(out_col, udf(*cols))

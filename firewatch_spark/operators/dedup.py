@@ -1599,22 +1599,6 @@ def _dup_islands(
             F.md5(F.expr(piece).cast("binary")).alias("_h"),
         )
     )
-    return _mark_and_islands(grams, id_col, end_off, cross_doc_keep_first)
-
-
-def _mark_and_islands(
-    grams: DataFrame,
-    id_col: str,
-    end_off: int,
-    cross_doc_keep_first: bool,
-) -> DataFrame:
-    """Shared mark + island-numbering tail of the sliding-duplicate
-    family, gram-source-agnostic (``grams`` = (id, _start, _h) rows
-    from either the direct string builder in `_dup_islands` or the
-    hash-doubling builder in `_doubling_grams` — the hash only ever
-    feeds groupBy/join keys, so any content-injective construction
-    works).  See `_dup_islands` for the mark-predicate semantics and
-    the plan rationale."""
     if cross_doc_keep_first:
         keepers = (
             grams.groupBy("_h")
@@ -1765,6 +1749,8 @@ def cross_doc_span_dedup(
     own internal repeats of it — and a span repeated only inside one
     document is untouched; this is the variant whose output is still a
     complete training corpus rather than a repeat-free residue.
+    ``gram_n = 50`` is the paper's production length (§4 removes
+    repeats of 50+ BPE tokens; the ``long_span_dedup`` query).
 
     Output per doc (same contract as dup_span_removal): ``n_tokens``,
     ``n_removed_tokens``, ``cleaned_md5``.
@@ -1782,131 +1768,6 @@ def cross_doc_span_dedup(
         docs, gram_n, text_col, id_col, cross_doc_keep_first=True
     )
     return _remove_islands(docs, islands, text_col, id_col)
-
-
-def _doubling_grams(
-    docs: DataFrame,
-    span_len: int,
-    text_col: str,
-    id_col: str,
-) -> DataFrame:
-    """(id, _start, _h) rows for every ``span_len``-token window —
-    the LONG-gram replacement for `_dup_islands`' direct string
-    builder, via per-row HASH DOUBLING (the sparse-table / prefix-
-    doubling idea suffix-array construction uses):
-
-      level 0:   L0[i] = md5(token_i)                 (window 1)
-      level k+1: L(k+1)[i] = md5(L_k[i] ++ L_k[i+2^k]) (window 2^(k+1))
-      span hash: with 2^a <= span_len, the window [i, i+span_len) is
-                 md5(L_a[i] ++ L_a[i + span_len - 2^a]) — two
-                 OVERLAPPING 2^a-windows whose union is exactly the
-                 span, so equal span content <=> equal hash (modulo
-                 md5 collisions, the repo-wide equality convention).
-
-    Cost model (MEASURED, see long_span_dedup's docstring): doubling
-    does O(tokens x log2 span) fixed-width md5s per doc, the direct
-    builder O(windows x span) token copies + one md5 per window where
-    windows = n - span + 1.  On short web docs (n ~ span) the direct
-    builder wins decisively — few windows survive, while doubling
-    still pays every level at every position (measured 10x slower at
-    span 50 on the 54-token-median corpus).  Doubling pays off only
-    for long documents with large spans (windows ~ positions AND
-    md5-of-span-tokens >> log2(span) fixed-width md5s).  Every level
-    is a per-row array transform inside one projection (whole-stage
-    codegen, NO shuffle); the only exchange remains the downstream
-    gram-hash groupBy.  Hash values only ever feed groupBy/join keys,
-    never output, so swapping the construction is output-invariant
-    (parity-tested against the direct builder in
-    tests/test_fuzz_parity.py)."""
-    a = span_len.bit_length() - 1  # floor(log2(span_len))
-    off = span_len - (1 << a)
-    df = (
-        ensure_parallelism(docs)
-        .withColumn("__T__", tokens(F.col(text_col)))
-        .withColumn(
-            "_L0", F.expr("transform(__T__, t -> md5(CAST(t AS binary)))")
-        )
-    )
-    for k in range(a):
-        w = 1 << k
-        # L(k+1) has size(Lk) - w entries; guard keeps sequence() from
-        # descending when the doc is shorter than the window (ANSI)
-        df = df.withColumn(
-            f"_L{k + 1}",
-            F.expr(
-                f"CASE WHEN size(_L{k}) > {w} THEN "
-                f"transform(sequence(1, size(_L{k}) - {w}), i -> "
-                f"md5(CAST(concat(element_at(_L{k}, i), "
-                f"element_at(_L{k}, i + {w})) AS binary))) "
-                "ELSE CAST(array() AS array<string>) END"
-            ),
-        )
-    top = f"_L{a}"
-    gram = (
-        f"CASE WHEN size(__T__) >= {span_len} THEN "
-        f"transform(sequence(1, size(__T__) - {span_len - 1}), i -> "
-        f"struct(i AS _start, "
-        f"md5(CAST(concat(element_at({top}, i), "
-        f"element_at({top}, i + {off})) AS binary)) AS _h)) "
-        "ELSE CAST(array() AS array<struct<_start:int,_h:string>>) END"
-    )
-    return df.select(
-        F.col(id_col), F.explode(F.expr(gram)).alias("_g")
-    ).select(id_col, F.col("_g._start").alias("_start"), F.col("_g._h").alias("_h"))
-
-
-def long_span_dedup(
-    docs: DataFrame,
-    span_len: int = 50,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    builder: str = "direct",
-) -> DataFrame:
-    """Cross-document repeated-substring removal with first-occurrence
-    keep at the Lee-et-al. ExactSubstr PRODUCTION length (>= 50
-    tokens; "Deduplicating Training Data Makes Language Models
-    Better" §4 removes repeats of 50+ BPE tokens) — semantically
-    `cross_doc_span_dedup` with ``gram_n = span_len``.
-
-    ``builder`` selects the gram-hash construction; both are
-    output-identical (parity-fuzzed across span lengths):
-
-    * ``"direct"`` (default): the family's window-string builder.
-      MEASURED WINNER on web-shaped corpora: 6.9 s vs doubling's
-      74.5 s at the x25 probe (warm, span 50).  The intuition that
-      span-50 strings blow up 50x is wrong on short docs — a doc of n
-      tokens has only n-span+1 windows, so the intermediate is
-      (n-span+1) x span tokens/doc (~250 for the 54-token median web
-      doc, i.e. ~5x the doc, shrinking as spans grow), and each
-      window costs one concat + ONE md5.
-
-    * ``"doubling"``: `_doubling_grams`' O(tokens x log2 span) hash
-      doubling.  Pays ~log2(span) md5s PER TOKEN POSITION regardless
-      of how few long windows survive (324 md5s/doc at n=54, span 50
-      — 60x the direct builder's hash work on this corpus) plus the
-      materialized level arrays.  It wins only when BOTH the doc is
-      long (n >> span, so windows ~ positions) and the span is large
-      enough that md5-of-span-tokens dominates log2(span) fixed-width
-      md5s — around span ~hundreds on book-length docs.  Kept as the
-      documented long-doc escape hatch, not the default.
-
-    Output per doc (the family contract): ``n_tokens``,
-    ``n_removed_tokens``, ``cleaned_md5``."""
-    if builder not in ("direct", "doubling"):
-        # ADVICE r12: a typo like builder='doubing' must not silently
-        # run the wrong gram builder — output parity would hide it but
-        # any timing comparison the caller intended is invalidated.
-        raise ValueError(
-            f"long_span_dedup: unknown builder {builder!r} "
-            "(expected 'direct' or 'doubling')"
-        )
-    if builder == "doubling":
-        grams = _doubling_grams(docs, span_len, text_col, id_col)
-        islands = _mark_and_islands(
-            grams, id_col, span_len - 1, cross_doc_keep_first=True
-        )
-        return _remove_islands(docs, islands, text_col, id_col)
-    return cross_doc_span_dedup(docs, gram_n=span_len, text_col=text_col, id_col=id_col)
 
 
 def _remove_islands(

@@ -407,37 +407,6 @@ def gradcam_cadence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @q(
-    "predict_udf",
-    f"""
-    SELECT event_id, user_id,
-           CAST({RAW_SQL} >= 0.5 AS INT) AS has_fire,
-           CASE WHEN {RAW_SQL} >= 0.5 THEN {RAW_SQL} ELSE 0.0 END AS fire_probability,
-           'surrogate' AS model_type,
-           CAST(CASE WHEN {RAW_SQL} >= 0.5 THEN 1 ELSE 0 END AS BIGINT) AS det_count
-    FROM events
-    """,
-)
-def predict_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M1/M2' — the Arrow-batched pandas-UDF inference path (backend
-    registry, dispatcher.py:34-87 contract).  The oracle proves
-    UDF output == column-expression output == SQL."""
-    ev = _tbl(spark, sf_dir, "events").withColumn("w", F.lit(640)).withColumn(
-        "h", F.lit(480)
-    )
-    out = models.with_prediction(
-        ev, "surrogate", seq="event_id", width="w", height="h", use_udf=True
-    )
-    return out.select(
-        "event_id",
-        "user_id",
-        F.col("prediction.has_fire").cast("int").alias("has_fire"),
-        F.col("prediction.fire_probability").alias("fire_probability"),
-        F.col("prediction.model_type").alias("model_type"),
-        F.size("prediction.detections").cast("long").alias("det_count"),
-    )
-
-
-@q(
     "predict_batch",
     f"""
     SELECT event_id, user_id,
@@ -449,20 +418,21 @@ def predict_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def predict_batch_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M2' — batched inference on the REGISTERED path (VERDICT r12
-    #4): the iterator-form pandas UDF (Iterator[Tuple[Series, ...]] ->
-    Iterator[DataFrame]) that real model serving uses — per-worker
-    setup runs once per partition, every full Arrow batch clears the
-    autocast-at-batch>=16 gate (models.py make_densenet_backend), and
-    the partition round-trips through ONE ArrowEvalPython node.  The
-    oracle (identical SQL to predict_udf's) hash-proves iterator-UDF
-    output == scalar-UDF output == column expression == DuckDB —
-    reference docs/PERFORMANCE.md:148-150's deferred win, attested."""
+    """M1/M2' — batched inference on the REGISTERED path (VERDICT r12
+    #4): the backend registry's surrogate (dispatcher.py:34-87
+    contract) run through the iterator-form pandas UDF
+    (Iterator[Tuple[Series, ...]] -> Iterator[DataFrame]) that real
+    model serving uses — per-worker setup runs once per partition,
+    every full Arrow batch clears the autocast-at-batch>=16 gate
+    (models.py make_densenet_backend), and the partition round-trips
+    through ONE ArrowEvalPython node.  The oracle hash-proves UDF
+    output == DuckDB — reference docs/PERFORMANCE.md:148-150's
+    deferred win, attested."""
     ev = _tbl(spark, sf_dir, "events").withColumn("w", F.lit(640)).withColumn(
         "h", F.lit(480)
     )
     out = models.with_prediction_iter(
-        ev, "surrogate", seq="event_id", width="w", height="h"
+        ev, models.get_backend("surrogate"), "event_id", "w", "h"
     )
     return out.select(
         "event_id",
@@ -6401,18 +6371,17 @@ _LONG_SPAN_SQL = f"""
 @q("long_span_dedup", _LONG_SPAN_SQL)
 def long_span_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ExactSubstr removal at the Lee-et-al. PRODUCTION span length
-    (operators/dedup.py long_span_dedup): any 50-token span occurring
-    in >= 2 documents is cut everywhere except its min-doc-id keeper —
-    cross_doc_span_dedup's semantics at the length the paper actually
-    deploys.  Uses the direct window-string gram builder, which the
-    x25 probe measured 10x FASTER than the hash-doubling alternative
-    on web-shaped docs (few span-50 windows survive a 54-token median
-    doc; doubling pays log2(span) md5s at every position regardless —
-    the negative result and the crossover are documented in
-    long_span_dedup's docstring, and the doubling builder stays
-    available + parity-fuzzed for long-doc corpora)."""
+    (operators/dedup.py cross_doc_span_dedup with ``gram_n = 50``): any
+    50-token span occurring in >= 2 documents is cut everywhere except
+    its min-doc-id keeper — cross_doc_span_dedup's semantics at the
+    length the paper actually deploys ("Deduplicating Training Data
+    Makes Language Models Better" §4 removes repeats of 50+ BPE
+    tokens).  The family's direct window-string gram builder serves
+    this length too: a 54-token median web doc has only n-50+1 windows
+    (SCALE.md records the hash-doubling builder measured 10-25x slower
+    here, and why it was deleted)."""
     docs = _tbl(spark, sf_dir, "documents").select("doc_id", "text")
-    return dedup.long_span_dedup(docs, span_len=_LONG_SPAN_N)
+    return dedup.cross_doc_span_dedup(docs, gram_n=_LONG_SPAN_N)
 
 
 _UDAF_SQL = f"""

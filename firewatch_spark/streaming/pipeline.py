@@ -44,9 +44,10 @@ from pyspark.sql.streaming import DataStreamWriter
 
 from .. import surrogate
 from ..functions.projections import decode_transport
+from ..operators.sessions import DEFAULT_GAP
 from ..sources.kafka import COMPLETIONS_TOPIC, DETECTIONS_TOPIC, kafka_key_value
 from . import sinks
-from .stateful_pipeline import DEFAULT_GAP, fire_detection_stream, surrogate_predict_fn
+from .stateful_pipeline import fire_detection_stream, surrogate_predict_fn
 
 # the producer's frame envelope (reference streams/stream.py:125-137)
 ENVELOPE_SCHEMA = (

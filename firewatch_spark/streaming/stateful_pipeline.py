@@ -65,7 +65,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-DEFAULT_GAP = 300  # reference stream.py:343
+from ..operators.sessions import DEFAULT_GAP
 
 OUTPUT_SCHEMA = StructType(
     [
@@ -234,14 +234,15 @@ def fire_detection_stream(
     inference_every_n: int = 1,
     timeout_ms: "int | None" = 60_000,
     predict_fn: Callable = surrogate_predict_fn,
-    key: str = "video_id",
 ) -> DataFrame:
     """EP2 in one stateful stage: frames (video_id, frame_number, ...) →
     per-frame detection rows (cadence+LOCF applied) + session
     completion rows, exactly like the reference consumer loop.
 
-    The output schema is OUTPUT_SCHEMA followed by the input's other
-    columns (not the key, ``frame_number`` or an OUTPUT_SCHEMA name),
+    Frames are grouped by ``video_id``: the operator writes the group
+    key into that output column, on which P8, S9 and the media
+    manifests all key.  The output schema is OUTPUT_SCHEMA followed by
+    the input's other columns (any not named in OUTPUT_SCHEMA),
     nullable, filled on frame rows only; a ``(video_id, frame_number)``
     input yields exactly OUTPUT_SCHEMA.
 
@@ -253,9 +254,9 @@ def fire_detection_stream(
     carried = [
         StructField(f.name, f.dataType)
         for f in frames.schema.fields
-        if f.name not in (key, "frame_number", *OUTPUT_SCHEMA.names)
+        if f.name not in OUTPUT_SCHEMA.names
     ]
-    return frames.groupBy(key).applyInPandasWithState(
+    return frames.groupBy("video_id").applyInPandasWithState(
         _pipeline_fn(
             gap, inference_every_n, timeout_ms, predict_fn, tuple(f.name for f in carried)
         ),

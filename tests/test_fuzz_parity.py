@@ -783,43 +783,11 @@ def test_dup_islands_family_fuzz_multi_seed(spark):
                 assert got_cov[d][1] == 0 and got_first[d][1] == 0
 
 
-def test_long_span_dedup_doubling_parity_fuzz(spark):
-    """The hash-doubling gram builder (dedup._doubling_grams) must be
-    OUTPUT-IDENTICAL to the direct window-string builder at every span
-    length — long_span_dedup(builder="doubling") vs
-    cross_doc_span_dedup(gram_n=n) on the same corpus, across powers
-    of two and non-powers (the overlapping-window combine path), plus
-    the Python mirror as the independent referee."""
-    import hashlib
-
-    from firewatch_spark.operators import dedup
-
-    for seed, n in [(201, 2), (202, 3), (203, 4), (204, 7), (205, 8), (206, 13)]:
-        docs = _gen_island_corpus(seed)
-        df = spark.createDataFrame(
-            list(docs.items()), "doc_id long, text string"
-        )
-        got = {
-            r["doc_id"]: (r["n_tokens"], r["n_removed_tokens"], r["cleaned_md5"])
-            for r in rows(dedup.long_span_dedup(df, span_len=n, builder="doubling"))
-        }
-        direct = {
-            r["doc_id"]: (r["n_tokens"], r["n_removed_tokens"], r["cleaned_md5"])
-            for r in rows(dedup.cross_doc_span_dedup(df, gram_n=n))
-        }
-        assert got == direct, (seed, n)
-        expected = {
-            d: (nt, rm, hashlib.md5(clean.encode()).hexdigest())
-            for d, (nt, rm, clean) in _py_cross_doc_span_dedup(docs, n).items()
-        }
-        assert got == expected, (seed, n)
-
-
 def test_long_span_dedup_at_production_length(spark):
-    """span_len=50 end-to-end on long docs, BOTH builders: a planted
-    60-token shared block is cut from the later doc only; a doc with
-    no 50-token repeat is untouched; a doc shorter than 50 tokens
-    carries no window."""
+    """The `long_span_dedup` query's operator, cross_doc_span_dedup at
+    gram_n=50, end-to-end on long docs: a planted 60-token shared block
+    is cut from the later doc only; a doc with no 50-token repeat is
+    untouched; a doc shorter than 50 tokens carries no window."""
     import hashlib
 
     from firewatch_spark.operators import dedup
@@ -836,26 +804,12 @@ def test_long_span_dedup_at_production_length(spark):
         d: (nt, rm, hashlib.md5(clean.encode()).hexdigest())
         for d, (nt, rm, clean) in _py_cross_doc_span_dedup(docs, 50).items()
     }
-    for builder in ("direct", "doubling"):
-        got = {
-            r["doc_id"]: (r["n_tokens"], r["n_removed_tokens"], r["cleaned_md5"])
-            for r in rows(dedup.long_span_dedup(df, span_len=50, builder=builder))
-        }
-        assert got == expected, builder
-        # keeper doc 0 retains the block; doc 1 loses all 60 tokens
-        assert got[0][1] == 0
-        assert got[1][1] == 60
-        assert got[2][1] == 0 and got[3][1] == 0
-
-
-def test_long_span_dedup_rejects_unknown_builder(spark):
-    # ADVICE r12: a typo like builder='doubing' must raise, not
-    # silently run the direct builder (output parity would hide it
-    # but invalidate any timing comparison the caller intended)
-    import pytest as _pytest
-
-    from firewatch_spark.operators import dedup
-
-    df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-    with _pytest.raises(ValueError, match="unknown builder"):
-        dedup.long_span_dedup(df, span_len=3, builder="doubing")
+    got = {
+        r["doc_id"]: (r["n_tokens"], r["n_removed_tokens"], r["cleaned_md5"])
+        for r in rows(dedup.cross_doc_span_dedup(df, gram_n=50))
+    }
+    assert got == expected
+    # keeper doc 0 retains the block; doc 1 loses all 60 tokens
+    assert got[0][1] == 0
+    assert got[1][1] == 60
+    assert got[2][1] == 0 and got[3][1] == 0

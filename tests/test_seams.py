@@ -179,12 +179,14 @@ def test_frame_prediction_udf_runs_fake_engine(spark):
             return [(len(f) % 10) / 10.0 for f in frames]
 
     backend = models.make_densenet_backend(LocalEngine())
+    # no column names given: the backend's input_cols (frame_data,
+    # width, height) pick what crosses the Arrow boundary
     df = spark.createDataFrame(
         [(i, b"x" * (5 + i), 320, 240) for i in range(4)],
         "frame_number long, frame_data binary, width int, height int",
     )
     out = rows(
-        models.with_frame_prediction(df, backend).select(
+        models.with_prediction_iter(df, backend).select(
             "frame_number", "prediction.*"
         ),
         "frame_number",

@@ -268,6 +268,55 @@ def test_drop_duplicates_within_watermark_removes_redelivered(spark, tmp_path):
     assert frames == [0, 1, 2]  # the redelivered frame 1 appears ONCE
 
 
+def test_late_policy_event_time_branch_bounds_dedup_state(spark):
+    """W5's event-time branch, ``with_late_policy(event_time_col=,
+    max_delay=)``, run through the replay harness: a (video_id,
+    frame_number) redelivered inside max_delay is dropped, and once the
+    watermark passes the key's first event time + max_delay its dedup
+    state is evicted, so a later resend is emitted again.  Plain
+    streaming dropDuplicates keeps every key forever and would drop
+    that resend: the last row is the bounded-state evidence."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from firewatch_spark.streaming.pipeline import with_late_policy
+    from firewatch_spark.streaming.replay import replay
+
+    # (frame_number, event second) of video "v", one micro-batch each;
+    # seconds start past 0, the initial watermark, which drops them
+    chunks = [
+        [(1, 1000)],
+        [(1, 1005), (2, 1100)],  # duplicate 5 s later; watermark -> 1090 s
+        [(3, 1150)],  # runs at watermark 1090 s, then evicts (v, 1)
+        [(1, 1200)],  # resend after the eviction
+    ]
+
+    def feed(reader, tmp):
+        os.makedirs(f"{tmp}/in")
+        paths = [f"{tmp}/in/chunk_{i:03d}.parquet" for i in range(len(chunks))]
+        for path, chunk in zip(paths, chunks):
+            frame, sec = zip(*chunk)
+            pq.write_table(
+                pa.table({"video_id": ["v"] * len(chunk), "frame_number": frame, "sec": sec}),
+                path,
+            )
+        base = int(os.path.getmtime(paths[0]))
+        for i, path in enumerate(paths):  # replay order = chunk order
+            os.utime(path, (base + i, base + i))
+        stream = (
+            reader.schema("video_id string, frame_number long, sec long")
+            .parquet(f"{tmp}/in")
+            .withColumn("event_time", F.timestamp_seconds("sec"))
+        )
+        policy = with_late_policy(stream, event_time_col="event_time", max_delay="10 seconds")
+        return policy, lambda batch: batch
+
+    out = sorted((r["frame_number"], r["sec"]) for r in replay(spark, feed).collect())
+    assert out == [(1, 1000), (1, 1200), (2, 1100), (3, 1150)]
+
+
 def test_watermark_windowed_agg_drops_late_and_finalizes(spark, tmp_path):
     """Streaming tumbling window + watermark (the parity-plus W5/§2.5
     machinery run as a REAL stream, not the batch analog): in append
